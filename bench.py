@@ -127,18 +127,23 @@ _RETRY_THRESHOLD = 1.2
 
 def _flush_all_cache(spark) -> None:
     """Release every cached block the operators register: the dedup FIFO
-    debt registry (`Dataset.persist` handles) and the SQL cache.  Used
-    before a slow-reading retry — so the retry measures RECOMPUTE, not a
-    warm read of blocks the first (timed) run persisted — and, under
+    debt registry (`Dataset.persist` handles), the SQL cache, and the
+    statement cache of every memoized dialect-query Engine (without it a
+    retry replays the first run's analyzed DataFrame).  Used before a
+    slow-reading retry — so the retry measures RECOMPUTE, not a warm read
+    of blocks or plans the first (timed) run left behind — and, under
     BENCH_FLUSH=1, before every query's timed region.  localCheckpoint
     blocks are deliberately NOT touched: they are non-replayable (an
     unpersist there loses data for any still-referenced frame instead of
     forcing a recompute) and are freed by GC + ContextCleaner, which the
     per-query System.gc() already drives."""
     from tidb_spark.data.dedup import release_cached
+    from tidb_spark.queries.dialectq import _engines
 
     release_cached()
     spark.catalog.clearCache()
+    for engine in _engines.values():
+        engine.plan_cache.clear()
 
 
 def _quick_control(spark) -> float:

@@ -243,7 +243,7 @@ def test_binding_applies_to_prepared_statements(engine, spark):
     markers as literals (engine._binding_digest), so a prepared statement
     whose normalized text matches a stored binding is rewritten through
     the binding's USING template — and every cache-hit execution replays
-    @@last_plan_from_binding = 1 (the 4th plan-cache entry field)."""
+    @@last_plan_from_binding = 1 (the cache entry's from_binding field)."""
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         engine.sql(
@@ -346,7 +346,7 @@ def test_provenance_flags_reset_per_statement(engine, spark):
         engine.sql("PREPARE pu FROM 'SELECT COUNT(*) AS n FROM region "
                    "WHERE r_regionkey = ?'")
         engine.sql("EXECUTE pu USING @r")  # lowering pass populates cache
-        engine.sql("EXECUTE pu USING @r")  # cache hit replays ent[3]
+        engine.sql("EXECUTE pu USING @r")  # cache hit replays from_binding
         row = engine.sql(
             "SELECT @@last_plan_from_cache AS fc, "
             "@@last_plan_from_binding AS fb"
@@ -475,3 +475,97 @@ def test_stmt_cache_direct_api_mutation_invalidates(engine, spark):
         key_cols=["x"],
     )
     assert engine.sql(q).collect()[0].n == 5
+
+
+# ---- One statement cache: direct and prepared entries in one LRU, emptied
+# on every catalog-epoch bump ------------------------------------------------
+
+
+def test_write_empties_statement_cache(engine):
+    """Epochs only grow, so a bump empties the cache outright: no dead
+    DataFrame or lowering stays pinned until LRU eviction."""
+    engine.sql("CREATE TABLE sc_write (x BIGINT)")
+    engine.sql("SELECT COUNT(*) AS n FROM nation").collect()
+    engine.sql("PREPARE sw FROM 'SELECT COUNT(*) AS n FROM region "
+               "WHERE r_regionkey < ?'")
+    engine.sql("SET @k = 3")
+    engine.sql("EXECUTE sw USING @k")
+    assert len(engine.plan_cache) == 2
+    epoch = engine._catalog_epoch
+    engine.sql("INSERT INTO sc_write VALUES (1)")
+    assert engine._catalog_epoch > epoch
+    assert len(engine.plan_cache) == 0
+
+
+def test_direct_and_prepared_entries_share_capacity(engine, spark):
+    """spark.tidb_spark.plan_cache.size caps direct and prepared entries
+    together: a prepared entry evicts the least recently used direct one."""
+    q1 = "SELECT COUNT(*) AS n FROM nation"
+    q2 = "SELECT COUNT(*) AS n FROM region"
+    spark.conf.set("spark.tidb_spark.plan_cache.size", "2")
+    try:
+        engine.sql(q1).collect()
+        engine.sql(q2).collect()
+        engine.sql("PREPARE sc FROM 'SELECT COUNT(*) AS n FROM supplier "
+                   "WHERE s_suppkey < ?'")
+        engine.sql("SET @k = 5")
+        engine.sql("EXECUTE sc USING @k")
+        assert len(engine.plan_cache) == 2
+        h0 = engine._stmt_cache_hits
+        engine.sql(q2).collect()
+        assert engine._stmt_cache_hits == h0 + 1
+        engine.sql(q1).collect()  # evicted by the prepared entry
+        assert engine._stmt_cache_hits == h0 + 1
+    finally:
+        spark.conf.unset("spark.tidb_spark.plan_cache.size")
+
+
+def test_bench_flush_clears_dialect_engine_statement_cache(spark):
+    """bench.py's slow-reading retry flushes caches first; that must
+    include the memoized dialect Engine's statement cache, or the retry
+    replays the first run's analyzed DataFrame."""
+    import bench
+    from tests.conftest import TEST_SF_DIR
+    from tidb_spark.queries import all_queries
+    from tidb_spark.queries.dialectq import _engine
+
+    q = all_queries()["mysqlsql_date_funcs"]
+    eng = _engine(spark, TEST_SF_DIR)
+    q.spark(spark, TEST_SF_DIR)
+    h0 = eng._stmt_cache_hits
+    q.spark(spark, TEST_SF_DIR)
+    assert eng._stmt_cache_hits == h0 + 1
+    bench._flush_all_cache(spark)
+    assert len(eng.plan_cache) == 0
+    q.spark(spark, TEST_SF_DIR)
+    assert eng._stmt_cache_hits == h0 + 1
+
+
+def test_show_status_reports_cache_counters(engine):
+    """SHOW STATUS carries the cache's live entry count and the three
+    hit/miss counters, read from the same fields EXPLAIN ANALYZE reports."""
+    q = "SELECT COUNT(*) AS n FROM nation"
+    engine.sql(q).collect()
+    engine.sql(q).collect()
+    engine.sql("PREPARE ss FROM 'SELECT COUNT(*) AS n FROM region "
+               "WHERE r_regionkey < ?'")
+    engine.sql("SET @k = 2")
+    engine.sql("EXECUTE ss USING @k")
+    engine.sql("EXECUTE ss USING @k")
+    status = {
+        r.Variable_name: r.Value
+        for r in engine.sql("SHOW STATUS").collect()
+    }
+    assert status["tidb_spark_plan_cache_entries"] == str(len(engine.plan_cache))
+    assert status["tidb_spark_plan_cache_entries"] == "2"
+    assert status["tidb_spark_stmt_cache_hits"] == str(engine._stmt_cache_hits)
+    assert status["tidb_spark_plan_cache_hits"] == str(engine._plan_cache_hits)
+    assert status["tidb_spark_plan_cache_misses"] == str(
+        engine._plan_cache_misses
+    )
+    assert (engine._stmt_cache_hits, engine._plan_cache_hits,
+            engine._plan_cache_misses) == (1, 1, 1)
+    out = engine.sql(
+        "EXPLAIN ANALYZE SELECT COUNT(*) AS n FROM supplier"
+    ).toPandas()["plan"].str.cat(sep="\n")
+    assert "direct statements: 1 hits" in out

@@ -169,10 +169,6 @@ _STMT_CACHE_SKIP_RE = re.compile(
     r"|\bAS\s+OF\b|\bFLASHBACK\b|\bTABLESAMPLE\b"
 )
 
-#: Direct-statement DataFrame cache capacity (LRU) — same default as the
-#: prepared-statement plan cache.
-_STMT_CACHE_CAP = 100
-
 # Sequence objects (ddl/sequence.go; NEXTVAL/LASTVAL/SETVAL in the builtin
 # registry, expression/builtin.go).  Counter state is engine-side like the
 # AUTO_INCREMENT counter: allocation is a 1-row control-plane action, never
@@ -213,6 +209,47 @@ _DDL_RE = re.compile(
 )
 
 _VALUES_REF_RE = re.compile(r"(?i)\bVALUES\s*\(\s*`?(\w+)`?\s*\)")
+
+# Statement-cache key kinds (Engine.plan_cache).
+_DIRECT, _PREPARED = "direct statement", "prepared statement"
+
+# Patterns Engine.sql and its dispatch tables (_PRE_REWRITE, _AFTER_VARS,
+# _AFTER_TRANSLATE below the class) match on.
+_SET_USER_VAR_RE = re.compile(r"(?is)^\s*SET\s+@[A-Za-z_]")
+# MySQL: EXPLAIN <table> is an alias for DESCRIBE <table> (the parser
+# treats them identically; executor/explain.go).
+_EXPLAIN_TABLE_RE = re.compile(
+    r"(?is)^\s*EXPLAIN\s+`?"
+    r"(?!(?:SELECT|WITH|TABLE|VALUES|ANALYZE|FORMAT)\b)(\w+)`?\s*;?\s*$"
+)
+_SEQ_INSERT_SELECT_RE = re.compile(
+    r"(?is)^\s*(?:INSERT|REPLACE)\b.*?\b(?:SELECT|WITH|TABLE)\b"
+)
+_SHOW_RE = re.compile(r"(?is)^\s*(SHOW|DESC(?:RIBE)?\s+\w+\s*;?\s*$)")
+_CTAS_RE = re.compile(
+    r"(?is)^\s*CREATE\s+TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
+    r"`?(?P<name>\w+)`?\s+AS\s+(?P<sel>(?:SELECT|WITH|TABLE)\b.*)$"
+)
+_CREATE_LIKE_RE = re.compile(
+    r"(?is)^\s*CREATE\s+TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
+    r"`?(?P<name>\w+)`?\s+LIKE\s+`?(?P<src>\w+)`?\s*;?\s*$"
+)
+_CREATE_TABLE_RE = re.compile(r"(?is)^\s*CREATE\s+TABLE\b")
+_ALTER_TABLE_RE = re.compile(r"(?is)^\s*ALTER\s+TABLE\b")
+_ZORDER_RE = re.compile(
+    r"(?is)^\s*OPTIMIZE\s+(?:TABLE\s+)?`?(?P<tab>\w+)`?\s+"
+    r"ZORDER\s+BY\s*\((?P<cols>[^)]*)\)\s*;?\s*$"
+)
+_RENAME_TABLE_RE = re.compile(r"(?is)^\s*RENAME\s+TABLE\s+(?P<body>.+?)\s*;?\s*$")
+_RENAME_PAIR_RE = re.compile(r"(?is)^\s*`?(\w+)`?\s+TO\s+`?(\w+)`?\s*$")
+_QUERY_EXPANSION_RE = re.compile(r"(?is)\bWITH\s+QUERY\s+EXPANSION\b")
+_MULTI_DELETE_RE = re.compile(
+    r"(?is)^\s*DELETE\s+`?(?P<tgt>\w+)`?\s+FROM\s+(?P<src>.+?)\s*;?\s*$"
+)
+_UPDATE_RE = re.compile(r"(?is)^\s*UPDATE\s+(?P<rest>.+)$")
+_JOIN_RE = re.compile(r"(?is)\bJOIN\b")
+_WITH_RECURSIVE_RE = re.compile(r"(?is)^\s*WITH\s+RECURSIVE\b")
+_QUANTIFIED_RE = re.compile(r"(?i)\b(ALL|ANY|SOME)\s*\(\s*SELECT\b")
 
 
 def _sql_literal(val) -> str:
@@ -318,18 +355,23 @@ class Engine:
         self._view_cols: dict[str, list[str] | None] = {}
         # PREPARE handler -> statement text (executor/prepared.go).
         self.prepared: dict[str, str] = {}
-        # Plan cache (planner/core/plan_cache.go, re-expressed as a
-        # lowered-text cache — see the _PREPARE_RE note): statement text ->
-        # (lowered Spark SQL with :pN markers | None for known-uncacheable,
-        # n_params, catalog epoch).  LRU, default capacity 100 like the
-        # reference's tidb_session_plan_cache_size.
-        self.plan_cache: "OrderedDict[str, tuple[str | None, int, int]]" = (
-            OrderedDict()
-        )
-        # Bumped by every statement that can change what lowering depends
-        # on (DDL, DML, LOAD, SET, ANALYZE…); cache entries from an older
-        # epoch are dead.  The reference's analogue is the schema version
-        # check in plan_cache.go.
+        # The statement cache — one design for prepared and direct
+        # statements, as in the reference (planner/core/plan_cache.go,
+        # plan_cache_non_prepared.go).  Key (kind, statement text), LRU,
+        # capacity spark.tidb_spark.plan_cache.size (default 100, the
+        # reference's tidb_session_plan_cache_size).  Entries:
+        #   (_PREPARED, PREPARE text) -> (lowered Spark SQL with :pN
+        #     markers | None for known-uncacheable, from_binding) — a
+        #     lowered-text cache, see the _PREPARE_RE note;
+        #   (_DIRECT, raw statement text) -> analyzed DataFrame.  A hit
+        #     skips the whole dialect-lowering pipeline AND Catalyst
+        #     analysis; DataFrames are immutable analyzed plans, so a
+        #     replay is execution-only — results recompute from storage.
+        self.plan_cache: "OrderedDict[tuple[str, str], object]" = OrderedDict()
+        # Bumped (only by _bump_epoch, which also empties the cache) by
+        # every statement that can change what lowering depends on (DDL,
+        # DML, LOAD, SET, ANALYZE…).  The reference's analogue is the
+        # schema version check in plan_cache.go.
         self._catalog_epoch = 0
         # @@last_plan_from_cache (sessionctx/variable/session.go — the
         # reference exposes exactly this observability var).  Reads
@@ -342,17 +384,6 @@ class Engine:
         # Non-None only during a _lower_for_cache pass: the final
         # spark.sql site appends the lowered text here instead of running.
         self._lower_capture: list[str] | None = None
-        # Direct-statement DataFrame cache (r13; the reference's
-        # NON-prepared plan cache, plan_cache_non_prepared.go): raw
-        # statement text -> (analyzed DataFrame, catalog epoch).  A hit
-        # skips the whole dialect-lowering pipeline AND Catalyst
-        # analysis; epoch gating gives the same invalidation as the
-        # prepared cache (every catalog/data/sysvar mutation bumps it).
-        # DataFrames are immutable analyzed plans, so replaying one is
-        # execution-only — results recompute from storage every time.
-        self._stmt_df_cache: "OrderedDict[str, tuple[DataFrame, int]]" = (
-            OrderedDict()
-        )
         self._stmt_cache_hits = 0
         # SQL plan bindings (bindinfo/): digest -> (original display text,
         # USING template with literals as :bN markers, n_literals).
@@ -372,6 +403,9 @@ class Engine:
         # The opt-in comparison shim dispatches the key function on the
         # kind (reference newCollatorMap, util/collate/collate.go:355).
         self._ci_cols_by_table: dict[str, dict[str, str]] = {}
+        # Declared column DEFAULT expressions per table (executor/insert.go
+        # fillRow reads them for every unnamed INSERT column).
+        self._defaults_by_table: dict[str, dict[str, str]] = {}
         # Storage incarnation per table name: CREATE after DROP must get a
         # fresh directory — ManagedTable resumes from the latest on-disk
         # version, so reusing the dropped table's root would silently
@@ -387,6 +421,35 @@ class Engine:
         register_general_ci(spark)
         register_unicode_ci(spark)
 
+    # -- statement cache ----------------------------------------------------
+
+    def _bump_epoch(self) -> None:
+        """Advance the catalog epoch and empty the statement cache: epochs
+        only grow, so every entry made before a bump is dead."""
+        self._catalog_epoch += 1
+        self.plan_cache.clear()
+
+    def _cache_put(self, key: tuple[str, str], entry) -> None:
+        self.plan_cache[key] = entry
+        self.plan_cache.move_to_end(key)
+        cap = int(self.spark.conf.get("spark.tidb_spark.plan_cache.size", "100"))
+        while len(self.plan_cache) > cap:
+            self.plan_cache.popitem(last=False)
+
+    def _cache_stats(self) -> dict[str, int]:
+        """What SHOW STATUS and EXPLAIN ANALYZE report about the cache."""
+        return {
+            "plan_cache_entries": len(self.plan_cache),
+            "stmt_cache_hits": self._stmt_cache_hits,
+            "plan_cache_hits": self._plan_cache_hits,
+            "plan_cache_misses": self._plan_cache_misses,
+        }
+
+    def _ok(self) -> DataFrame:
+        """The zero-row ``status = 'OK'`` frame of a statement that has no
+        result set."""
+        return self.spark.range(0).select(F.lit("OK").alias("status"))
+
     # -- DDL surface (graph): SOURCE KEY / DESTINATION KEY registration ----
 
     def create_vertex_table(self, name: str, df: DataFrame, id_col: str) -> None:
@@ -394,7 +457,7 @@ class Engine:
         SURVEY §1.4) and expose it to SQL."""
         self.graph.add_vertex_table(name, df, id_col)
         df.createOrReplaceTempView(name)
-        self._catalog_epoch += 1  # direct-API catalog mutation
+        self._bump_epoch()  # direct-API catalog mutation
 
     def create_edge_table(
         self,
@@ -410,7 +473,7 @@ class Engine:
         REFERENCES t`` (ddl/ddl_api.go:1946-2025)."""
         self.graph.add_edge_table(name, df, src_col, dst_col, src_table, dst_table)
         df.createOrReplaceTempView(name)
-        self._catalog_epoch += 1  # direct-API catalog mutation
+        self._bump_epoch()  # direct-API catalog mutation
 
     def create_table(
         self,
@@ -487,7 +550,7 @@ class Engine:
                 auto_col=smt.auto_col,
                 df_known_empty=True,
             )
-            defaults = getattr(self, "_defaults_by_table", {}).get(src)
+            defaults = self._defaults_by_table.get(src)
             if defaults:
                 self._defaults_by_table[name] = dict(defaults)
             if src in self._ci_cols_by_table:
@@ -527,7 +590,7 @@ class Engine:
                 f"Unknown column {unknown[0]!r} in table {name!r}"
             )
         full = rows.toDF(*cols)
-        defaults = getattr(self, "_defaults_by_table", {}).get(name, {})
+        defaults = self._defaults_by_table.get(name, {})
         for f in fields:
             if f.name not in cols:
                 dexpr = defaults.get(f.name)
@@ -542,8 +605,8 @@ class Engine:
         df.createOrReplaceTempView(name)
         # SQL-path mutations already bumped the epoch at statement entry;
         # this covers DIRECT Python-API mutations (create_table & friends)
-        # so plan/DataFrame caches never replay a stale view binding.
-        self._catalog_epoch += 1
+        # so the statement cache never replays a stale view binding.
+        self._bump_epoch()
         self.tables[name] = df
         # Keep graph-schema registrations live: a MATCH over an edge table
         # created (then INSERTed into) via SQL must see the current version.
@@ -579,16 +642,17 @@ class Engine:
                 # its old plan; MySQL likewise only errors at use time.
                 pass
 
-    def _run_create(self, stmt) -> None:
+    def _run_create(self, m: re.Match) -> None:
         """CREATE TABLE → managed copy-on-write table, plus graph-schema
         registration: an edge table (SOURCE KEY/DESTINATION KEY columns,
         ddl/ddl_api.go:1946-2025) gets the synthesized (src, dst) key and
         must reference registered vertex tables; a table with a single
         integral-column PRIMARY KEY registers as a vertex table (the
         reference's implicit vertex criterion, SURVEY §1.4)."""
-        if stmt.name in self.managed or (
-            stmt.name in self.tables and stmt.name not in self.managed
-        ):
+        from tidb_spark.sqlshim import create_table as _ct
+
+        stmt = _ct.parse(m.string)
+        if stmt.name in self.managed or stmt.name in self.tables:
             if stmt.if_not_exists:
                 return
             raise ValueError(f"table {stmt.name!r} already exists")
@@ -606,7 +670,6 @@ class Engine:
         auto_col = next(
             (c.name for c in stmt.columns if c.auto_increment), None
         )
-        self._defaults_by_table = getattr(self, "_defaults_by_table", {})
         self._defaults_by_table[stmt.name] = {
             c.name: c.default_expr for c in stmt.columns if c.default_expr
         }
@@ -626,20 +689,13 @@ class Engine:
                 stmt.name, empty, src.name, dst.name, src.source_ref,
                 dst.dest_ref,
             )
-            self.create_table(
-                stmt.name, empty, key_cols=stmt.pk_cols,
-                partition_spec=stmt.partition_spec, domains=domains,
-                generated=generated, auto_col=auto_col,
-                df_known_empty=True,
-            )
-            return
         self.create_table(
             stmt.name, empty, key_cols=stmt.pk_cols,
             partition_spec=stmt.partition_spec, domains=domains,
             generated=generated, auto_col=auto_col,
             df_known_empty=True,
         )
-        if len(stmt.pk_cols) == 1:
+        if not stmt.is_edge and len(stmt.pk_cols) == 1:
             pk = next(c for c in stmt.columns if c.name == stmt.pk_cols[0])
             if pk.spark_type in ("TINYINT", "SMALLINT", "INT", "BIGINT"):
                 self.graph.add_vertex_table(
@@ -846,20 +902,12 @@ class Engine:
         # Partition-pruned survivor read: only the kept directories scan.
         survivors = mt.scan_partitions(keep)
         if dm:
-            if spec.method == "RANGE":
-                kept = [
-                    (n, b) for n, b in zip(spec.names, spec.bounds)
-                    if n not in targets
-                ]
-                spec.names = [n for n, _ in kept]
-                spec.bounds = [b for _, b in kept]
-            else:
-                kept = [
-                    (n, v) for n, v in zip(spec.names, spec.bounds)
-                    if n not in targets
-                ]
-                spec.names = [n for n, _ in kept]
-                spec.bounds = [v for _, v in kept]
+            kept = [
+                (n, b) for n, b in zip(spec.names, spec.bounds)
+                if n not in targets
+            ]
+            spec.names = [n for n, _ in kept]
+            spec.bounds = [b for _, b in kept]
         mt._write(survivors)  # noqa: SLF001 — one copy-on-write version
         self._refresh_view(name)
 
@@ -890,7 +938,7 @@ class Engine:
                     # per-table state a partial earlier registration may
                     # have left behind.
                     self._ci_cols_by_table.pop(name, None)
-                    getattr(self, "_defaults_by_table", {}).pop(name, None)
+                    self._defaults_by_table.pop(name, None)
                     try:
                         self.spark.catalog.dropTempView(name)
                     except Exception:
@@ -927,17 +975,23 @@ class Engine:
         mt._pre_truncate_version = None
         self._refresh_view(name)
 
+    def _writable(self, name: str) -> ManagedTable:
+        """The managed table a write statement targets; read-only dataset
+        views cannot be mutated."""
+        mt = self.managed.get(name)
+        if mt is None:
+            raise ValueError(
+                f"table {name!r} is not writable; engine.create_table() "
+                "creates a managed copy-on-write table"
+            )
+        return mt
+
     def _run_dml(self, m: re.Match) -> DataFrame:
         """INSERT / REPLACE / UPDATE / DELETE statements → ManagedTable ops
         (executor/insert.go, replace.go, update.go, delete.go)."""
         verb = (m.group("iverb") or m.group("uverb") or m.group("dverb")).upper()
         name = m.group("itab") or m.group("utab") or m.group("dtab")
-        if name not in self.managed:
-            raise ValueError(
-                f"table {name!r} is not writable; engine.create_table() "
-                "creates a managed copy-on-write table"
-            )
-        mt = self.managed[name]
+        mt = self._writable(name)
         if verb in ("INSERT", "REPLACE"):
             body = m.group("ibody").strip()
             odku = None
@@ -1089,12 +1143,7 @@ class Engine:
                       head)
         name = hm.group("tab")
         alias = hm.group("alias") or name
-        if name not in self.managed:
-            raise ValueError(
-                f"table {name!r} is not writable; engine.create_table() "
-                "creates a managed copy-on-write table"
-            )
-        mt = self.managed[name]
+        mt = self._writable(name)
         if not mt.key_cols:
             raise ValueError(
                 f"multi-table UPDATE requires a PRIMARY KEY on {name!r}"
@@ -1177,17 +1226,13 @@ class Engine:
         self._refresh_view(name)
         return self.tables[name]
 
-    def _run_multi_delete(self, target: str, src_clause: str) -> DataFrame:
+    def _run_multi_delete(self, m: re.Match) -> DataFrame:
         """Multi-table DELETE (MySQL ``DELETE t1 FROM t1 JOIN t2 ON …
         [WHERE …]``; executor/delete.go multi-table path): delete the
         target rows that participate in the join.  One SQL join selecting
         the doomed keys, one keyed MERGE with a delete action."""
-        if target not in self.managed:
-            raise ValueError(
-                f"table {target!r} is not writable; engine.create_table() "
-                "creates a managed copy-on-write table"
-            )
-        mt = self.managed[target]
+        target, src_clause = m.group("tgt"), m.group("src")
+        mt = self._writable(target)
         if not mt.key_cols:
             raise ValueError(
                 f"multi-table DELETE requires a PRIMARY KEY on {target!r}"
@@ -1219,12 +1264,7 @@ class Engine:
         from tidb_spark.sources.dml import _NEW_PREFIX
 
         name = stmt.table
-        if name not in self.managed:
-            raise ValueError(
-                f"table {name!r} is not writable; engine.create_table() "
-                "creates a managed copy-on-write table"
-            )
-        mt = self.managed[name]
+        mt = self._writable(name)
         if {k for k, _ in stmt.on_pairs} != set(mt.key_cols):
             raise ValueError(
                 f"MERGE ON must equate exactly the key columns "
@@ -1324,12 +1364,12 @@ class Engine:
         ``args`` binds named (``:name``) or positional (``?``) parameters —
         the prepared-statement surface (executor/prepared.go; the lowered
         text is plan-cached per statement + catalog epoch, Catalyst still
-        re-plans per execution — see the _PREPARE_RE note)."""
-        # Any statement that can change what LOWERING depends on — catalog
-        # shape, managed-table data/partitions, graph schema, sequences,
-        # sysvars — invalidates the plan cache by bumping the epoch
-        # (plan_cache.go's schema-version check).  Conservative allowlist:
-        # only read-shaped statements leave the epoch alone.
+        re-plans per execution — see the _PREPARE_RE note).
+
+        Statements route through three dispatch tables (_PRE_REWRITE,
+        _AFTER_VARS, _AFTER_TRANSLATE, defined below the class), one per
+        lowering phase, then through the parser-routed forms; whatever is
+        left is a query, lowered and handed to ``spark.sql``."""
         # Statement-entry snapshot + reset for BOTH provenance flags
         # (sessionctx semantics: @@last_plan_from_* report the PREVIOUS
         # statement, so reads return the snapshot while the live flags
@@ -1337,149 +1377,64 @@ class Engine:
         # actually exercises — EXECUTE's cache path, _apply_bindings).
         # Without the reset, a statement that never touches the plan
         # cache/bindings (or a lowering pass run after DROP BINDING
-        # emptied the registry) would inherit — and with the r9 4-tuple,
-        # permanently CACHE — a stale True from an older statement.
+        # emptied the registry) would inherit — and, through the cache
+        # entry's from_binding field, permanently CACHE — a stale True
+        # from an older statement.
         self._prev_from_binding = self._last_plan_from_binding
         self._prev_from_cache = self._last_plan_from_cache
         self._last_plan_from_binding = False
         self._last_plan_from_cache = False
-        if not _READONLY_STMT_RE.match(query):
-            # SET @user_var is also epoch-neutral: statements reading
-            # @vars are uncacheable outright, so no cached lowering can
-            # depend on one.  SET @@sysvar / SET NAMES etc. still bump
-            # (sysvars steer lowering, e.g. @@graph_topk_beam).
-            if not re.match(r"(?is)^\s*SET\s+@[A-Za-z_]", query):
-                self._catalog_epoch += 1
-        # Direct-statement DataFrame cache (non-prepared plan cache): a
-        # read-shaped statement the gates admit, re-issued at the same
-        # catalog epoch, replays its already-analyzed DataFrame — the
-        # ~20 regex passes, dialect lowering and Catalyst analysis run
-        # once per (text, epoch).  Latency-only: execution still plans
-        # (AQE) and computes from storage per run, and the provenance
-        # flags are untouched (see _STMT_CACHE_SKIP_RE note).
+        # Any statement that can change what LOWERING depends on — catalog
+        # shape, managed-table data/partitions, graph schema, sequences,
+        # sysvars — invalidates the statement cache by bumping the epoch
+        # (plan_cache.go's schema-version check).  Conservative allowlist:
+        # only read-shaped statements leave the epoch alone.  SET
+        # @user_var is also epoch-neutral: statements reading @vars are
+        # uncacheable outright, so no cached lowering can depend on one.
+        # SET @@sysvar / SET NAMES etc. still bump (sysvars steer
+        # lowering, e.g. @@graph_topk_beam).
+        if not (_READONLY_STMT_RE.match(query) or _SET_USER_VAR_RE.match(query)):
+            self._bump_epoch()
+        # Direct-statement cache (non-prepared plan cache): a read-shaped
+        # statement the gates admit, re-issued within one catalog epoch,
+        # replays its already-analyzed DataFrame — the ~20 regex passes,
+        # dialect lowering and Catalyst analysis run once per (text,
+        # epoch).  Latency-only: execution still plans (AQE) and computes
+        # from storage per run, and the provenance flags are untouched
+        # (see _STMT_CACHE_SKIP_RE note).
         stmt_cacheable = False
-        df_key = query  # the PRE-lowering text (`query` is rewritten below)
-        if args is None and self._lower_capture is None and _CACHEABLE_HEAD_RE.match(query):
-            _masked = merge_clause._STRING_RE.sub("''", query)
-            stmt_cacheable = not (
-                _CACHE_SKIP_RE.search(_masked)
-                or _STMT_CACHE_SKIP_RE.search(_masked)
-            )
-            if stmt_cacheable:
-                ent = self._stmt_df_cache.get(df_key)
-                if ent is not None:
-                    if ent[1] == self._catalog_epoch:
-                        self._stmt_df_cache.move_to_end(df_key)
-                        self._stmt_cache_hits += 1
-                        return ent[0]
-                    del self._stmt_df_cache[df_key]
-        # MySQL: EXPLAIN <table> is an alias for DESCRIBE <table>
-        # (parser treats them identically; executor/explain.go).
-        tbl_m = re.match(r"(?is)^\s*EXPLAIN\s+`?(\w+)`?\s*;?\s*$", query)
-        if tbl_m and tbl_m.group(1).upper() not in (
-            "SELECT", "WITH", "TABLE", "VALUES", "ANALYZE", "FORMAT",
+        df_key = (_DIRECT, query)  # PRE-lowering text; `query` is rewritten below
+        if (
+            args is None
+            and self._lower_capture is None
+            and _CACHEABLE_HEAD_RE.match(query)
         ):
-            return self.sql(f"DESC {tbl_m.group(1)}")
-        xm = _EXPLAIN_STMT_RE.match(query)
-        if xm:
-            # Statement-form EXPLAIN [ANALYZE] [FORMAT=…] <stmt>
-            # (executor/explain.go; MySQL returns the plan as ROWS, so the
-            # text renders one line per row).  The body goes back through
-            # sql() — dialect rewrites, MATCH lowering, hints all apply.
-            body = xm.group("body")
-            if xm.group("an"):
-                text = self.explain_analyze(body)
-            else:
-                fmt = (xm.group("fmt") or "TREE").upper()
-                if fmt == "JSON":
-                    # MySQL FORMAT=JSON returns ONE row holding a JSON
-                    # document; callers parse it (ADVICE r5 — tree text
-                    # here broke them).  Spark's analogue is the
-                    # optimized plan's TreeNode JSON serialization.
-                    df = self.sql(body)
-                    doc = (
-                        df._jdf.queryExecution()  # noqa: SLF001
-                        .optimizedPlan()
-                        .toJSON()
-                    )
-                    return self.spark.createDataFrame(
-                        [(doc,)], "plan string"
-                    )
-                mode = {
-                    "TREE": "formatted",
-                    "TRADITIONAL": "simple",
-                    "BRIEF": "simple",
-                    "VERBOSE": "extended",
-                }.get(fmt)
-                if mode is None:
-                    raise ValueError(f"unknown EXPLAIN FORMAT {fmt!r}")
-                text = self.explain(body, mode)
-            return self.spark.createDataFrame(
-                [(line,) for line in text.splitlines()], "plan string"
+            masked = merge_clause._STRING_RE.sub("''", query)
+            stmt_cacheable = not (
+                _CACHE_SKIP_RE.search(masked) or _STMT_CACHE_SKIP_RE.search(masked)
             )
-        tm = _TOOL_STMT_RE.match(query)
-        if tm:
-            if tm.group("rollback"):
-                # The engine runs autocommit single-statement semantics
-                # (txn scope is out of OLAP scope per BASELINE) — BEGIN /
-                # COMMIT are harmless no-ops under that model, but a
-                # ROLLBACK promise cannot be honored, so it errors rather
-                # than silently keeping the writes.
-                raise ValueError(
-                    "ROLLBACK is not supported: statements auto-commit "
-                    "(no transaction scope in this engine)"
-                )
-            # SET NAMES / SET CHARACTER SET (always utf8mb4 here), USE (one
-            # database), BEGIN/START TRANSACTION/COMMIT (autocommit), KILL
-            # (no wire connections): accepted no-ops for client/BI-tool
-            # compatibility, as the reference session layer does for
-            # settings it ignores.
-            return self.spark.range(0).select(F.lit("OK").alias("status"))
-        sm = _SET_RE.match(query)
-        if sm:
-            return self._run_set(sm)
-        cm = _CHECKSUM_RE.match(query)
-        if cm:
-            return self.checksum(cm.group(1))
-        bm_ = _CREATE_BINDING_RE.match(query)
-        if bm_:
-            return self._run_create_binding(bm_)
-        bdm = _DROP_BINDING_RE.match(query)
-        if bdm:
-            return self._run_drop_binding(bdm)
-        pm = _PREPARE_RE.match(query)
-        if pm:
-            return self._run_prepare(pm)
-        dm_ = _DEALLOC_RE.match(query)
-        if dm_:
-            return self._run_deallocate(dm_)
-        em = _EXECUTE_RE.match(query)
-        if em:
-            return self._run_execute(em)
-        csm = _CREATE_SEQ_RE.match(query)
-        if csm:
-            return self._run_create_sequence(csm)
-        dsm = _DROP_SEQ_RE.match(query)
-        if dsm:
-            return self._run_drop_sequence(dsm)
+            df = self.plan_cache.get(df_key) if stmt_cacheable else None
+            if df is not None:
+                self.plan_cache.move_to_end(df_key)
+                self._stmt_cache_hits += 1
+                return df
+        out = self._dispatch(_PRE_REWRITE, query)
+        if out is not None:
+            return out
         # Gate sequence-function handling on the CODE portion only: a
         # string literal that merely contains text like 'NEXTVAL(s)' must
         # not trigger substitution or the INSERT…SELECT rejection.
-        _seq_masked = (
-            merge_clause._STRING_RE.sub("''", query) if self.sequences else ""
-        )
-        if self.sequences and _SEQ_FUNC_RE.search(_seq_masked):
-            if re.match(
-                r"(?is)^\s*(?:INSERT|REPLACE)\b.*?\b(?:SELECT|WITH|TABLE)\b",
-                _seq_masked,
-            ):
-                # Literal splicing would stamp every SELECT row with one
-                # value; the reference allocates per row
-                # (ddl/sequence.go allocator driven from
-                # executor/insert_common.go) — take the batch-reserved
-                # per-row path instead.
-                return self._run_seq_insert_select(query)
-            query = self._substitute_sequence_funcs(query)
+        if self.sequences:
+            seq_masked = merge_clause._STRING_RE.sub("''", query)
+            if _SEQ_FUNC_RE.search(seq_masked):
+                if _SEQ_INSERT_SELECT_RE.match(seq_masked):
+                    # Literal splicing would stamp every SELECT row with
+                    # one value; the reference allocates per row
+                    # (ddl/sequence.go allocator driven from
+                    # executor/insert_common.go) — take the batch-reserved
+                    # per-row path instead.
+                    return self._run_seq_insert_select(query)
+                query = self._substitute_sequence_funcs(query)
         query = _SELECT_LOCK_RE.sub(r"\1", query)
         # Plan bindings fire before hint extraction so a binding-injected
         # /*+ hint */ flows through the normal hint path (bindinfo match
@@ -1494,117 +1449,26 @@ class Engine:
         if iv is not None:
             return self._run_select_into_vars(*iv)
         query = self._substitute_user_vars(query)
-        if re.match(r"(?is)^\s*(SHOW|DESC(?:RIBE)?\s+\w+\s*;?\s*$)", query):
-            return self._run_show(query)
-        vm = self._VIEW_RE.match(query)
-        if vm:
-            self._run_create_view(vm)
-            return self.spark.range(0).select(F.lit("OK").alias("status"))
-        dvm = self._DROP_VIEW_RE.match(query)
-        if dvm:
-            self._run_drop_view(dvm)
-            return self.spark.range(0).select(F.lit("OK").alias("status"))
-        if re.match(r"(?is)^\s*CREATE\s+TABLE\b", query):
-            ctas = re.match(
-                r"(?is)^\s*CREATE\s+TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
-                r"`?(?P<name>\w+)`?\s+AS\s+(?P<sel>(?:SELECT|WITH|TABLE)\b.*)$",
-                query,
-            )
-            if ctas:
-                self._run_ctas(ctas)
-                return self.spark.range(0).select(F.lit("OK").alias("status"))
-            likem = re.match(
-                r"(?is)^\s*CREATE\s+TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
-                r"`?(?P<name>\w+)`?\s+LIKE\s+`?(?P<src>\w+)`?\s*;?\s*$",
-                query,
-            )
-            if likem:
-                self._run_create_like(likem)
-                return self.spark.range(0).select(F.lit("OK").alias("status"))
-            from tidb_spark.sqlshim import create_table as _ct
-
-            self._run_create(_ct.parse(query))
-            return self.spark.range(0).select(F.lit("OK").alias("status"))
-        lm = self._LOAD_DATA_RE.match(query)
-        if lm:
-            return self._run_load_data(lm)
-        om = self._INTO_OUTFILE_RE.match(query)
-        if om:
-            return self._run_into_outfile(om)
-        if re.match(r"(?is)^\s*ALTER\s+TABLE\b", query):
-            self._run_alter(query)
-            return self.spark.range(0).select(F.lit("OK").alias("status"))
-        zm = re.match(
-            r"(?is)^\s*OPTIMIZE\s+(?:TABLE\s+)?`?(?P<tab>\w+)`?\s+"
-            r"ZORDER\s+BY\s*\((?P<cols>[^)]*)\)\s*;?\s*$",
-            query,
-        )
-        if zm:
-            # OPTIMIZE t ZORDER BY (a, b) — lakehouse layout extension
-            # (Delta syntax); multi-dimensional clustering so parquet
-            # row-group stats prune on every listed column.
-            mt = self.managed.get(zm.group("tab"))
-            if mt is None:
-                raise ValueError(
-                    f"OPTIMIZE ZORDER: {zm.group('tab')!r} is not a "
-                    "managed table"
-                )
-            mt.optimize_zorder(
-                [c.strip().strip("`") for c in zm.group("cols").split(",")]
-            )
-            self._refresh_view(zm.group("tab"))
-            return self.spark.range(0).select(F.lit("OK").alias("status"))
-        rnm = re.match(
-            r"(?is)^\s*RENAME\s+TABLE\s+(?P<body>.+?)\s*;?\s*$", query
-        )
-        if rnm:
-            # RENAME TABLE a TO b [, c TO d] (ddl/ddl_api.go RenameTable):
-            # each pair reuses the ALTER ... RENAME TO path, so managed
-            # tables move storage-level and registered views re-alias.
-            for pair in rnm.group("body").split(","):
-                pm = re.match(
-                    r"(?is)^\s*`?(\w+)`?\s+TO\s+`?(\w+)`?\s*$", pair
-                )
-                if not pm:
-                    raise ValueError(
-                        f"RENAME TABLE: cannot parse pair {pair.strip()!r}"
-                    )
-                self._run_alter(
-                    f"ALTER TABLE {pm.group(1)} RENAME TO {pm.group(2)}"
-                )
-            return self.spark.range(0).select(F.lit("OK").alias("status"))
+        out = self._dispatch(_AFTER_VARS, query)
+        if out is not None:
+            return out
         query = self._rewrite_infoschema(query)
-        if re.search(
-            r"(?is)\bWITH\s+QUERY\s+EXPANSION\b",
-            merge_clause._STRING_RE.sub("''", query),
-        ):
+        if _QUERY_EXPANSION_RE.search(merge_clause._STRING_RE.sub("''", query)):
             query = self._expand_fulltext_query(query)
         query = translate(query)
-        ddl = _DDL_RE.match(query)
-        if ddl:
-            self._run_ddl(ddl)
-            return self.spark.range(0).select(F.lit("OK").alias("status"))
-        um = re.match(r"(?is)^\s*UPDATE\s+(?P<rest>.+)$", query)
+        out = self._dispatch(_AFTER_TRANSLATE, query)
+        if out is not None:
+            return out
+        # Parser-routed forms: their match is not a single regex.
+        um = _UPDATE_RE.match(query)
         if um:
             head_tail = merge_clause._split_top_level(um.group("rest"), "SET")
-            if len(head_tail) == 2 and re.search(
-                r"(?is)\bJOIN\b", head_tail[0]
-            ):
+            if len(head_tail) == 2 and _JOIN_RE.search(head_tail[0]):
                 return self._run_multi_update(head_tail[0], head_tail[1])
-        dmm = re.match(
-            r"(?is)^\s*DELETE\s+`?(?P<tgt>\w+)`?\s+FROM\s+(?P<src>.+?)"
-            r"\s*;?\s*$",
-            query,
-        )
-        if dmm:
-            return self._run_multi_delete(dmm.group("tgt"), dmm.group("src"))
-        dm = _DML_RE.match(query)
-        if dm and dm.group(0):
-            return self._run_dml(dm)
         ms = merge_clause.parse(query)
         if ms is not None:
             return self._run_merge(ms)
-        if re.match(r"(?is)^\s*WITH\s+RECURSIVE\b", query):
+        if _WITH_RECURSIVE_RE.match(query):
             from tidb_spark.sqlshim import recursive_cte as _rc
 
             rc_stmt = _rc.parse(query)
@@ -1619,10 +1483,7 @@ class Engine:
             from tidb_spark.sqlshim import json_table as _jt
 
             query = _jt.lower(query)
-        if re.search(
-            r"(?i)\b(ALL|ANY|SOME)\s*\(\s*SELECT\b",
-            merge_clause._STRING_RE.sub("''", query),
-        ):
+        if _QUANTIFIED_RE.search(merge_clause._STRING_RE.sub("''", query)):
             from tidb_spark.sqlshim import quantified as _qt
 
             query = _qt.lower(query)
@@ -1656,11 +1517,87 @@ class Engine:
         # _apply_bindings and leave @@last_plan_from_binding stale for the
         # re-issue (the flag is per-statement observability the tests pin).
         if stmt_cacheable and not self._last_plan_from_binding:
-            self._stmt_df_cache[df_key] = (df, self._catalog_epoch)
-            self._stmt_df_cache.move_to_end(df_key)
-            while len(self._stmt_df_cache) > _STMT_CACHE_CAP:
-                self._stmt_df_cache.popitem(last=False)
+            self._cache_put(df_key, df)
         return df
+
+    def _dispatch(self, table, query: str) -> DataFrame | None:
+        """Run the handler of the first pattern in ``table`` that matches
+        ``query``; None when none does."""
+        for pattern, handler in table:
+            m = pattern.match(query)
+            if m:
+                out = handler(self, m)
+                return self._ok() if out is None else out
+        return None
+
+    def _run_explain(self, m: re.Match) -> DataFrame:
+        """Statement-form EXPLAIN [ANALYZE] [FORMAT=…] <stmt>
+        (executor/explain.go; MySQL returns the plan as ROWS, so the text
+        renders one line per row).  The body goes back through sql() —
+        dialect rewrites, MATCH lowering, hints all apply."""
+        body = m.group("body")
+        if m.group("an"):
+            text = self.explain_analyze(body)
+        else:
+            fmt = (m.group("fmt") or "TREE").upper()
+            if fmt == "JSON":
+                # MySQL FORMAT=JSON returns ONE row holding a JSON
+                # document; callers parse it (ADVICE r5 — tree text here
+                # broke them).  Spark's analogue is the optimized plan's
+                # TreeNode JSON serialization.
+                df = self.sql(body)
+                doc = df._jdf.queryExecution().optimizedPlan().toJSON()  # noqa: SLF001
+                return self.spark.createDataFrame([(doc,)], "plan string")
+            mode = {
+                "TREE": "formatted",
+                "TRADITIONAL": "simple",
+                "BRIEF": "simple",
+                "VERBOSE": "extended",
+            }.get(fmt)
+            if mode is None:
+                raise ValueError(f"unknown EXPLAIN FORMAT {fmt!r}")
+            text = self.explain(body, mode)
+        return self.spark.createDataFrame(
+            [(line,) for line in text.splitlines()], "plan string"
+        )
+
+    def _run_tool_stmt(self, m: re.Match) -> None:
+        """SET NAMES / SET CHARACTER SET (always utf8mb4 here), USE (one
+        database), BEGIN/START TRANSACTION/COMMIT (autocommit), KILL (no
+        wire connections): accepted no-ops for client/BI-tool
+        compatibility, as the reference session layer does for settings it
+        ignores."""
+        if m.group("rollback"):
+            # The engine runs autocommit single-statement semantics (txn
+            # scope is out of OLAP scope per BASELINE) — BEGIN / COMMIT are
+            # harmless no-ops under that model, but a ROLLBACK promise
+            # cannot be honored, so it errors rather than silently keeping
+            # the writes.
+            raise ValueError(
+                "ROLLBACK is not supported: statements auto-commit "
+                "(no transaction scope in this engine)"
+            )
+
+    def _run_optimize_zorder(self, m: re.Match) -> None:
+        """OPTIMIZE t ZORDER BY (a, b) — lakehouse layout extension (Delta
+        syntax); multi-dimensional clustering so parquet row-group stats
+        prune on every listed column."""
+        name = m.group("tab")
+        mt = self.managed.get(name)
+        if mt is None:
+            raise ValueError(f"OPTIMIZE ZORDER: {name!r} is not a managed table")
+        mt.optimize_zorder([c.strip().strip("`") for c in m.group("cols").split(",")])
+        self._refresh_view(name)
+
+    def _run_rename(self, m: re.Match) -> None:
+        """RENAME TABLE a TO b [, c TO d] (ddl/ddl_api.go RenameTable): each
+        pair reuses the ALTER ... RENAME TO path, so managed tables move
+        storage-level and registered views re-alias."""
+        for pair in m.group("body").split(","):
+            pm = _RENAME_PAIR_RE.match(pair)
+            if not pm:
+                raise ValueError(f"RENAME TABLE: cannot parse pair {pair.strip()!r}")
+            self._run_alter(f"ALTER TABLE {pm.group(1)} RENAME TO {pm.group(2)}")
 
     _PARTSEL_RE = re.compile(
         r"(?is)\b(FROM|JOIN)\s+`?(\w+)`?\s+PARTITION\s*\(([^)]*)\)"
@@ -1786,7 +1723,7 @@ class Engine:
             for name, val in zip(names, row):
                 self.user_vars[name] = _sql_literal(val)
         # MySQL: zero rows leaves the variables unchanged (with a warning).
-        return self.spark.range(0).select(F.lit("OK").alias("status"))
+        return self._ok()
 
     def _run_load_data(self, m: re.Match) -> DataFrame:
         """LOAD DATA INFILE … INTO TABLE t: distributed CSV scan with the
@@ -1816,7 +1753,7 @@ class Engine:
         n = self.tables[name].count()
         return self.spark.createDataFrame([(f"Records: {n}",)], "status string")
 
-    def _run_into_outfile(self, m: re.Match) -> DataFrame:
+    def _run_into_outfile(self, m: re.Match) -> None:
         """SELECT … INTO OUTFILE 'path': run the SELECT through the full
         pipeline, write CSV distributed (one file per partition)."""
         from tidb_spark.sources import csvio
@@ -1829,7 +1766,6 @@ class Engine:
             enclosed_by=m.group("quote") or '"',
             escaped_by=m.group("esc") or "\\",
         )
-        return self.spark.range(0).select(F.lit("OK").alias("status"))
 
     def _expand_fulltext_query(self, query: str) -> str:
         """MATCH ... AGAINST('q' [IN NATURAL LANGUAGE MODE] WITH QUERY
@@ -2621,10 +2557,6 @@ class Engine:
                 rows,
                 "Original_sql string, Bind_sql string, Status string, "
                 "Sql_digest string",
-            ) if rows else self.spark.createDataFrame(
-                [],
-                "Original_sql string, Bind_sql string, Status string, "
-                "Sql_digest string",
             )
         if re.match(r"(?is)^SHOW\s+TABLES$", q):
             # Views list alongside tables, as in MySQL/the reference
@@ -2669,14 +2601,11 @@ class Engine:
             # are columnar; secondary indexes are n/a by design — SURVEY §2
             # rows 2-3).
             name = m.group(1)
-            rows = []
-            if name in self.managed:
-                for i, col in enumerate(self.managed[name].key_cols, 1):
-                    rows.append((name, 0, "PRIMARY", i, col, "A"))
-            elif name not in self.tables:
+            if name not in self.managed and name not in self.tables:
                 raise ValueError(f"SHOW INDEX: unknown table {name!r}")
+            keys = self.managed[name].key_cols if name in self.managed else []
             return mk(
-                rows,
+                [(name, 0, "PRIMARY", i, col, "A") for i, col in enumerate(keys, 1)],
                 "Table string, Non_unique int, Key_name string, "
                 "Seq_in_index int, Column_name string, Collation string",
             )
@@ -2691,6 +2620,10 @@ class Engine:
                     ("Queries", "0"),
                     ("tidb_spark_managed_tables", str(len(self.managed))),
                     ("tidb_spark_views", str(len(self.views))),
+                    *(
+                        (f"tidb_spark_{k}", str(v))
+                        for k, v in self._cache_stats().items()
+                    ),
                 ],
                 "Variable_name string, Value string",
             )
@@ -2800,7 +2733,7 @@ class Engine:
             .replace("\\\\", "\\")
         )
 
-    def _run_prepare(self, m: re.Match) -> DataFrame:
+    def _run_prepare(self, m: re.Match) -> None:
         """PREPARE stmt FROM '…' / FROM @var (executor/prepared.go:1)."""
         src = m.group("src").strip()
         uv = re.match(r"^@(\w+)$", src)
@@ -2810,9 +2743,7 @@ class Engine:
                 # set.go: preparing from an unset variable is an error
                 # (the statement text would be NULL).
                 raise ValueError(f"PREPARE: user variable @{uv.group(1)} is not set")
-        text = self._unquote_sql_string(src)
-        self.prepared[m.group("name")] = text
-        return self.spark.range(0).select(F.lit("OK").alias("status"))
+        self.prepared[m.group("name")] = self._unquote_sql_string(src)
 
     def _run_execute(self, m: re.Match) -> DataFrame:
         """EXECUTE stmt [USING @a, @b, …] (common_plans.go Execute rebind +
@@ -2843,25 +2774,35 @@ class Engine:
                         f"EXECUTE … USING expects @variables, got {tok!r}"
                     )
                 vals.append(self.user_vars.get(av.group(1), "NULL"))
-        n_params = 0
-
-        def count(code: str) -> str:
-            nonlocal n_params
-            n_params += code.count("?")
-            return code
-
-        _map_code(text, count)
+        counts: list[int] = []
+        _map_code(text, lambda code: counts.append(code.count("?")) or code)
+        n_params = sum(counts)
         if n_params != len(vals):
             # executor/prepared.go ErrWrongParamCount
             raise ValueError(
                 f"Incorrect arguments to EXECUTE: statement takes "
                 f"{n_params} parameters, {len(vals)} given"
             )
+        # The statement with ``?`` bound to the USING literals: what the
+        # always-correct slow path runs.
+        it = iter(vals)
+        literal_text = (
+            _map_code(text, lambda code: re.sub(r"\?", lambda _m: next(it), code))
+            if vals
+            else text
+        )
+
+        def bind_markers(lowered: str) -> str:
+            return _map_code(
+                lowered,
+                lambda code: re.sub(
+                    r":p(\d+)\b", lambda pm: vals[int(pm.group(1))], code
+                ),
+            )
+
         self._last_plan_from_cache = False
-        ent = self.plan_cache.get(text)
-        if ent is not None and ent[2] != self._catalog_epoch:
-            del self.plan_cache[text]
-            ent = None
+        key = (_PREPARED, text)
+        ent = self.plan_cache.get(key)
         if ent is None:
             self._plan_cache_misses += 1
             lowered = self._lower_for_cache(text, n_params)
@@ -2883,84 +2824,54 @@ class Engine:
                 # @@last_plan_from_* never sees the capture pass's state.
                 saved_binding = self._last_plan_from_binding
                 saved_prev = (self._prev_from_binding, self._prev_from_cache)
-                literal_text = _map_code(
-                    text,
-                    lambda code, _it=iter(vals): re.sub(
-                        r"\?", lambda _m: next(_it), code
-                    ),
-                )
-                self._lower_capture = []
-                try:
-                    self.sql(literal_text)
-                    lit_lowered = (
-                        self._lower_capture[0]
-                        if len(self._lower_capture) == 1
-                        else None
-                    )
-                except Exception:
-                    lit_lowered = None
-                finally:
-                    self._lower_capture = None
-                    self._last_plan_from_binding = saved_binding
-                    self._prev_from_binding, self._prev_from_cache = saved_prev
-                bound_fast = _map_code(
-                    lowered,
-                    lambda code: re.sub(
-                        r":p(\d+)\b",
-                        lambda pm: vals[int(pm.group(1))],
-                        code,
-                    ),
-                )
-                if lit_lowered != bound_fast:
+                lit_lowered = self._capture_lowering(literal_text)
+                self._last_plan_from_binding = saved_binding
+                self._prev_from_binding, self._prev_from_cache = saved_prev
+                if lit_lowered != bind_markers(lowered):
                     lowered = None
-            # 4th field: did a plan binding rewrite the statement during
+            # from_binding: did a plan binding rewrite the statement during
             # the lowering pass?  Replayed into @@last_plan_from_binding on
             # every cache-hit execution (bindinfo applies to prepared
             # statements; the lowering pass digests :pN markers as
             # literals, _binding_digest).
-            from_binding = (
-                lowered is not None and self._last_plan_from_binding
-            )
-            ent = (lowered, n_params, self._catalog_epoch, from_binding)
-            self.plan_cache[text] = ent
-            cap = int(
-                self.spark.conf.get("spark.tidb_spark.plan_cache.size", "100")
-            )
-            while len(self.plan_cache) > cap:
-                self.plan_cache.popitem(last=False)
+            ent = (lowered, lowered is not None and self._last_plan_from_binding)
+            self._cache_put(key, ent)
         else:
-            self.plan_cache.move_to_end(text)
+            self.plan_cache.move_to_end(key)
             if ent[0] is not None:
                 self._plan_cache_hits += 1
                 self._last_plan_from_cache = True
-        if ent[0] is not None:
-            bound = _map_code(
-                ent[0],
-                lambda code: re.sub(
-                    r":p(\d+)\b", lambda pm: vals[int(pm.group(1))], code
-                ),
-            )
-            self._last_plan_from_binding = ent[3]
+        lowered, from_binding = ent
+        if lowered is not None:
+            self._last_plan_from_binding = from_binding
             try:
-                return self.spark.sql(bound)
+                return self.spark.sql(bind_markers(lowered))
             except Exception:
                 # A lowering rewrite that pattern-matches literal forms
                 # may have skipped a :pN shape it would have handled bound
                 # — evict and take the always-correct slow path (the
                 # reference likewise falls back when a cached plan fails
                 # rebind validation, plan_cache.go RebuildPlan4CachedPlan).
-                self.plan_cache[text] = (None, n_params, ent[2], False)
+                self._cache_put(key, (None, False))
                 if self._last_plan_from_cache:
                     self._plan_cache_hits -= 1
                 self._last_plan_from_cache = False
                 self._last_plan_from_binding = False
-        # Uncacheable: today's full-pipeline rebind.
-        it = iter(vals)
+        return self.sql(literal_text)
 
-        def bind(code: str) -> str:
-            return re.sub(r"\?", lambda _m: next(it), code)
-
-        return self.sql(_map_code(text, bind) if vals else text)
+    def _capture_lowering(self, text: str) -> str | None:
+        """Run ``text`` through sql() with the final spark.sql sink
+        replaced by a capture; the Spark SQL it would have run, or None if
+        the pipeline raised or did not end at that sink."""
+        self._lower_capture = []
+        try:
+            self.sql(text)
+            captured = self._lower_capture
+        except Exception:
+            return None
+        finally:
+            self._lower_capture = None
+        return captured[0] if len(captured) == 1 else None
 
     def _lower_for_cache(self, text: str, n_params: int) -> str | None:
         """One full-pipeline lowering of ``text`` with its ``?``
@@ -2981,17 +2892,9 @@ class Engine:
             text,
             lambda code: re.sub(r"\?", lambda _m: f":p{next(counter)}", code),
         )
-        self._lower_capture = []
-        try:
-            self.sql(marked)
-            captured = self._lower_capture
-        except Exception:
+        lowered = self._capture_lowering(marked)
+        if lowered is None:
             return None
-        finally:
-            self._lower_capture = None
-        if len(captured) != 1:
-            return None
-        lowered = captured[0]
         found: set[int] = set()
         _map_code(
             lowered,
@@ -3062,7 +2965,7 @@ class Engine:
         )
         return re.sub(r"\s+", " ", s).strip().lower(), lits
 
-    def _run_create_binding(self, m: re.Match) -> DataFrame:
+    def _run_create_binding(self, m: re.Match) -> None:
         """CREATE [GLOBAL|SESSION] BINDING FOR <stmt> USING <stmt>
         (bindinfo/handle.go CreateBindRecord).  Validates the reference's
         own invariant: both statements must normalize identically once
@@ -3088,14 +2991,12 @@ class Engine:
                 f"mask ({n}) and digest ({len(lits_o)}) — refusing to store"
             )
         self.bindings[d_orig] = (re.sub(r"\s+", " ", orig.strip()), template, n)
-        return self.spark.range(0).select(F.lit("OK").alias("status"))
 
-    def _run_drop_binding(self, m: re.Match) -> DataFrame:
+    def _run_drop_binding(self, m: re.Match) -> None:
         d, _ = self._binding_digest(m.group("orig"))
         if d not in self.bindings:
             raise ValueError("DROP BINDING: no binding matches this statement")
         del self.bindings[d]
-        return self.spark.range(0).select(F.lit("OK").alias("status"))
 
     def _apply_bindings(self, query: str) -> str:
         """If the statement's digest has a binding, splice the statement's
@@ -3116,19 +3017,18 @@ class Engine:
             r":b(\d+)\b", lambda bm: lits[int(bm.group(1))], template
         )
 
-    def _run_deallocate(self, m: re.Match) -> DataFrame:
+    def _run_deallocate(self, m: re.Match) -> None:
         name = m.group("name")
         if name not in self.prepared:
             raise ValueError(f"Unknown prepared statement handler {name!r}")
         del self.prepared[name]
-        return self.spark.range(0).select(F.lit("OK").alias("status"))
 
     _SEQ_OPT_RE = re.compile(
         r"(?i)(START\s+WITH|INCREMENT\s+BY|MINVALUE|MAXVALUE|CACHE)\s+"
         r"(-?\d+)|(?P<flag>CYCLE|NOCYCLE|NO\s+CYCLE)"
     )
 
-    def _run_create_sequence(self, m: re.Match) -> DataFrame:
+    def _run_create_sequence(self, m: re.Match) -> None:
         """CREATE SEQUENCE (ddl/sequence.go CreateSequence): START WITH /
         INCREMENT BY / MINVALUE / MAXVALUE / CYCLE.  CACHE is accepted and
         ignored — it tunes the reference's KV round-trip batching, which
@@ -3136,7 +3036,7 @@ class Engine:
         name = m.group("name")
         if name in self.sequences:
             if m.group("ifnex"):
-                return self.spark.range(0).select(F.lit("OK").alias("status"))
+                return
             raise ValueError(f"CREATE SEQUENCE: {name!r} already exists")
         if name in self.tables or name in self.managed or name in self.views:
             raise ValueError(f"CREATE SEQUENCE: table or view {name!r} exists")
@@ -3158,17 +3058,15 @@ class Engine:
         opts["next"] = opts["start"]
         opts["lastval"] = None
         self.sequences[name] = opts
-        return self.spark.range(0).select(F.lit("OK").alias("status"))
 
-    def _run_drop_sequence(self, m: re.Match) -> DataFrame:
+    def _run_drop_sequence(self, m: re.Match) -> None:
         name = m.group("name")
         if name not in self.sequences:
             if m.group("ifex"):
-                return self.spark.range(0).select(F.lit("OK").alias("status"))
+                return
             # ddl.go ErrWrongObject shape: dropping a non-sequence errors.
             raise ValueError(f"DROP SEQUENCE: {name!r} is not a sequence")
         del self.sequences[name]
-        return self.spark.range(0).select(F.lit("OK").alias("status"))
 
     def _seq_nextval(self, name: str) -> int:
         s = self.sequences[name]
@@ -3351,7 +3249,7 @@ class Engine:
             self.sequences[seq]["lastval"] = last
         return result
 
-    def _run_set(self, m: re.Match) -> DataFrame:
+    def _run_set(self, m: re.Match) -> None:
         """SET @var = expr / SET @@sysvar = value (executor/set.go:41-96).
         User variables evaluate eagerly to a literal (UserVars semantics);
         system variables are recorded — `spark.<conf>` names additionally
@@ -3367,7 +3265,6 @@ class Engine:
             self.sys_vars[name] = val
             if name.startswith("spark"):
                 self.spark.conf.set(name.replace("_", "."), _strip_quotes(val))
-        return self.spark.range(0).select(F.lit("OK").alias("status"))
 
     def _substitute_user_vars(self, query: str) -> str:
         """Replace @name references (outside string literals) with the
@@ -3493,11 +3390,11 @@ class Engine:
             frontier.createOrReplaceTempView(frontier_view)
             # Rebinding the frontier view is a catalog mutation the
             # statement text can't see: the step SQL is byte-identical
-            # every round, so without this bump the direct-statement
-            # DataFrame cache would replay round 1's analyzed plan (which
+            # every round, so without this bump the statement cache
+            # would replay round 1's analyzed DataFrame (which
             # resolved the view to round 1's rows) and the fixpoint would
             # converge one round early.
-            self._catalog_epoch += 1
+            self._bump_epoch()
             out = self.sql(
                 rc.replace_name(rc_stmt.step_sql, rc_stmt.name, frontier_view)
             )
@@ -3635,12 +3532,14 @@ class Engine:
         # so they describe exactly the statement explained above; the
         # hit/miss totals are session-cumulative (@@last_plan_from_*
         # expose the same values statement-by-statement; this puts them
-        # next to the plan they explain).
+        # next to the plan they explain) and match SHOW STATUS.
+        st = self._cache_stats()
         prov = (
             f"-- plan_from_cache: {int(self._last_plan_from_cache)}"
             f"  plan_from_binding: {int(self._last_plan_from_binding)}"
-            f"  (session plan cache: {self._plan_cache_hits} hits /"
-            f" {self._plan_cache_misses} misses)"
+            f"  (session plan cache: {st['plan_cache_hits']} hits /"
+            f" {st['plan_cache_misses']} misses; direct statements:"
+            f" {st['stmt_cache_hits']} hits)"
         )
         return f"-- rows: {n}\n{prov}\n{plan}"
 
@@ -3755,3 +3654,47 @@ class Engine:
             # reference's partition info the same way).
             tail = "\n" + self.managed[name].partition_spec.ddl()
         return f"CREATE TABLE `{name}` (\n{body}\n){tail}"
+
+
+# Statement dispatch for Engine.sql: one (pattern, handler) table per phase,
+# because rewrites run between the phases.  Within a table the first
+# matching pattern wins.  A handler takes (engine, match) and returns the
+# statement's DataFrame, or None for the status = 'OK' frame (Engine._ok).
+
+# Phase 1: the statement as issued.
+_PRE_REWRITE = (
+    (_EXPLAIN_TABLE_RE, lambda e, m: e.sql(f"DESC {m.group(1)}")),
+    (_EXPLAIN_STMT_RE, Engine._run_explain),
+    (_TOOL_STMT_RE, Engine._run_tool_stmt),
+    (_SET_RE, Engine._run_set),
+    (_CHECKSUM_RE, lambda e, m: e.checksum(m.group(1))),
+    (_CREATE_BINDING_RE, Engine._run_create_binding),
+    (_DROP_BINDING_RE, Engine._run_drop_binding),
+    (_PREPARE_RE, Engine._run_prepare),
+    (_DEALLOC_RE, Engine._run_deallocate),
+    (_EXECUTE_RE, Engine._run_execute),
+    (_CREATE_SEQ_RE, Engine._run_create_sequence),
+    (_DROP_SEQ_RE, Engine._run_drop_sequence),
+)
+
+# Phase 2: after sequence, binding, hint and user-variable substitution.
+_AFTER_VARS = (
+    (_SHOW_RE, lambda e, m: e._run_show(m.string)),
+    (Engine._VIEW_RE, Engine._run_create_view),
+    (Engine._DROP_VIEW_RE, Engine._run_drop_view),
+    (_CTAS_RE, Engine._run_ctas),
+    (_CREATE_LIKE_RE, Engine._run_create_like),
+    (_CREATE_TABLE_RE, Engine._run_create),
+    (Engine._LOAD_DATA_RE, Engine._run_load_data),
+    (Engine._INTO_OUTFILE_RE, Engine._run_into_outfile),
+    (_ALTER_TABLE_RE, lambda e, m: e._run_alter(m.string)),
+    (_ZORDER_RE, Engine._run_optimize_zorder),
+    (_RENAME_TABLE_RE, Engine._run_rename),
+)
+
+# Phase 3: after information_schema rewriting and dialect translate().
+_AFTER_TRANSLATE = (
+    (_DDL_RE, Engine._run_ddl),
+    (_MULTI_DELETE_RE, Engine._run_multi_delete),
+    (_DML_RE, Engine._run_dml),
+)

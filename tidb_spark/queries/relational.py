@@ -1899,7 +1899,6 @@ def subq_quantified(spark: SparkSession, sf_dir: str) -> DataFrame:
     MIN/MAX scalar subqueries that Catalyst dedupes (ReusedSubquery) —
     each subquery executes once, as a broadcast scalar, regardless of
     fact-side scale."""
-    from tidb_spark.engine import Engine
+    from tidb_spark.queries.dialectq import _engine
 
-    eng = Engine(spark, sf_dir)
-    return eng.sql(SUBQ_QUANTIFIED_SQL)
+    return _engine(spark, sf_dir).sql(SUBQ_QUANTIFIED_SQL)
