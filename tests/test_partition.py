@@ -213,6 +213,22 @@ def test_partitioned_dml_keeps_labels_consistent(engine):
     assert {r.id for r in mt.scan_partitions(["p1"]).collect()} == {1, 2}
 
 
+def test_as_of_hides_partition_label(engine):
+    """A stale read of a partitioned table has the same columns as the
+    current read: the hidden ``__part`` label stays hidden."""
+    import datetime as dt
+
+    engine.sql(
+        "CREATE TABLE pao (a BIGINT PRIMARY KEY, b INT) "
+        "PARTITION BY HASH (a) PARTITIONS 2"
+    )
+    engine.sql("INSERT INTO pao VALUES (1,1),(2,2),(3,3)")
+    now = dt.datetime.now(dt.timezone.utc).isoformat()
+    old = engine.sql(f"SELECT * FROM pao AS OF TIMESTAMP '{now}'")
+    assert old.columns == engine.sql("SELECT * FROM pao").columns == ["a", "b"]
+    assert sorted(old.collect()) == sorted(engine.sql("SELECT * FROM pao").collect())
+
+
 def test_connected_components_star_algorithm(spark):
     """Large-star/small-star connected components: a 6-node chain (worst
     case for label propagation) plus a separate triangle and an isolated

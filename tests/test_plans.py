@@ -250,6 +250,18 @@ def test_analyze_feeds_catalyst_cbo(spark, tmp_path):
         spark.read.parquet(f"{TEST_SF_DIR}/nation.parquet").createOrReplaceTempView("nation")
 
 
+def test_analyze_empty_managed_table(engine):
+    """ANALYZE of a managed table with no rows — just created, or just
+    truncated — returns the zero-row summary: an empty version has no
+    parquet files to register as a catalog table."""
+    engine.sql("CREATE TABLE ae (id BIGINT PRIMARY KEY, v INT)")
+    assert engine.analyze("ae").collect()[0]["__rows"] == 0
+    engine.sql("INSERT INTO ae VALUES (1, 10), (2, 20)")
+    engine.sql("TRUNCATE TABLE ae")
+    summary = engine.analyze("ae").collect()[0]
+    assert summary["__rows"] == 0 and summary["v__nulls"] is None
+
+
 def test_similarity_plans_have_no_corpus_single_partition_exchange(spark):
     """The similarity operators must never funnel the corpus through one
     partition: brute-force top-k reduces partition-locally before its

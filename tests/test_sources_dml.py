@@ -6,11 +6,14 @@ expectations.
 from __future__ import annotations
 
 import os
+import time
+from unittest import mock
 
 import pytest
 from pyspark.sql import functions as F
 
 from tidb_spark.catalog import load_table
+from tidb_spark.sources import dml
 from tidb_spark.sources.csvio import load_data, select_into_outfile
 from tidb_spark.sources.dml import ManagedTable
 from tests.conftest import TEST_SF_DIR
@@ -226,6 +229,18 @@ def test_as_of_time_travel(spark, nation, tmp_path):
     assert [v for v, _ in t2.versions()] == [1, 2]
     with pytest.raises(ValueError, match="not retained"):
         t2.read_version(0)
+
+    # ten or more versions: numeric order, not directory-name order
+    t3 = ManagedTable(
+        spark,
+        str(tmp_path / "tt3"),
+        key_cols=["n_nationkey"],
+        df=nation,
+        retain_versions=12,
+    )
+    for _ in range(11):
+        t3.delete(F.lit(True))  # an empty version: a marker, no Spark job
+    assert [v for v, _ in t3.versions()] == list(range(12))
 
 
 def test_sql_as_of(spark, nation, tmp_path):
@@ -551,3 +566,106 @@ def test_optimize_zorder_four_columns_sign_bit(spark, tmp_path):
     spans = [r.amx - r.amn for r in per_file]
     assert sum(spans) / len(spans) <= 24, sorted(spans)
     eng.sql("DROP TABLE IF EXISTS z4")
+
+
+# -- crash recovery: the commit ts is the commit point ---------------------
+
+KV = "k BIGINT, v STRING"
+
+
+def _crash_commit(t, rows):
+    """The version's parquet is written; the crash comes before its ts."""
+    with mock.patch.object(ManagedTable, "_commit", side_effect=OSError("crash")):
+        with pytest.raises(OSError):
+            t.insert(rows)
+    return False
+
+
+def _crash_marker_commit(t, rows):
+    """An empty version's marker is written; the crash comes before its ts."""
+    with mock.patch.object(ManagedTable, "_commit", side_effect=OSError("crash")):
+        with pytest.raises(OSError):
+            t.delete(F.lit(True))
+    return False
+
+
+def _crash_marker_dir(t, rows):
+    """The marker version's directory is made; the marker is not."""
+    os.makedirs(t._path(t._version + 1))
+    return False
+
+
+def _crash_ts_rename(t, rows):
+    """The tmp ts is written; the crash comes before its rename."""
+    with mock.patch.object(dml.os, "replace", side_effect=OSError("crash")):
+        with pytest.raises(OSError):
+            t.insert(rows)
+    assert os.path.exists(t._ts_path(t._version + 1) + ".tmp")
+    return False
+
+
+def _crash_before_gc(t, rows):
+    """A commit's ts is in place; the crash comes before it retires the
+    version that left the retention window."""
+    with mock.patch.object(ManagedTable, "_retire", side_effect=OSError("crash")):
+        with pytest.raises(OSError):
+            t.insert(rows)
+    return True
+
+
+def _crash_gc(t, rows):
+    """A commit retires the oldest version: its ts is removed, the crash
+    comes before its directory goes."""
+
+    def ts_only(self, version):
+        os.remove(self._ts_path(version))
+        raise OSError("crash")
+
+    with mock.patch.object(ManagedTable, "_retire", ts_only):
+        with pytest.raises(OSError):
+            t.insert(rows)
+    return True
+
+
+def _crash_spark_temporary(t, rows):
+    """Spark's committer made the job's ``_temporary/`` and died."""
+    os.makedirs(os.path.join(t._path(t._version + 1), "_temporary", "0"))
+    return False
+
+
+@pytest.mark.parametrize(
+    "crash",
+    [
+        _crash_commit,
+        _crash_marker_commit,
+        _crash_marker_dir,
+        _crash_ts_rename,
+        _crash_before_gc,
+        _crash_gc,
+        _crash_spark_temporary,
+    ],
+    ids=lambda f: f.__name__[len("_crash_"):],
+)
+def test_reopen_after_crash(spark, tmp_path, crash):
+    """A crash at any step of a write or of GC leaves the last committed
+    version current on reopen: reads and AS OF agree with it, the next
+    INSERT succeeds, and no uncommitted version directory nor version
+    beyond the retention window is left."""
+    root = str(tmp_path / "t")
+    base = spark.createDataFrame([(1, "a"), (2, "b")], schema=KV)
+    t = ManagedTable(spark, root, ["k"], df=base, retain_versions=2)
+    t.insert(spark.createDataFrame([(3, "c")], schema=KV))
+    before = sorted(t.df().collect())
+    rows = spark.createDataFrame([(4, "d")], schema=KV)
+    committed = crash(t, rows)
+    want = sorted(before + rows.collect()) if committed else before
+
+    t2 = ManagedTable(spark, root, ["k"], retain_versions=2)
+    assert sorted(t2.df().collect()) == want
+    assert sorted(t2.as_of(time.time()).collect()) == want
+    t2.insert(spark.createDataFrame([(5, "e")], schema=KV))
+    assert t2.df().count() == len(want) + 1
+    kept = {f"v{v}" for v, _ in t2.versions()}
+    assert len(kept) == 2
+    left = {n for n in os.listdir(root) if not n.endswith(".commit_ts")}
+    assert left == kept

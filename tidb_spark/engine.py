@@ -816,7 +816,7 @@ class Engine:
                 return
             else:
                 raise ValueError(f"unsupported ALTER TABLE clause: {clause!r}")
-        mt._write(df)  # noqa: SLF001 — one new copy-on-write version
+        mt.write(df)
         self._refresh_view(name)
 
     def _run_alter_partition(self, name: str, body: str) -> None:
@@ -908,7 +908,7 @@ class Engine:
             ]
             spec.names = [n for n, _ in kept]
             spec.bounds = [b for _, b in kept]
-        mt._write(survivors)  # noqa: SLF001 — one copy-on-write version
+        mt.write(survivors)
         self._refresh_view(name)
 
     def _run_ddl(self, m: re.Match) -> None:
@@ -953,8 +953,7 @@ class Engine:
                 self._ci_cols_by_table.pop(name, None)
                 self.dropped[name] = mt
             else:
-                mt._pre_truncate_version = mt._version  # noqa: SLF001
-                mt._write(mt.df().where(F.lit(False)))  # noqa: SLF001
+                mt.truncate()
                 self._refresh_view(name)
             return
         name, new_name = m.group("ftab"), m.group("fnew")
@@ -965,14 +964,11 @@ class Engine:
             self._refresh_view(target)
             return
         mt = self.managed.get(name)
-        pre = getattr(mt, "_pre_truncate_version", None) if mt else None
-        if pre is None:
+        if mt is None or not mt.flashback():
             raise ValueError(
                 f"FLASHBACK TABLE {name}: table was neither dropped nor "
                 "truncated (ERROR 1105: Can't find dropped/truncated table)"
             )
-        mt._write(mt.read_version(pre))  # noqa: SLF001
-        mt._pre_truncate_version = None
         self._refresh_view(name)
 
     def _writable(self, name: str) -> ManagedTable:
@@ -3572,8 +3568,8 @@ class Engine:
         df = self.tables[table]
         path = None
         if table in self.managed:
-            mt = self.managed[table]
-            path = mt._path(mt._version)
+            # None for an empty table: there are no files to analyze.
+            path = self.managed[table].parquet_path()
         elif table != "events":
             # events.parquet carries TIMESTAMP(NANOS) — the raw file can't
             # back a catalog table with the view's (micros) schema, so it

@@ -7,10 +7,16 @@ The reference mutates a row-oriented KV store per statement; the columnar
 equivalent (SURVEY §1.1: our storage is parquet) is rewrite-on-write, which
 is exactly what lakehouse formats do under MERGE/DELETE.  This class is the
 log-less core of that: each statement computes the surviving + new rows as
-one DataFrame and atomically swaps the table directory (write to a fresh
-versioned dir, then repoint — readers of the old version are unaffected,
-writers are last-wins; a production deployment layers Delta/Iceberg's
-transaction log on top for concurrent-writer isolation).
+one DataFrame and writes it as the next version, ``v<N>/`` under the table
+root.  The commit point is the file ``v<N>.commit_ts``, written to a tmp
+file and renamed into place once the data is complete: the current version
+is the newest one with a commit ts, so readers of an older version are
+unaffected and a crash mid-write leaves the last committed version current.
+GC retires a version's commit ts before its directory.  The model is a
+single writer per table: opening a table sweeps what a crashed writer left
+(version directories without a commit ts, tmp ts files).  A production
+deployment layers Delta/Iceberg's transaction log on top for
+concurrent-writer isolation.
 
 Scale: every operation is a full-plan DataFrame (anti-join for keys, filter
 for predicates) — shuffles only on the key columns, no driver-side rows.
@@ -20,6 +26,7 @@ optimization once a partition column is declared.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
 import functools
 import json
@@ -27,8 +34,13 @@ import os
 import shutil
 import time
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from tidb_spark.sqlshim.partition import PART_COL
+
+_TS = ".commit_ts"  # v<N>.commit_ts: version N's commit point
 
 # Prefix under which merge()/upsert() expose the INCOMING row's columns to
 # assignment expressions (the MySQL ``VALUES(col)`` binding,
@@ -39,8 +51,6 @@ _NEW_PREFIX = "__new_"
 def new_value(col: str) -> Column:
     """The incoming row's value of ``col`` inside a merge/upsert assignment —
     the DataFrame-API spelling of MySQL's ``VALUES(col)``."""
-    from pyspark.sql import functions as F
-
     return F.col(_NEW_PREFIX + col)
 
 
@@ -85,8 +95,6 @@ class ManagedTable:
         # rule_partition_processor behavior at the storage layer.
         self.partition_spec = partition_spec
         if partition_spec is not None:
-            from tidb_spark.sqlshim.partition import PART_COL
-
             self.partition_by = [PART_COL]
         # ENUM/SET value domains per column: {col: ("enum"|"set", values)}.
         # SURVEY §1.2 — storage type is STRING, validity enforced at write
@@ -105,7 +113,7 @@ class ManagedTable:
         self.auto_col = auto_col
         self.retain_versions = max(1, retain_versions)
         os.makedirs(root, exist_ok=True)
-        self._version = self._latest_version()
+        self._version = self._open()
         # Per-version DataFrame cache for df(): versions are immutable
         # (append-only + GC of OLD versions only), so the current
         # version's frame is the same plan every time — and one DML
@@ -113,23 +121,15 @@ class ManagedTable:
         # df() calls ≈ 0.23 s per INSERT, all py4j createDataFrame /
         # read.parquet overhead).  Invalidation is by version number.
         self._df_cache: tuple[int, DataFrame] | None = None
+        # The version TRUNCATE replaced, for FLASHBACK.
+        self._pre_truncate_version: int | None = None
         if df is not None and self._version < 0:
-            if df_known_empty:
-                # CREATE TABLE / CREATE LIKE: the caller built the frame
-                # empty, so v0 is the schema marker — no Spark job at all
-                # (PySpark's createDataFrame([]) compiles to a LogicalRDD
-                # the optimizer cannot prove empty, so the caller's
-                # knowledge is the only job-free signal).
-                self._write_known_empty(df)
-            else:
-                self._write(df)
+            self.write(df, known_empty=df_known_empty)
 
     def _apply_generated(self, rows: DataFrame) -> DataFrame:
         """Compute generated columns from their defining expressions,
         overwriting whatever arrived (the engine rejects explicit writes to
         generated columns before this point)."""
-        from pyspark.sql import functions as F
-
         if not self.generated:
             return rows
         types = {f.name: f.dataType for f in self.df().schema.fields}
@@ -144,9 +144,6 @@ class ManagedTable:
         The row_number window runs over the INSERT BATCH only (bounded by
         statement size, not table size) — the table itself never funnels
         through one partition."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
         if not self.auto_col:
             return rows
         types = {f.name: f.dataType for f in self.df().schema.fields}
@@ -183,8 +180,6 @@ class ManagedTable:
         ParseEnumName errors, executor/insert writes abort).  ENUM: the
         value must be a member (or NULL).  SET: a comma-joined subset of
         members, '' allowed (the empty set)."""
-        from pyspark.sql import functions as F
-
         for col, (kind, vals) in self.domains.items():
             if col not in rows.columns or (cols is not None and col not in cols):
                 continue
@@ -206,25 +201,58 @@ class ManagedTable:
                     f"{col!r} (allowed: {', '.join(vals)})"
                 )
 
-    # -- storage ------------------------------------------------------------
-
-    def _latest_version(self) -> int:
-        versions = [
-            int(d[1:])
-            for d in os.listdir(self.root)
-            if d.startswith("v") and d[1:].isdigit()
-        ]
-        return max(versions, default=-1)
+    # -- storage: the version log (v<N>/ data, v<N>.commit_ts commit point) --
 
     def _path(self, version: int) -> str:
         return os.path.join(self.root, f"v{version}")
 
     def _ts_path(self, version: int) -> str:
-        return os.path.join(self.root, f"v{version}.commit_ts")
+        return os.path.join(self.root, f"v{version}{_TS}")
 
     def _commit_ts(self, version: int) -> float:
         with open(self._ts_path(version)) as fh:
             return float(fh.read().strip())
+
+    def _committed(self) -> list[int]:
+        """Committed version numbers, oldest first."""
+        nums = (n[1 : -len(_TS)] for n in os.listdir(self.root) if n.endswith(_TS))
+        return sorted(int(n) for n in nums if n.isdigit())
+
+    def _open(self) -> int:
+        """The last committed version (-1 for a new table), after sweeping
+        what a crashed writer left — version directories without a commit
+        ts, tmp ts files — and versions beyond the retention window."""
+        committed = self._committed()
+        live = {f"v{v}" for v in committed}
+        for name in os.listdir(self.root):
+            path = os.path.join(self.root, name)
+            if name.endswith(_TS + ".tmp"):
+                os.remove(path)
+            elif name.startswith("v") and name[1:].isdigit() and name not in live:
+                shutil.rmtree(path, ignore_errors=True)
+        for v in committed[: -self.retain_versions]:
+            self._retire(v)
+        return committed[-1] if committed else -1
+
+    def _retire(self, version: int) -> None:
+        """GC one version: the ts goes first, so a crash in between leaves
+        an uncommitted directory that the next open sweeps.  A file that
+        is already gone is no error: GC must not fail a committed write."""
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(self._ts_path(version))
+        shutil.rmtree(self._path(version), ignore_errors=True)
+
+    def _commit(self, nxt: int) -> None:
+        tmp = self._ts_path(nxt) + ".tmp"
+        with open(tmp, "w") as fh:
+            fh.write(repr(time.time()))
+        os.replace(tmp, self._ts_path(nxt))
+        self._version = nxt
+        # Retire the version that just left the retention window, as the
+        # reference's GC safepoint bounds stale reads (older ones went at
+        # earlier commits or at open).
+        if nxt >= self.retain_versions:
+            self._retire(nxt - self.retain_versions)
 
     #: Marker file a PROVABLY-EMPTY version writes instead of launching a
     #: Spark write job: CREATE TABLE / CREATE LIKE materialize an empty
@@ -250,107 +278,102 @@ class ManagedTable:
             return None
         return df.schema
 
-    def _empty_marker_schema(self, version: int):
+    def _marker_schema(self, version: int):
         """StructType stored by an empty-version marker, or None."""
-        from pyspark.sql.types import StructType
-
         p = os.path.join(self._path(version), self._EMPTY_MARKER)
         if not os.path.exists(p):
             return None
         with open(p) as fh:
             return StructType.fromJson(json.load(fh))
 
-    def _empty_df(self, schema) -> DataFrame:
-        """Zero-PARTITION empty frame for a marker version.  The plain
-        createDataFrame([], schema) parallelizes defaultParallelism EMPTY
-        partitions, and a later INSERT's union drags all of them into its
-        write job as no-op tasks (measured +0.35 s per statement); an
-        emptyRDD-backed frame contributes zero partitions."""
-        return self.spark.createDataFrame(
-            self.spark.sparkContext.emptyRDD(), schema=schema
-        )
-
-    def _commit(self, nxt: int) -> None:
-        with open(self._ts_path(nxt), "w") as fh:
-            fh.write(repr(time.time()))
-        self._version = nxt
-        # Retire versions beyond the retention window (the reference's GC
-        # safepoint bounds stale reads the same way; a production deployment
-        # uses log-based retention à la Delta/Iceberg).
-        for v in range(nxt - self.retain_versions + 1):
-            old = self._path(v)
-            if os.path.exists(old):
-                shutil.rmtree(old, ignore_errors=True)
-            if os.path.exists(self._ts_path(v)):
-                os.remove(self._ts_path(v))
-
-    def _write_known_empty(self, df: DataFrame) -> None:
-        """Persist a version the caller KNOWS is empty as a schema marker:
-        no Spark job, same version/commit-ts/GC bookkeeping."""
+    def write(self, df: DataFrame, *, known_empty: bool = False) -> None:
+        """Commit ``df`` as the next version: the table's full new
+        contents (copy-on-write).  An empty version — declared by the
+        caller (``known_empty``: CREATE TABLE / CREATE LIKE, where
+        PySpark's createDataFrame([]) compiles to a LogicalRDD the
+        optimizer cannot prove empty) or proved by the optimized plan —
+        is stored as the schema marker, with no Spark job."""
         if self.partition_spec is not None:
-            from tidb_spark.sqlshim.partition import PART_COL
-
-            if PART_COL in df.columns:
-                df = df.drop(PART_COL)
-            df = df.withColumn(PART_COL, self.partition_spec.label_col())
+            df = df.drop(PART_COL).withColumn(
+                PART_COL, self.partition_spec.label_col()
+            )
         nxt = self._version + 1
         path = self._path(nxt)
-        # No exist_ok: a leftover same-numbered version directory (crash
-        # between write and commit, concurrent writer) must fail loudly,
-        # matching the parquet path's errorifexists contract.
-        os.makedirs(path)
-        with open(os.path.join(path, self._EMPTY_MARKER), "w") as fh:
-            json.dump(df.schema.jsonValue(), fh)
-        self._commit(nxt)
-
-    def _write(self, df: DataFrame) -> None:
-        nxt = self._version + 1
-        partition_cols = list(self.partition_by)
-        if self.partition_spec is not None:
-            from tidb_spark.sqlshim.partition import PART_COL
-
-            if PART_COL in df.columns:
-                df = df.drop(PART_COL)
-            df = df.withColumn(PART_COL, self.partition_spec.label_col())
-        empty_schema = self._known_empty_schema(df)
-        if empty_schema is not None:
-            # Provably-empty version (a DML whose plan folded to nothing):
-            # the same marker path, discovered from the optimized plan.
-            path = self._path(nxt)
-            os.makedirs(path)  # fail loudly on a leftover version dir
+        schema = df.schema if known_empty else self._known_empty_schema(df)
+        if schema is not None:
+            # No exist_ok: a leftover same-numbered version directory must
+            # fail loudly, matching the parquet path's errorifexists.
+            os.makedirs(path)
             with open(os.path.join(path, self._EMPTY_MARKER), "w") as fh:
-                json.dump(empty_schema.jsonValue(), fh)
-            self._commit(nxt)
-            return
-        if self.partition_spec is not None and len(df.take(1)) == 0:
-            # A dynamic-partitioned write of ZERO rows emits no files at
-            # all — the version directory would be unreadable.  Write
-            # the empty frame unpartitioned (schema-bearing file); later
-            # non-empty versions partition normally.
-            partition_cols = []
-        writer = df.write.mode("errorifexists")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(self._path(nxt))
+                json.dump(schema.jsonValue(), fh)
+        else:
+            partition_cols = self.partition_by
+            if self.partition_spec is not None and not df.take(1):
+                # A dynamic-partitioned write of ZERO rows emits no files
+                # at all — the version directory would be unreadable.
+                # Write the empty frame unpartitioned (schema-bearing
+                # file); later non-empty versions partition normally.
+                partition_cols = []
+            writer = df.write.mode("errorifexists")
+            if partition_cols:
+                writer = writer.partitionBy(*partition_cols)
+            writer.parquet(path)
         self._commit(nxt)
+
+    def _read(self, version: int, parts: list[str] | None = None) -> DataFrame:
+        """One version's rows, decoded from the marker or the parquet.  A
+        partitioned table's hidden ``__part`` label is dropped — after
+        the ``parts`` filter, so Spark turns that filter into a
+        PartitionFilters entry and skips the other directories."""
+        schema = self._marker_schema(version)
+        if schema is not None:
+            # Zero-PARTITION empty frame.  The plain createDataFrame([],
+            # schema) parallelizes defaultParallelism EMPTY partitions,
+            # and a later INSERT's union drags all of them into its write
+            # job as no-op tasks (measured +0.35 s per statement).
+            out = self.spark.createDataFrame(
+                self.spark.sparkContext.emptyRDD(), schema=schema
+            )
+        else:
+            out = self.spark.read.parquet(self._path(version))
+        if self.partition_spec is None:
+            return out
+        if parts is not None:
+            out = out.where(F.col(PART_COL).isin(list(parts)))
+        return out.drop(PART_COL)
 
     def df(self) -> DataFrame:
         if self._version < 0:
             raise ValueError(f"table at {self.root} has no data")
-        if self._df_cache is not None and self._df_cache[0] == self._version:
-            return self._df_cache[1]
-        marker = self._empty_marker_schema(self._version)
-        out = (
-            self._empty_df(marker)
-            if marker is not None
-            else self.spark.read.parquet(self._path(self._version))
-        )
-        if self.partition_spec is not None:
-            from tidb_spark.sqlshim.partition import PART_COL
+        if self._df_cache is None or self._df_cache[0] != self._version:
+            self._df_cache = (self._version, self._read(self._version))
+        return self._df_cache[1]
 
-            out = out.drop(PART_COL)
-        self._df_cache = (self._version, out)
-        return out
+    def parquet_path(self) -> str | None:
+        """Directory holding the current version's parquet files, or None
+        when the current version is an empty-schema marker (no files for
+        a catalog table to point at)."""
+        if self._marker_schema(self._version) is not None:
+            return None
+        return self._path(self._version)
+
+    # -- TRUNCATE / FLASHBACK TABLE (parser/ast/ddl.go:3859) ----------------
+
+    def truncate(self) -> None:
+        """Commit an empty version, remembering the one before it for
+        :meth:`flashback`."""
+        self._pre_truncate_version = self._version
+        self.write(self.df().where(F.lit(False)))
+
+    def flashback(self) -> bool:
+        """Commit the pre-truncate rows as a new version.  False when the
+        table was not truncated since its last flashback."""
+        pre = self._pre_truncate_version
+        if pre is None:
+            return False
+        self.write(self.read_version(pre))
+        self._pre_truncate_version = None
+        return True
 
     # -- partitioned scans (rule_partition_processor.go analogue) ----------
 
@@ -361,38 +384,21 @@ class ManagedTable:
         return self.partition_spec.partition_names()
 
     def scan_partitions(self, names: list[str]) -> DataFrame:
-        """Scan only the named partitions — ``FROM t PARTITION (p0, p1)``.
-        The ``__part`` filter runs BEFORE the drop, so Spark turns it into
-        a PartitionFilters entry and skips the other directories
-        entirely."""
+        """Scan only the named partitions — ``FROM t PARTITION (p0, p1)``."""
         if self.partition_spec is None:
             raise ValueError("table is not partitioned")
-        from tidb_spark.sqlshim.partition import PART_COL
-
         known = set(self.partitions())
         unknown = [n for n in names if n not in known]
         if unknown:
             raise ValueError(f"Unknown partition {unknown[0]!r}")
-        marker = self._empty_marker_schema(self._version)
-        raw = (
-            self._empty_df(marker)
-            if marker is not None
-            else self.spark.read.parquet(self._path(self._version))
-        )
-        return raw.where(F.col(PART_COL).isin(list(names))).drop(PART_COL)
+        return self._read(self._version, names)
 
     # -- stale reads (AS OF TIMESTAMP — parser/ast/dml.go:276, the
     # reference's stale-read surface; executor/stale_txn_test.go:143) ------
 
     def versions(self) -> list[tuple[int, float]]:
         """Retained (version, commit epoch-seconds) pairs, oldest first."""
-        out = []
-        for d in sorted(os.listdir(self.root)):
-            if d.startswith("v") and d[1:].isdigit():
-                v = int(d[1:])
-                if os.path.exists(self._ts_path(v)):
-                    out.append((v, self._commit_ts(v)))
-        return out
+        return [(v, self._commit_ts(v)) for v in self._committed()]
 
     def read_version(self, version: int) -> DataFrame:
         """Read one retained version.
@@ -406,17 +412,13 @@ class ManagedTable:
         here catches the already-collected case with a clear error at
         plan time; long-held snapshots should be re-resolved (call again)
         or materialized (cache/write) before heavy subsequent DML."""
-        path = self._path(version)
-        if not os.path.exists(path):
+        if version not in self._committed():
             raise ValueError(
                 f"version {version} of table at {self.root} is not retained "
                 f"(retain_versions={self.retain_versions}); snapshot is "
                 "older than the GC retention window"
             )
-        marker = self._empty_marker_schema(version)
-        if marker is not None:
-            return self._empty_df(marker)
-        return self.spark.read.parquet(path)
+        return self._read(version)
 
     def as_of(self, ts: float | str | _dt.datetime) -> DataFrame:
         """The table as of wall-clock ``ts`` (epoch seconds, ISO string, or
@@ -446,7 +448,7 @@ class ManagedTable:
         rows = self._fill_auto_increment(rows)
         rows = self._apply_generated(rows)
         self._check_domains(rows)
-        self._write(self.df().unionByName(rows))
+        self.write(self.df().unionByName(rows))
 
     def replace(self, rows: DataFrame) -> None:
         """REPLACE INTO: delete existing rows with matching keys, then
@@ -458,13 +460,11 @@ class ManagedTable:
         survivors = self.df().join(
             rows.select(*self.key_cols).distinct(), on=self.key_cols, how="left_anti"
         )
-        self._write(survivors.unionByName(rows))
+        self.write(survivors.unionByName(rows))
 
     def update(self, where: Column, assignments: dict[str, Column]) -> None:
         """UPDATE … SET col = expr WHERE …: rewrite matching rows via
         CASE-typed projection (one pass, no join)."""
-        from pyspark.sql import functions as F
-
         cur = self.df()
         updated = cur.select(
             *[
@@ -476,11 +476,11 @@ class ManagedTable:
         )
         updated = self._apply_generated(updated)
         self._check_domains(updated, cols=set(assignments))
-        self._write(updated)
+        self.write(updated)
 
     def delete(self, where: Column) -> None:
         """DELETE WHERE …: keep the complement."""
-        self._write(self.df().where(~where))
+        self.write(self.df().where(~where))
 
     def merge(
         self,
@@ -503,8 +503,6 @@ class ManagedTable:
         Scale: exactly one shuffle on the key columns (the outer join); the
         per-row CASE projection is codegen'd — no driver-side rows, same
         plan shape at 100 TB."""
-        from pyspark.sql import functions as F
-
         cur = self.df()
         cols = cur.columns
         src = source.dropDuplicates(self.key_cols)
@@ -552,7 +550,7 @@ class ManagedTable:
         # merged frame (pre-existing rows were validated when written).
         touched = set(upd) | set(source.columns)
         self._check_domains(result, cols=touched)
-        self._write(result)
+        self.write(result)
 
     def upsert(
         self, rows: DataFrame, assignments: dict[str, Column | str] | None = None
@@ -648,4 +646,4 @@ class ManagedTable:
             .sortWithinPartitions("__zorder")
             .drop("__zorder")
         )
-        self._write(clustered)
+        self.write(clustered)
