@@ -239,7 +239,7 @@ def test_as_of_time_travel(spark, nation, tmp_path):
         retain_versions=12,
     )
     for _ in range(11):
-        t3.delete(F.lit(True))  # an empty version: a marker, no Spark job
+        t3.delete(F.lit(True))  # an empty version: no Spark job
     assert [v for v, _ in t3.versions()] == list(range(12))
 
 
@@ -371,6 +371,21 @@ def test_update_where_in_string_literal(spark, nation, tmp_path):
     got = {r.n_nationkey: r.n_name for r in eng.sql("SELECT * FROM nat").collect()}
     assert got[3] == "WHERE x"
     assert got[4] != "WHERE x"
+
+    # Each version is as many files as its estimated bytes need: one here,
+    # not one per VALUES row.
+    mt = eng.managed["nat"]
+
+    def data_files():
+        path = mt._path(mt._version)  # noqa: SLF001
+        return [n for _, _, ns in os.walk(path) for n in ns if n.endswith(".parquet")]
+
+    assert len(data_files()) == 1
+    eng.sql("INSERT INTO nat VALUES (100, 'A', 0), (101, 'B', 1)")
+    assert len(data_files()) == 1
+    eng.sql("UPDATE nat SET n_name = 'Y' WHERE n_nationkey = 100")
+    assert len(data_files()) == 1
+    assert eng.sql("SELECT COUNT(*) AS n FROM nat").collect()[0].n == nation.count() + 2
 
 
 def test_sql_load_data_and_outfile(engine, tmp_path):
@@ -582,7 +597,8 @@ def _crash_commit(t, rows):
 
 
 def _crash_marker_commit(t, rows):
-    """An empty version's marker is written; the crash comes before its ts."""
+    """An empty version's schema file is written; the crash comes before
+    its ts."""
     with mock.patch.object(ManagedTable, "_commit", side_effect=OSError("crash")):
         with pytest.raises(OSError):
             t.delete(F.lit(True))
@@ -590,7 +606,7 @@ def _crash_marker_commit(t, rows):
 
 
 def _crash_marker_dir(t, rows):
-    """The marker version's directory is made; the marker is not."""
+    """An empty version's directory is made; its schema file is not."""
     os.makedirs(t._path(t._version + 1))
     return False
 
@@ -669,3 +685,64 @@ def test_reopen_after_crash(spark, tmp_path, crash):
     assert len(kept) == 2
     left = {n for n in os.listdir(root) if not n.endswith(".commit_ts")}
     assert left == kept
+
+
+def test_failed_write_keeps_table_writable(spark, tmp_path):
+    """A write whose Spark job fails (here a Python UDF that raises) removes
+    its own version directory, so the same object's next INSERT succeeds
+    instead of failing with PATH_ALREADY_EXISTS."""
+    t = ManagedTable(
+        spark, str(tmp_path / "t"), ["k"],
+        df=spark.createDataFrame([(1, "a")], schema=KV),
+    )
+
+    @F.udf("string")
+    def boom(v):
+        raise RuntimeError("boom")
+
+    bad = spark.createDataFrame([(2, "b")], schema=KV).withColumn("v", boom("v"))
+    with pytest.raises(Exception, match="boom"):
+        t.insert(bad)
+    t.insert(spark.createDataFrame([(3, "c")], schema=KV))
+    assert sorted(t.df().collect()) == [(1, "a"), (3, "c")]
+    assert [v for v, _ in t.versions()] == [0, 1]
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"dml-jobs-{time.monotonic_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_write_job_counts(spark, tmp_path):
+    """A version is read back with its stored schema, so the read after a
+    write and after a reopen runs no inference job; an empty partitioned
+    version needs no probe job before its one write job."""
+    from tidb_spark.sqlshim.partition import PartitionSpec
+
+    root = str(tmp_path / "t")
+    t = ManagedTable(
+        spark, root, ["k"], df=spark.createDataFrame([(1, "a")], schema=KV)
+    )
+    t.insert(spark.createDataFrame([(2, "b")], schema=KV))
+    assert _jobs(spark, lambda: t.df().schema) == 0
+    t2 = ManagedTable(spark, root, ["k"])
+    assert _jobs(spark, lambda: t2.df().schema) == 0
+
+    h = ManagedTable(
+        spark, str(tmp_path / "h"), ["k"],
+        df=spark.createDataFrame([(k, str(k)) for k in range(6)], schema=KV),
+        partition_spec=PartitionSpec(method="HASH", expr="k", num=4),
+    )
+    h.df()
+    # Not provably empty: the optimizer cannot fold ``k >= 0`` away.
+    assert _jobs(spark, lambda: h.delete(F.col("k") >= 0)) == 1
+    assert h.df().count() == 0
+    assert h.df().columns == ["k", "v"]

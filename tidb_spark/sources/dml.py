@@ -8,13 +8,20 @@ equivalent (SURVEY §1.1: our storage is parquet) is rewrite-on-write, which
 is exactly what lakehouse formats do under MERGE/DELETE.  This class is the
 log-less core of that: each statement computes the surviving + new rows as
 one DataFrame and writes it as the next version, ``v<N>/`` under the table
-root.  The commit point is the file ``v<N>.commit_ts``, written to a tmp
+root.  A version directory is self-describing: ``_schema.json`` (the
+frame's StructType, so every read takes it instead of running a schema-
+inference job) beside zero or more parquet files — none for an empty
+version, which costs no Spark job.  The data is coalesced to
+ceil(estimated bytes / ``spark.sql.files.maxPartitionBytes``) files, so one
+file is one scan split; the rule only lowers the width, never shuffles.
+The commit point is the file ``v<N>.commit_ts``, written to a tmp
 file and renamed into place once the data is complete: the current version
 is the newest one with a commit ts, so readers of an older version are
 unaffected and a crash mid-write leaves the last committed version current.
 GC retires a version's commit ts before its directory.  The model is a
 single writer per table: opening a table sweeps what a crashed writer left
-(version directories without a commit ts, tmp ts files).  A production
+(version directories without a commit ts, tmp ts files), and a write that
+fails in a live process removes its own directory.  A production
 deployment layers Delta/Iceberg's transaction log on top for
 concurrent-writer isolation.
 
@@ -41,6 +48,9 @@ from pyspark.sql.types import StructType
 from tidb_spark.sqlshim.partition import PART_COL
 
 _TS = ".commit_ts"  # v<N>.commit_ts: version N's commit point
+# v<N>/_schema.json: version N's StructType.  Spark's file listing skips
+# ``_``-prefixed names, so the parquet reader never sees it.
+_SCHEMA = "_schema.json"
 
 # Prefix under which merge()/upsert() expose the INCOMING row's columns to
 # assignment expressions (the MySQL ``VALUES(col)`` binding,
@@ -254,88 +264,73 @@ class ManagedTable:
         if nxt >= self.retain_versions:
             self._retire(nxt - self.retain_versions)
 
-    #: Marker file a PROVABLY-EMPTY version writes instead of launching a
-    #: Spark write job: CREATE TABLE / CREATE LIKE materialize an empty
-    #: v0, and the empty parquet write was measured at ~0.4-0.5 s of pure
-    #: job+commit overhead per DDL statement (r12; five registered
-    #: collation queries pay it inside their bench wall).  The marker
-    #: holds the exact StructType JSON, so readers reconstruct the same
-    #: schema with a driver-only LocalRelation — version numbering,
-    #: commit timestamps, AS OF resolution and retention GC are untouched.
-    _EMPTY_MARKER = "_EMPTY_SCHEMA.json"
-
-    def _known_empty_schema(self, df: DataFrame):
-        """The frame's schema if the OPTIMIZER proves it empty (a
-        LocalRelation with no rows — createDataFrame([], schema), or a
-        plan constant-folded to empty), else None.  Driver-only: no job."""
+    def _width(self, df: DataFrame) -> int | None:
+        """Files for ``df``'s version: 0 when the OPTIMIZER proves it empty
+        (a LocalRelation with no rows — createDataFrame([], schema), or a
+        plan constant-folded to empty), else ceil(estimated bytes /
+        maxPartitionBytes).  None when the size is unknown (a LogicalRDD
+        estimates Long.MaxValue): the plan keeps its own width.
+        Driver-only: no job."""
         try:
             plan = df._jdf.queryExecution().optimizedPlan()
-            if plan.getClass().getSimpleName() != "LocalRelation":
-                return None
-            if not plan.data().isEmpty():
-                return None
+            if plan.getClass().getSimpleName() == "LocalRelation":
+                if plan.data().isEmpty():
+                    return 0
+            size = int(str(plan.stats().sizeInBytes()))
+            conf = self.spark._jsparkSession.sessionState().conf()
+            split = conf.filesMaxPartitionBytes()
         except Exception:
             return None
-        return df.schema
-
-    def _marker_schema(self, version: int):
-        """StructType stored by an empty-version marker, or None."""
-        p = os.path.join(self._path(version), self._EMPTY_MARKER)
-        if not os.path.exists(p):
-            return None
-        with open(p) as fh:
-            return StructType.fromJson(json.load(fh))
+        width = max(1, -(-size // split))
+        return width if width < 2**31 - 1 else None
 
     def write(self, df: DataFrame, *, known_empty: bool = False) -> None:
         """Commit ``df`` as the next version: the table's full new
-        contents (copy-on-write).  An empty version — declared by the
-        caller (``known_empty``: CREATE TABLE / CREATE LIKE, where
-        PySpark's createDataFrame([]) compiles to a LogicalRDD the
-        optimizer cannot prove empty) or proved by the optimized plan —
-        is stored as the schema marker, with no Spark job."""
+        contents (copy-on-write), at the width :meth:`_width` sizes.  An
+        empty version — declared by the caller (``known_empty``: CREATE
+        TABLE / CREATE LIKE, where PySpark's createDataFrame([]) compiles
+        to a LogicalRDD the optimizer cannot prove empty) or proved by the
+        optimized plan — is its schema file alone, with no Spark job."""
         if self.partition_spec is not None:
             df = df.drop(PART_COL).withColumn(
                 PART_COL, self.partition_spec.label_col()
             )
-        nxt = self._version + 1
-        path = self._path(nxt)
-        schema = df.schema if known_empty else self._known_empty_schema(df)
-        if schema is not None:
-            # No exist_ok: a leftover same-numbered version directory must
-            # fail loudly, matching the parquet path's errorifexists.
-            os.makedirs(path)
-            with open(os.path.join(path, self._EMPTY_MARKER), "w") as fh:
-                json.dump(schema.jsonValue(), fh)
-        else:
-            partition_cols = self.partition_by
-            if self.partition_spec is not None and not df.take(1):
-                # A dynamic-partitioned write of ZERO rows emits no files
-                # at all — the version directory would be unreadable.
-                # Write the empty frame unpartitioned (schema-bearing
-                # file); later non-empty versions partition normally.
-                partition_cols = []
-            writer = df.write.mode("errorifexists")
-            if partition_cols:
-                writer = writer.partitionBy(*partition_cols)
-            writer.parquet(path)
-        self._commit(nxt)
+        self._put(df, 0 if known_empty else self._width(df))
+
+    def _put(self, df: DataFrame, width: int | None) -> None:
+        """Write and commit ``v<N+1>/``: ``width`` parquet files (None: the
+        plan's own partitioning), then the schema file, then the ts."""
+        path = self._path(self._version + 1)
+        try:
+            if width == 0:
+                # No exist_ok: a leftover same-numbered version directory
+                # must fail loudly, matching the parquet path's errorifexists.
+                os.makedirs(path)
+            else:
+                out = df if width is None else df.coalesce(width)
+                writer = out.write.mode("errorifexists")
+                if self.partition_by:
+                    writer = writer.partitionBy(*self.partition_by)
+                writer.parquet(path)
+            with open(os.path.join(path, _SCHEMA), "w") as fh:
+                json.dump(df.schema.jsonValue(), fh)
+        except BaseException:
+            # Single writer: nothing else owns v<N+1>/, and left behind it
+            # would fail every later write on this object.
+            shutil.rmtree(path, ignore_errors=True)
+            raise
+        self._commit(self._version + 1)
 
     def _read(self, version: int, parts: list[str] | None = None) -> DataFrame:
-        """One version's rows, decoded from the marker or the parquet.  A
+        """One version's rows, read with its stored schema (no inference
+        job; no parquet files read as a zero-partition empty frame).  A
         partitioned table's hidden ``__part`` label is dropped — after
         the ``parts`` filter, so Spark turns that filter into a
         PartitionFilters entry and skips the other directories."""
-        schema = self._marker_schema(version)
-        if schema is not None:
-            # Zero-PARTITION empty frame.  The plain createDataFrame([],
-            # schema) parallelizes defaultParallelism EMPTY partitions,
-            # and a later INSERT's union drags all of them into its write
-            # job as no-op tasks (measured +0.35 s per statement).
-            out = self.spark.createDataFrame(
-                self.spark.sparkContext.emptyRDD(), schema=schema
-            )
-        else:
-            out = self.spark.read.parquet(self._path(version))
+        path = self._path(version)
+        with open(os.path.join(path, _SCHEMA)) as fh:
+            schema = StructType.fromJson(json.load(fh))
+        out = self.spark.read.schema(schema).parquet(path)
         if self.partition_spec is None:
             return out
         if parts is not None:
@@ -351,11 +346,10 @@ class ManagedTable:
 
     def parquet_path(self) -> str | None:
         """Directory holding the current version's parquet files, or None
-        when the current version is an empty-schema marker (no files for
-        a catalog table to point at)."""
-        if self._marker_schema(self._version) is not None:
-            return None
-        return self._path(self._version)
+        when it has none (no files for a catalog table to point at)."""
+        path = self._path(self._version)
+        names = (n for _, _, ns in os.walk(path) for n in ns)
+        return path if any(n.endswith(".parquet") for n in names) else None
 
     # -- TRUNCATE / FLASHBACK TABLE (parser/ast/ddl.go:3859) ----------------
 
@@ -646,4 +640,5 @@ class ManagedTable:
             .sortWithinPartitions("__zorder")
             .drop("__zorder")
         )
-        self.write(clustered)
+        # Keep the n_files range partitions: the size rule would merge them.
+        self._put(clustered, None)
