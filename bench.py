@@ -307,10 +307,10 @@ def main() -> None:
     # class, so only the identical plan shape warms them fully; a single
     # up-front prewarm pass decays (~100 intervening plans churn JIT
     # profiles / GC), so it runs per-query, just outside each timed
-    # region.  r13 root-cause result (scripts/phantom_probe.py): the r9-
-    # r12 "JIT-switch phantom" — first sf0.1 run 1.5-6× its isolated
-    # cost, second run fast, ~18 queries ≈ 27 s of corpus wall — is C2
-    # compile-queue latency, NOT cache accretion (a full cache flush
+    # region.  r13 root-cause result (OPTIMIZATION_r13.md, verdict item
+    # 1): the r9-r12 "JIT-switch phantom" — first sf0.1 run 1.5-6× its
+    # isolated cost, second run fast, ~18 queries ≈ 27 s of corpus wall —
+    # is C2 compile-queue latency, NOT cache accretion (a full cache flush
     # between runs made later runs FASTER, never slower, while the JVM's
     # own CompilationMXBean showed multi-second compile-time deltas
     # concentrated in exactly the overshooting first runs).  The sf0.001

@@ -1,7 +1,11 @@
 """Unit tests for the pipelined round driver (operators/rounds.py) and
-small dedup helpers — pure Python, no SparkSession."""
+the partition-width rule (operators/width.py)."""
 
-from tidb_spark.data.dedup import _parse_byte_size
+import os
+
+import pytest
+
+from tidb_spark.operators import width
 from tidb_spark.operators.rounds import run_rounds
 
 
@@ -13,21 +17,6 @@ class _Fake:
 
     def count(self) -> int:
         return self.rows
-
-
-def test_parse_byte_size_forms():
-    """ADVICE r6 (low): spark.sql.files.maxPartitionBytes accepts
-    human-readable sizes ('128m', '512MB') — parse them instead of
-    crashing on int()."""
-    assert _parse_byte_size("134217728") == 134217728
-    assert _parse_byte_size(134217728) == 134217728
-    assert _parse_byte_size("128m") == 128 << 20
-    assert _parse_byte_size("512MB") == 512 << 20
-    assert _parse_byte_size("1g") == 1 << 30
-    assert _parse_byte_size(" 64k ") == 64 << 10
-    assert _parse_byte_size("134217728b") == 134217728
-    assert _parse_byte_size("nonsense") is None
-    assert _parse_byte_size("12.5m") is None
 
 
 def test_run_rounds_replan_hook_consulted():
@@ -161,31 +150,77 @@ def test_cte_recursive_unroll_matches_generic_loop(spark):
     assert a == b == [(1, 0)]
 
 
-def test_spread_small_width_is_size_derived(spark):
-    """r13: spread_small's fan-out follows the input size (one task per
-    _SPREAD_BYTES_PER_TASK) capped at defaultParallelism, instead of
-    always fanning to every core — tiny corpora must not fragment into
-    launch-overhead-dominated tasks."""
-    import tidb_spark.data.dedup as dd
+def test_width_helpers(spark, tmp_path):
+    """The width module's three primitives: the split size is the JVM's
+    parse of the conf (human-readable forms included), the estimate is
+    None for an RDD-built frame and the file bytes for a parquet read,
+    and ``tasks`` is a ceiling that is at least 1 and honours its cap."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "64m")
+        assert width.split_bytes(spark) == 64 << 20
+    finally:
+        spark.conf.set(key, old)
+    assert width.split_bytes(spark) == 128 << 20
 
-    dp = spark.sparkContext.defaultParallelism
-
-    def width(df):
-        out = dd.spread_small(df, "k")
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        return out.rdd.getNumPartitions(), size
-
-    # small input: width = max(2, ceil(size / bpt)), capped by cores
-    small = spark.createDataFrame([(i, "x" * 50) for i in range(200)], ["k", "v"])
-    w, size = width(small)
-    expect = min(dp, max(2, -(-size // dd._SPREAD_BYTES_PER_TASK)))
-    assert w == expect, (w, expect, size)
-
-    # bigger input: enough bytes that the core cap binds again
-    big = spark.createDataFrame(
-        [(i, "x" * 4000) for i in range(dp * dd._SPREAD_BYTES_PER_TASK // 4000 + 64)],
-        ["k", "v"],
+    rows = spark.createDataFrame([(1, "a")], ["k", "v"])
+    assert width.estimated_bytes(rows) is None
+    path = str(tmp_path / "one")
+    spark.range(100).coalesce(1).write.parquet(path)
+    on_disk = sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
     )
-    w, size = width(big)
-    assert size >= dp * dd._SPREAD_BYTES_PER_TASK
-    assert w == dp, (w, dp, size)
+    assert width.estimated_bytes(spark.read.parquet(path)) == on_disk
+
+    assert width.tasks(9, 3) == 3
+    assert width.tasks(10, 3) == 4
+    assert width.tasks(0, 3) == 1
+    assert width.tasks(5, 1, cap=8) == 5
+    assert width.tasks(100, 1, cap=8) == 8
+
+
+def test_spread_small_width_is_size_derived(spark, tmp_path):
+    """spread_small's fan-out follows the input size (one task per
+    _SPREAD_BYTES_PER_TASK, at least 2) capped at defaultParallelism, so
+    tiny corpora do not fragment into launch-overhead-dominated tasks.
+    The inputs are one-file parquet reads, whose size the optimizer
+    knows; a local checkpoint keeps that estimate.  Only an RDD-built
+    frame reports no size, and takes the exact-count fallback."""
+    dp = spark.sparkContext.defaultParallelism
+    if dp < 3:
+        pytest.skip("a size-derived width below the cap needs 3+ cores")
+    bpt = width._SPREAD_BYTES_PER_TASK
+
+    def parquet(name, rows, hashes):
+        # ``hashes`` distinct 128-hex-char digests per row: no repeats
+        # for the parquet encoders to squeeze out of the file
+        path = str(tmp_path / name)
+        digest = "sha2(cast(id * 100 + i AS STRING), 512)"
+        v = f"concat_ws('', transform(sequence(1, {hashes}), i -> {digest}))"
+        df = spark.range(rows).selectExpr("id AS k", f"{v} AS v")
+        df.coalesce(1).write.parquet(path)
+        return spark.read.parquet(path)
+
+    def spread(df):
+        return width.spread_small(df, "k").rdd.getNumPartitions()
+
+    small = parquet("small", 100, 1)
+    size = width.estimated_bytes(small)
+    expect = max(2, -(-size // bpt))
+    assert expect < dp, (expect, dp, size)
+    assert spread(small) == expect, (spread(small), expect, size)
+    assert spread(small.localCheckpoint(eager=True)) == expect
+
+    big = parquet("big", dp * bpt // 512 + 64, 8)
+    size = width.estimated_bytes(big)
+    assert size >= dp * bpt, (size, dp)
+    assert spread(big) == dp
+
+    # unknown size: the exact partition count is compared with the cores
+    rows = spark.createDataFrame([(i, "x") for i in range(200)], ["k", "v"])
+    assert width.estimated_bytes(rows) is None
+    assert width.spread_small(rows, "k") is rows  # already dp partitions
+    assert spread(rows.coalesce(1)) == dp

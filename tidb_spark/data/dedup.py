@@ -23,27 +23,14 @@ Determinism: all hash constants are fixed; xxhash64 is Spark's stable
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from tidb_spark.operators import width
 
 # 31-bit Mersenne prime: (x mod p)*a + b with a,b,x' < p stays < 2^62,
 # so the universal-hash arithmetic never overflows a signed 64-bit long.
 _MERSENNE_PRIME = (1 << 31) - 1
-
-
-def _parse_byte_size(v) -> int | None:
-    """Bytes for a Spark size conf value — plain ints AND the
-    human-readable forms Spark accepts ('128m', '512MB', '1g');
-    None when unparseable (callers fall back to an exact count)."""
-    import re as _re
-
-    m = _re.match(r"^\s*(\d+)\s*([kmgtp]?)b?\s*$", str(v), _re.IGNORECASE)
-    if not m:
-        return None
-    shift = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
-    return int(m.group(1)) << shift[m.group(2).lower()]
 
 
 #: How many dedup calls' persisted intermediates may stay cached at
@@ -111,73 +98,6 @@ def normalize_text(col: Column) -> Column:
     return F.regexp_replace(F.trim(F.lower(col)), r"\s+", " ")
 
 
-# Spread granularity: one spread task per this many INPUT bytes, capped by
-# the core count.  Tasks cost a fixed scheduler/launch overhead (~1-5 ms
-# JVM, ~5-6 ms with a Python handoff — measured r13, scripts/mm_probe.py
-# method), so fanning a 600 KB corpus to 32 tasks puts more wall into task
-# launches than into the per-row compute the spread exists to parallelize;
-# the r13 in-session A/B read every spread consumer faster or flat with a
-# size-derived width (dedup_simhash 1.67->1.25 s mean, text_tfidf_topterms
-# 1.20->0.73, dedup_lsh_verified 2.94->2.80, 0 regressions over 10
-# queries).  At larger inputs the cores cap keeps the old fan-out, and
-# past maxPartitionBytes*cores the spread never fires at all — the
-# constant changes LOCAL granularity only, and is env-overridable for
-# cluster tuning.
-_SPREAD_BYTES_PER_TASK = (
-    _parse_byte_size(os.environ.get("SPARK_GRAFT_SPREAD_BYTES_PER_TASK", ""))
-    or 48 * 1024
-)
-
-
-def spread_small(df: DataFrame, *keys: str) -> DataFrame:
-    """Repartition a small-file input before heavy per-row compute
-    (explode + hash, codec decode, cosine) — sized by the input, capped by
-    the cores.
-
-    A tiny parquet file arrives as 1 scan partition, so any expensive
-    projection before the first shuffle runs single-threaded — on a cluster
-    a small dimension-ish input serializes the whole stage the same way.
-    Shuffling by the downstream grouping key is doubly useful: the work
-    spreads across cores AND the resulting hash partitioning satisfies the
-    later window/groupBy on that key, so the (much larger) post-explode
-    rowset never shuffles.  The width is ``size / _SPREAD_BYTES_PER_TASK``
-    capped at ``defaultParallelism`` (scale-adaptive in both directions:
-    small corpora don't fragment into launch-overhead-dominated tasks,
-    big ones still use every core).  Skipped when the scan already yields
-    enough partitions — at scale this branch never triggers.
-
-    The smallness probe reads the OPTIMIZER's size estimate instead of
-    ``df.rdd.getNumPartitions()``: ``.rdd`` compiles the physical plan
-    (Catalyst physical planning + Janino codegen, ~0.9 s cold on a wide
-    shingle/minhash projection) just to count scan splits, while
-    ``optimizedPlan().stats()`` stops after logical optimization (~40 ms)
-    — the decision only needs order-of-magnitude.  Inputs with unknown
-    stats (e.g. checkpointed RDD scans report the defaultSizeInBytes
-    sentinel) fall back to the exact partition count and the full-core
-    width."""
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if size >= (1 << 60):  # stats unknown — sentinel default; count exactly
-        parts = df.rdd.getNumPartitions()
-        target = sc.defaultParallelism
-    else:
-        mpb_conf = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        mpb = _parse_byte_size(mpb_conf)
-        if mpb is None:  # unparseable conf — fall back to the exact count
-            parts = df.rdd.getNumPartitions()
-            target = sc.defaultParallelism
-        else:
-            parts = max(1, (size + mpb - 1) // mpb)
-            target = min(
-                sc.defaultParallelism,
-                max(2, (size + _SPREAD_BYTES_PER_TASK - 1) // _SPREAD_BYTES_PER_TASK),
-            )
-    if parts < target:
-        return df.repartition(target, *keys)
-    return df
-
-
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Exact duplicate groups on normalized text.
 
@@ -241,7 +161,7 @@ def shingle_posting(
     normalized = df.select(
         F.col(id_col).alias("doc"), normalize_text(F.col(text_col)).alias("t")
     )
-    normalized = spread_small(normalized, "doc")
+    normalized = width.spread_small(normalized, "doc")
     pos = normalized.select(
         "doc",
         "t",
@@ -967,7 +887,7 @@ def simhash_signatures(
     Same distributed shape as :func:`minhash_signatures`: small expressions,
     map-side combine to one row per doc, shuffle = docs × bits ints."""
     base = df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_txt"))
-    base = spread_small(base, "doc")
+    base = width.spread_small(base, "doc")
     tok = base.select(
         "doc",
         F.explode(F.split(normalize_text(F.col("_txt")), " ")).alias("t"),

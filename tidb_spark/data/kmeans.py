@@ -57,6 +57,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from tidb_spark.operators.width import estimated_bytes
+
 _Q = "__km_q"
 
 # Above this k the exact assign switches from the flat broadcast-crossJoin
@@ -334,16 +336,15 @@ def _assign_ivf(
 def _est_rows(df: DataFrame, dim: int) -> int:
     """Order-of-magnitude row estimate for the update-plan dispatch —
     optimizer stats (logical-plan only, ~ms, same probe as
-    dedup.spread_small), derived from sizeInBytes / row width when the
-    row count itself isn't propagated; one exact count only when stats
-    report the unknown sentinel.  The dispatch threshold has ~100×
+    width.spread_small), derived from the estimated bytes / row width
+    when the row count itself isn't propagated; one exact count only
+    when the size is unknown.  The dispatch threshold has ~100×
     headroom on either side, so order-of-magnitude is enough."""
-    stats = df._jdf.queryExecution().optimizedPlan().stats()
-    rc = stats.rowCount()
+    rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
     if rc.isDefined():
         return int(str(rc.get()))
-    size = int(stats.sizeInBytes())
-    if size >= (1 << 60):  # unknown-stats sentinel — count exactly
+    size = estimated_bytes(df)
+    if size is None:
         return df.count()
     # embedding rows ≈ dim floats (pre-quantize) + id + struct overhead
     return max(1, size // (dim * 8 + 24))

@@ -42,6 +42,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from tidb_spark.operators.width import spread_small, tasks
+
 #: Ids per synthesis task when the caller declares the corpus size.
 #: Sized so per-task encode CPU lands in the tens-to-hundreds of ms
 #: (encoders run ~3-20 ms/id) while avoiding the per-Python-task launch
@@ -67,13 +69,10 @@ def _spread_ids(df: DataFrame, id_col: str, n_ids: int | None) -> DataFrame:
     from the query's own predicate, not the fixture).  Without it,
     fall back to ``spread_small`` (full-corpus synthesis keeps every
     core busy)."""
-    from tidb_spark.data.dedup import spread_small
-
     if n_ids is None:
         return spread_small(df, id_col)
-    sc = df.sparkSession.sparkContext
-    parts = max(1, min(-(-n_ids // _IDS_PER_TASK), sc.defaultParallelism))
-    return df.repartition(parts, id_col)
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(tasks(n_ids, _IDS_PER_TASK, cores), id_col)
 
 
 def _tag_prepartitioned(df: DataFrame) -> DataFrame:
@@ -95,8 +94,6 @@ def _spread_media(media: DataFrame) -> DataFrame:
     """Consumer-side defensive spread: no-op for frames tagged by the
     in-module synthesizers; ``spread_small`` for anything else (a small
     parquet-scanned media table still fans out before the decode)."""
-    from tidb_spark.data.dedup import spread_small
-
     if getattr(media, "_mm_prepartitioned", False):
         return media
     return spread_small(media, "media_id")

@@ -21,6 +21,7 @@ from tidb_spark.data import kmeans as km
 from tidb_spark.data import multimodal as mm
 from tidb_spark.data import similarity as sim
 from tidb_spark.data import text as tx
+from tidb_spark.operators.width import spread_small
 from tidb_spark.queries import register
 
 
@@ -343,7 +344,7 @@ def dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall is the deterministic LSH-collision function of the plane
     constants at the chosen planes, which the generated oracle replays
     bit-exactly via guarded per-setting branches."""
-    emb = dd.spread_small(_t(spark, sf_dir, "embeddings"), "vec_id")
+    emb = spread_small(_t(spark, sf_dir, "embeddings"), "vec_id")
     # Probe the RAW scan, not the spread frame: the bare parquet count is
     # footer metadata, the spread plan would execute its exchange (r12).
     planes = sim.lsh_planes_for(_t(spark, sf_dir, "embeddings").count())
@@ -668,7 +669,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sf1 probe measured it 16× at 10× data.  spread_small lifts the
     single-row-group parquet input to real parallelism, as the rest of
     the text family does."""
-    docs = dd.spread_small(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = spread_small(_t(spark, sf_dir, "documents"), "doc_id")
     langs = sorted(tx.LANG_STOPWORDS)
     scored = docs.select(
         "doc_id",
@@ -757,7 +758,7 @@ def text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     second whole-posting window."""
     docs = _t(spark, sf_dir, "documents")
     w, k = 4, 8
-    normalized = dd.spread_small(
+    normalized = spread_small(
         docs.select(F.col("doc_id"), dd.normalize_text(F.col("text")).alias("t")),
         "doc_id",
     )
@@ -1490,7 +1491,7 @@ def text_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew hazard (the combiner absorbs hot tokens before the shuffle)."""
     docs = _t(spark, sf_dir, "documents")
     tok = (
-        dd.spread_small(
+        spread_small(
             docs.select(dd.normalize_text(F.col("text")).alias("n")), "n"
         )
         .select(F.explode(F.split(F.col("n"), " ")).alias("token"))
@@ -1542,7 +1543,7 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     |distinct terms per doc| rows per key — no global sort anywhere."""
     docs = _t(spark, sf_dir, "documents")
     tok = (
-        dd.spread_small(
+        spread_small(
             docs.select(
                 "doc_id", dd.normalize_text(F.col("text")).alias("n")
             ),
@@ -1601,7 +1602,7 @@ def text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel (per-row explode, no shuffle until the presentation sort);
     output size is input size × ~(1/stride) duplication — the plan at
     100 TB is scan → project → explode → project, zero exchanges."""
-    docs = dd.spread_small(
+    docs = spread_small(
         _t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
     spans = docs.select(
@@ -1672,7 +1673,7 @@ def data_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-aggregates per (source, hash-prefix) ranges; here sources are
     uniform and the plan stays two exchanges total."""
     docs = _t(spark, sf_dir, "documents")
-    d = dd.spread_small(docs.select("doc_id", "source", "text"), "source").select(
+    d = spread_small(docs.select("doc_id", "source", "text"), "source").select(
         "doc_id",
         "source",
         F.size(F.split(dd.normalize_text(F.col("text")), " ")).cast("long").alias("tok"),
@@ -1761,7 +1762,7 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exactly (see data/kmeans.py for the scale contract: k-row
     driver sync per step, broadcast assign, one combined shuffle per
     update — nothing O(n) ever leaves the executors)."""
-    emb = dd.spread_small(_t(spark, sf_dir, "embeddings"), "vec_id")
+    emb = spread_small(_t(spark, sf_dir, "embeddings"), "vec_id")
     assigned = km.kmeans_assignments(
         emb, vec_col="embedding", id_col="vec_id", k=8, iters=2, scale=1000
     )
@@ -1847,7 +1848,7 @@ def text_unigram_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     side is vocabulary-sized, broadcastable far beyond 100 TB corpora."""
     docs = _t(spark, sf_dir, "documents")
     tok = (
-        dd.spread_small(
+        spread_small(
             docs.select("doc_id", dd.normalize_text(F.col("text")).alias("n")),
             "doc_id",
         )
@@ -2050,7 +2051,7 @@ def dedup_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign is O(n·√k) with a √k closure and ONE n-row shuffle per Lloyd
     step.  The oracle (_KM_IVF_CTES) replays the two-level semantics
     bit-exactly — integer distances, lowest-id ties at both levels."""
-    emb = dd.spread_small(_t(spark, sf_dir, "embeddings"), "vec_id")
+    emb = spread_small(_t(spark, sf_dir, "embeddings"), "vec_id")
     # Raw-scan probe (footer metadata), not the spread plan (r12).
     k = max(8, _t(spark, sf_dir, "embeddings").count() // 512)
     assigned = km.kmeans_assignments(
@@ -2137,7 +2138,7 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     the broadcast reverts to a shuffled semi-join on the same key and a
     hot-fingerprint cap (boilerplate spans) bounds the reduce side."""
     k = SUBSTRING_K
-    docs = dd.spread_small(
+    docs = spread_small(
         _t(spark, sf_dir, "documents").select(
             "doc_id", dd.normalize_text(F.col("text")).alias("n")
         ),
@@ -2246,7 +2247,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ranking is a TakeOrderedAndProject.  At 100 TB: same plan — the
     scalar stats row is O(1), the per-doc scoring is embarrassingly
     parallel map work, and the top-k never materializes a global sort."""
-    docs = dd.spread_small(
+    docs = spread_small(
         _t(spark, sf_dir, "documents").select(
             "doc_id", dd.normalize_text(F.col("text")).alias("nrm")
         ),
@@ -2367,7 +2368,7 @@ def dedup_bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     too, and at scale it becomes a shuffled semi-join of the flagged
     remainder only."""
     k = SUBSTRING_K
-    docs = dd.spread_small(
+    docs = spread_small(
         _t(spark, sf_dir, "documents").select(
             "doc_id", "source", dd.normalize_text(F.col("text")).alias("n")
         ),
@@ -2722,7 +2723,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored index is m codes per vector instead of the raw floats."""
     from tidb_spark.data import similarity as sim
 
-    emb = dd.spread_small(_t(spark, sf_dir, "embeddings"), "vec_id")
+    emb = spread_small(_t(spark, sf_dir, "embeddings"), "vec_id")
     return sim.pq_adc_topk(
         emb, vec_col="embedding", id_col="vec_id",
         m=4, k=8, iters=2, scale=1000, n_queries=3, topk=10,
@@ -2854,7 +2855,7 @@ def text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet arrives as one scan split, so the normalize-regex + explode
     # would run single-threaded without it (r9; same fix as the other
     # heavy per-row doc queries).
-    docs = dd.spread_small(_t(spark, sf_dir, "documents"), "doc_id").select(
+    docs = spread_small(_t(spark, sf_dir, "documents"), "doc_id").select(
         "doc_id", F.expr(_BP_INJECT_SPARK).alias("btext")
     )
     out = tx.strip_common_segments(
@@ -3101,7 +3102,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final top-20 is a TakeOrderedAndProject.  At 100 TB the two
     branches dominate and stay embarrassingly parallel; the fused rank
     join never grows past 2×50 rows regardless of corpus size."""
-    docs = dd.spread_small(
+    docs = spread_small(
         _t(spark, sf_dir, "documents").select(
             "doc_id", dd.normalize_text(F.col("text")).alias("nrm")
         ),
@@ -3233,7 +3234,7 @@ def text_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤26² pair space); the argmax is a TakeOrderedAndProject.  At 100 TB
     the occurrence→vocab aggregate is the only data-sized stage and it
     is embarrassingly combinable."""
-    docs = dd.spread_small(
+    docs = spread_small(
         _t(spark, sf_dir, "documents").select(
             "doc_id", dd.normalize_text(F.col("text")).alias("nrm")
         ),
@@ -3394,7 +3395,7 @@ def text_lm_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc aggregate is combinable, and the final ranking is a
     TakeOrderedAndProject.  At 100 TB the model tables are the only
     state and they partition by key like any aggregate."""
-    docs = dd.spread_small(
+    docs = spread_small(
         _t(spark, sf_dir, "documents").select(
             "doc_id", dd.normalize_text(F.col("text")).alias("nrm")
         ),

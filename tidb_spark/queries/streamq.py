@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from tidb_spark.catalog import load_table
+from tidb_spark.operators.width import spread_small
 from tidb_spark.queries import register
 from tidb_spark.streaming import events as ev
 
@@ -106,9 +107,7 @@ def stream_session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-row session state partial no longer runs on one core (r12,
     # guide §2.5 unsplittable input; stats-gated — never fires at
     # cluster scale).
-    import tidb_spark.data.dedup as dd
-
-    df = dd.spread_small(load_table(spark, sf_dir, "events"), "user_id")
+    df = spread_small(load_table(spark, sf_dir, "events"), "user_id")
     return ev.session_agg(df, "30 minutes").orderBy("user_id", "session_start")
 
 

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tidb_spark.catalog import load_table
+from tidb_spark.operators.width import spread_small
 from tidb_spark.queries import register
 
 # Shared SQL fragments: used verbatim via F.expr on the Spark side and spliced
@@ -40,7 +41,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _t_spread(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFrame:
-    """Scan with a stats-gated repartition on ``key`` (dedup.spread_small).
+    """Scan with a stats-gated repartition on ``key`` (``width.spread_small``).
 
     The fixture tables are single-row-group parquet files, so a scan
     yields ONE split and everything pipelined into it (decimal partial
@@ -57,9 +58,7 @@ def _t_spread(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFram
     scan-light queries (q6 0.16 → 0.46 s) and multi-branch self-join
     plans (q21 1.30 → 3.8 s: the per-branch repartitions defeat
     exchange reuse) regress, so they keep the bare scan."""
-    import tidb_spark.data.dedup as dd
-
-    return dd.spread_small(load_table(spark, sf_dir, name), key)
+    return spread_small(load_table(spark, sf_dir, name), key)
 
 
 def _ts(s: str) -> str:

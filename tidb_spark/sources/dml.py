@@ -11,9 +11,9 @@ one DataFrame and writes it as the next version, ``v<N>/`` under the table
 root.  A version directory is self-describing: ``_schema.json`` (the
 frame's StructType, so every read takes it instead of running a schema-
 inference job) beside zero or more parquet files — none for an empty
-version, which costs no Spark job.  The data is coalesced to
-ceil(estimated bytes / ``spark.sql.files.maxPartitionBytes``) files, so one
-file is one scan split; the rule only lowers the width, never shuffles.
+version, which costs no Spark job.  The data is coalesced by the shared
+width rule (``operators.width``) to one file per scan split of estimated
+bytes; the rule only lowers the width, never shuffles.
 The commit point is the file ``v<N>.commit_ts``, written to a tmp
 file and renamed into place once the data is complete: the current version
 is the newest one with a commit ts, so readers of an older version are
@@ -45,6 +45,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from tidb_spark.operators.width import estimated_bytes, split_bytes, tasks
 from tidb_spark.sqlshim.partition import PART_COL
 
 _TS = ".commit_ts"  # v<N>.commit_ts: version N's commit point
@@ -267,22 +268,22 @@ class ManagedTable:
     def _width(self, df: DataFrame) -> int | None:
         """Files for ``df``'s version: 0 when the OPTIMIZER proves it empty
         (a LocalRelation with no rows — createDataFrame([], schema), or a
-        plan constant-folded to empty), else ceil(estimated bytes /
-        maxPartitionBytes).  None when the size is unknown (a LogicalRDD
-        estimates Long.MaxValue): the plan keeps its own width.
-        Driver-only: no job."""
+        plan constant-folded to empty), else one per scan split of the
+        estimated bytes.  None when the size is unknown (a LogicalRDD), or
+        past the JVM Int ``coalesce`` takes (a join estimates the product
+        of its sides): the plan keeps its own width.  Driver-only: no job."""
         try:
             plan = df._jdf.queryExecution().optimizedPlan()
             if plan.getClass().getSimpleName() == "LocalRelation":
                 if plan.data().isEmpty():
                     return 0
-            size = int(str(plan.stats().sizeInBytes()))
-            conf = self.spark._jsparkSession.sessionState().conf()
-            split = conf.filesMaxPartitionBytes()
+            size = estimated_bytes(df)
+            split = split_bytes(self.spark)
         except Exception:
             return None
-        width = max(1, -(-size // split))
-        return width if width < 2**31 - 1 else None
+        if size is None or (width := tasks(size, split)) >= 2**31 - 1:
+            return None
+        return width
 
     def write(self, df: DataFrame, *, known_empty: bool = False) -> None:
         """Commit ``df`` as the next version: the table's full new
