@@ -274,6 +274,31 @@ def test_generated_columns(engine):
     assert r.full == "A T"
 
 
+@pytest.mark.parametrize(
+    "ddl, want",
+    [
+        (
+            "CREATE TABLE g3 (a VARCHAR(10), "
+            "b VARCHAR(20) AS (CONCAT(a, ')')) STORED, c INT)",
+            "x)",
+        ),
+        (
+            "CREATE TABLE g3 (a VARCHAR(10), "
+            "b VARCHAR(20) AS (CONCAT(a, '(')) STORED, c INT)",
+            "x(",
+        ),
+    ],
+)
+def test_generated_expr_paren_in_literal(engine, ddl, want):
+    """A paren inside a string literal of a generated-column expression is
+    text: the expression ends at its own closing paren, so CREATE stores
+    the whole expression and INSERT evaluates it."""
+    engine.sql(ddl)
+    engine.sql("INSERT INTO g3 VALUES ('x', 1)")
+    r = engine.sql("SELECT a, b, c FROM g3").collect()[0]
+    assert (r.a, r.b, r.c) == ("x", want, 1)
+
+
 def test_auto_increment(engine):
     """AUTO_INCREMENT (ddl/ddl_api.go:2463 handleAutoIncID): NULL/omitted
     values get sequential ids continuing from MAX(col); explicit values

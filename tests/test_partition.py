@@ -254,3 +254,16 @@ def test_connected_components_star_algorithm(spark):
     clusters = duplicate_clusters(edges).collect()
     sizes = {(r["doc_id"], r["canonical_id"], r["cluster_size"]) for r in clusters}
     assert (6, 1, 6) in sizes and (12, 10, 3) in sizes and (21, 20, 2) in sizes
+
+
+def test_split_partition_clause_skips_quoted_spans():
+    """The clause is found by the shared lexer: a quote inside a backtick
+    identifier does not open a string, and a PARTITION BY inside a literal
+    or an identifier is not the clause."""
+    sql = "CREATE TABLE p (a INT, `b'` INT) PARTITION BY HASH(a) PARTITIONS 4"
+    assert pt.split_partition_clause(sql) == (
+        "CREATE TABLE p (a INT, `b'` INT)",
+        "PARTITION BY HASH(a) PARTITIONS 4",
+    )
+    sql = "CREATE TABLE q (a INT) COMMENT 'PARTITION BY HASH(a)'"
+    assert pt.split_partition_clause(sql) == (sql, None)

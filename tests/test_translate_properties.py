@@ -11,11 +11,12 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from tidb_spark.sqlshim.translate import _split_segments, translate
+from tidb_spark.sqlshim import lex
+from tidb_spark.sqlshim.translate import translate
 
 
 def _code_parens(sql: str) -> tuple[int, int]:
-    code = "".join(t for is_code, t in _split_segments(sql) if is_code)
+    code = "".join(t for is_code, t in lex.segments(sql) if is_code)
     return code.count("("), code.count(")")
 
 # Literal payloads that look like rewrite targets.
@@ -255,8 +256,6 @@ def test_prepare_binding_matches_inline(_fuzz_engine, sp):
         eng.sql("DEALLOCATE PREPARE fuzz_stmt")
     # Expected binding: left-to-right over CODE segments only (a '?'
     # inside a string literal is payload, not a parameter).
-    from tidb_spark.sqlshim.translate import _map_code
-
     it = iter(str(v) for v in vals)
 
     def bind(code: str) -> str:
@@ -264,7 +263,7 @@ def test_prepare_binding_matches_inline(_fuzz_engine, sp):
 
         return _re.sub(r"\?", lambda _m: next(it), code)
 
-    want = eng.sql(_map_code(stmt, bind)).collect()[0]
+    want = eng.sql(lex.map_code(stmt, bind)).collect()[0]
     assert list(got) == list(want), (stmt, vals)
 
 
@@ -442,3 +441,80 @@ def test_fulltext_boolean_lowering_properties(req, proh, opt, col):
     assert out.rstrip().endswith("> 0)")
     if req or proh:
         assert "CASE WHEN" in out
+
+
+# ---------------------------------------------------------------------------
+# The lexer (sqlshim/lex.py): one rule for literals, backtick identifiers
+# and paren depth.  Quoted spans below hold parens, commas, keywords and
+# the other quote kinds; a scan must give the same offsets on a statement
+# as on its literal mask.
+
+_code_tok = st.sampled_from(
+    ["(", ")", ",", " ", "a", "f(", "x.y", "1", " WHERE ", " UNION ", "SELECT "]
+)
+_inner = ["(", ")", ",", " WHERE ", "UNION", "a"]
+
+
+def _quoted(q: str, extra: list[str]):
+    return st.lists(st.sampled_from(_inner + extra), max_size=6).map(
+        lambda parts: q + "".join(parts) + q
+    )
+
+
+_fragments = st.lists(
+    st.one_of(
+        _code_tok,
+        _quoted("'", ['"', "`", "\\'", "''"]),
+        _quoted('"', ["'", "`", '\\"']),
+        _quoted("`", ["'", '"']),
+    ),
+    max_size=25,
+).map("".join)
+
+
+def _code_opens(s: str) -> list[int]:
+    """Offsets of the ``(`` that are code, not quoted text."""
+    out, off = [], 0
+    for is_code, text in lex.segments(s):
+        if is_code:
+            out += [off + j for j, c in enumerate(text) if c == "("]
+        off += len(text)
+    return out
+
+
+def _outcome(fn, *args):
+    try:
+        return fn(*args)
+    except ValueError:
+        return ValueError
+
+
+@given(s=_fragments)
+@settings(max_examples=300, deadline=None)
+def test_lexer_agrees_with_its_mask(s):
+    masked = lex.mask(s)
+    assert "".join(text for _, text in lex.segments(s)) == s
+    assert len(masked) == len(s)
+    opens = _code_opens(s)
+    for i in opens:
+        assert _outcome(lex.find_closing, s, i) == _outcome(
+            lex.find_closing, masked, i
+        )
+    for sep in (",", "WHERE", "UNION"):
+        assert [len(p) for p in lex.split_top_level(s, sep)] == [
+            len(p) for p in lex.split_top_level(masked, sep)
+        ]
+    for start in [0] + [i + 1 for i in opens]:
+        assert [m.span() for m in lex.top_level(s, r"WHERE\b|UNION\b", start)] == [
+            m.span() for m in lex.top_level(masked, r"WHERE\b|UNION\b", start)
+        ]
+
+
+def test_lexer_skips_keyword_in_backticks():
+    sql = "UPDATE t SET a = `w WHERE` WHERE b = ')'"
+    assert lex.split_top_level(sql, "WHERE") == [
+        "UPDATE t SET a = `w WHERE` ",
+        " b = ')'",
+    ]
+    assert lex.find_closing("f(`)`, ')', \"(\")", 1) == 15
+    assert lex.split_args("a, f(b, ','), `c,d`,") == ["a", "f(b, ',')", "`c,d`"]

@@ -26,6 +26,7 @@ from tidb_spark.functions.mysql import register_shim_udfs
 from tidb_spark.graph.model import GraphSchema, default_graph
 from tidb_spark.graph.shortest import all_shortest, any_shortest, top_k_shortest
 from tidb_spark.sources.dml import ManagedTable
+from tidb_spark.sqlshim import lex
 from tidb_spark.sqlshim import match_clause as mc
 from tidb_spark.sqlshim import merge_clause
 from tidb_spark.sqlshim.translate import translate
@@ -715,7 +716,6 @@ class Engine:
         schema."""
         m = re.match(r"(?is)^\s*ALTER\s+TABLE\s+`?(\w+)`?\s+(.*?)\s*;?\s*$", query)
         name, body = m.group(1), m.group(2)
-        from tidb_spark.sqlshim.translate import _split_args
         from tidb_spark.sqlshim import create_table as ctmod
 
         if re.match(
@@ -724,7 +724,7 @@ class Engine:
             self._run_alter_partition(name, body)
             return
 
-        clauses = [c.strip() for c in _split_args(body)]
+        clauses = lex.split_args(body)
 
         # Graph-ify: exactly two MODIFY clauses carrying SOURCE/DESTINATION.
         mods = [
@@ -829,7 +829,6 @@ class Engine:
         copy-on-write: the surviving directories are read, the dropped
         ones never scanned."""
         from tidb_spark.sqlshim import partition as pt
-        from tidb_spark.sqlshim.translate import _split_args
 
         if name not in self.managed or self.managed[name].partition_spec is None:
             raise ValueError(f"table {name!r} is not partitioned")
@@ -846,7 +845,7 @@ class Engine:
                     "rows; use the reference's COALESCE/ADD rebalance "
                     "(unsupported)"
                 )
-            for item in _split_args(am.group(1)):
+            for item in lex.split_args(am.group(1)):
                 item = item.strip()
                 if spec.method == "RANGE":
                     pm = pt._RANGE_PART_RE.match(item)
@@ -866,7 +865,7 @@ class Engine:
                     if pm is None:
                         raise ValueError(f"bad partition def: {item!r}")
                     new_vals = [
-                        v.strip() for v in _split_args(pm.group("vals"))
+                        v.strip() for v in lex.split_args(pm.group("vals"))
                     ]
                     existing = {
                         pt._parse_literal(str(v))
@@ -1032,10 +1031,8 @@ class Engine:
             elif setm:
                 # INSERT INTO t SET a = 1, b = 'x' (MySQL alternative
                 # single-row form, parser/ast/dml.go Setlist).
-                from tidb_spark.sqlshim.translate import _split_args
-
                 cols, exprs = [], []
-                for frag in _split_args(setm.group(1)):
+                for frag in lex.split_args(setm.group(1)):
                     col, expr = frag.split("=", 1)
                     cols.append(col.strip().strip("`"))
                     exprs.append(expr.strip())
@@ -1078,10 +1075,8 @@ class Engine:
                 # the existing one — new_value()'s prefixed name implements
                 # the former.
                 from tidb_spark.sources.dml import _NEW_PREFIX
-                from tidb_spark.sqlshim.translate import _split_args
-
                 assignments = {}
-                for frag in _split_args(odku):
+                for frag in lex.split_args(odku):
                     col, expr = frag.split("=", 1)
                     assignments[col.strip().strip("`")] = F.expr(
                         _VALUES_REF_RE.sub(
@@ -1098,15 +1093,13 @@ class Engine:
             # Top-level-aware split: a WHERE inside a string literal or a
             # parenthesized subquery must not terminate the SET list
             # (e.g. SET note = 'WHERE x').
-            parts = merge_clause._split_top_level(body, "WHERE")
+            parts = lex.split_top_level(body, "WHERE")
             if len(parts) > 2:
                 raise ValueError("UPDATE: multiple top-level WHERE clauses")
             where = F.expr(parts[1]) if len(parts) == 2 else F.lit(True)
             set_part = parts[0]
-            from tidb_spark.sqlshim.translate import _split_args
-
             assignments = {}
-            for frag in _split_args(set_part):  # string/paren-aware commas
+            for frag in lex.split_args(set_part):  # string/paren-aware commas
                 col, expr = frag.split("=", 1)
                 cname = col.strip().strip("`")
                 if cname in mt.generated:
@@ -1132,8 +1125,6 @@ class Engine:
         assignment expressions see the joined row.  Executes as: one SQL
         join producing (key, new values), then one keyed MERGE — two
         shuffles total, no driver-side rows."""
-        from tidb_spark.sqlshim.translate import _split_args
-
         hm = re.match(r"(?is)^\s*`?(?P<tab>\w+)`?(?:\s+(?:AS\s+)?"
                       r"(?P<alias>(?!JOIN\b|INNER\b|LEFT\b|RIGHT\b)\w+))?",
                       head)
@@ -1144,12 +1135,12 @@ class Engine:
             raise ValueError(
                 f"multi-table UPDATE requires a PRIMARY KEY on {name!r}"
             )
-        parts = merge_clause._split_top_level(tail, "WHERE")
+        parts = lex.split_top_level(tail, "WHERE")
         if len(parts) > 2:
             raise ValueError("UPDATE: multiple top-level WHERE clauses")
         set_list, where = parts[0], parts[1] if len(parts) == 2 else "TRUE"
         assignments: dict[str, str] = {}
-        for frag in _split_args(set_list):
+        for frag in lex.split_args(set_list):
             col, expr = frag.split("=", 1)
             cname = col.strip().strip("`")
             if "." in cname:
@@ -1405,7 +1396,7 @@ class Engine:
             and self._lower_capture is None
             and _CACHEABLE_HEAD_RE.match(query)
         ):
-            masked = merge_clause._STRING_RE.sub("''", query)
+            masked = lex.mask(query)
             stmt_cacheable = not (
                 _CACHE_SKIP_RE.search(masked) or _STMT_CACHE_SKIP_RE.search(masked)
             )
@@ -1421,7 +1412,7 @@ class Engine:
         # string literal that merely contains text like 'NEXTVAL(s)' must
         # not trigger substitution or the INSERT…SELECT rejection.
         if self.sequences:
-            seq_masked = merge_clause._STRING_RE.sub("''", query)
+            seq_masked = lex.mask(query)
             if _SEQ_FUNC_RE.search(seq_masked):
                 if _SEQ_INSERT_SELECT_RE.match(seq_masked):
                     # Literal splicing would stamp every SELECT row with
@@ -1449,7 +1440,7 @@ class Engine:
         if out is not None:
             return out
         query = self._rewrite_infoschema(query)
-        if _QUERY_EXPANSION_RE.search(merge_clause._STRING_RE.sub("''", query)):
+        if _QUERY_EXPANSION_RE.search(lex.mask(query)):
             query = self._expand_fulltext_query(query)
         query = translate(query)
         out = self._dispatch(_AFTER_TRANSLATE, query)
@@ -1458,7 +1449,7 @@ class Engine:
         # Parser-routed forms: their match is not a single regex.
         um = _UPDATE_RE.match(query)
         if um:
-            head_tail = merge_clause._split_top_level(um.group("rest"), "SET")
+            head_tail = lex.split_top_level(um.group("rest"), "SET")
             if len(head_tail) == 2 and _JOIN_RE.search(head_tail[0]):
                 return self._run_multi_update(head_tail[0], head_tail[1])
         ms = merge_clause.parse(query)
@@ -1475,11 +1466,11 @@ class Engine:
         query = self._rewrite_partition_selection(query)
         query = self._apply_static_pruning(query)
         query = self._apply_ci_collation(query)
-        if _JSON_TABLE_GATE_RE.search(merge_clause._STRING_RE.sub("''", query)):
+        if _JSON_TABLE_GATE_RE.search(lex.mask(query)):
             from tidb_spark.sqlshim import json_table as _jt
 
             query = _jt.lower(query)
-        if _QUANTIFIED_RE.search(merge_clause._STRING_RE.sub("''", query)):
+        if _QUANTIFIED_RE.search(lex.mask(query)):
             from tidb_spark.sqlshim import quantified as _qt
 
             query = _qt.lower(query)
@@ -1685,9 +1676,7 @@ class Engine:
         side; MySQL SELECT ... INTO var_list).  Matched against a
         length-preserving literal mask so an INTO inside a string can't
         trigger, then sliced from the original text."""
-        masked = merge_clause._STRING_RE.sub(
-            lambda m: "'" + " " * (len(m.group(0)) - 2) + "'", query
-        )
+        masked = lex.mask(query)
         m = self._INTO_VARS_RE.match(masked)
         if m is None:
             return None
@@ -1783,9 +1772,7 @@ class Engine:
         anything else raises loudly."""
         from tidb_spark.sqlshim import fulltext as _ft
 
-        destrung = merge_clause._STRING_RE.sub(
-            lambda m: "'" + " " * (len(m.group(0)) - 2) + "'", query
-        )
+        destrung = lex.mask(query)
         froms = re.findall(r"(?is)\bFROM\s+(`?\w+`?)(?:\s|$)", destrung)
         tables = {f.strip("`") for f in froms}
         if len(tables) != 1 or re.search(r"(?is)\bJOIN\b", destrung):
@@ -1800,14 +1787,14 @@ class Engine:
             if m is None:
                 return query
             open_idx = query.index("(", m.end() - 1)
-            close_idx = _ft._find_closing(query, open_idx)
+            close_idx = lex.find_closing(query, open_idx)
             after = query[close_idx + 1 :]
             ag = re.match(r"(?is)^\s*AGAINST\s*\(", after)
             if not ag:
                 pos = close_idx + 1
                 continue
             ag_open = close_idx + 1 + ag.end() - 1
-            ag_close = _ft._find_closing(query, ag_open)
+            ag_close = lex.find_closing(query, ag_open)
             against = query[ag_open + 1 : ag_close]
             am = re.match(
                 r"(?is)^\s*(?P<q>'(?:[^'\\]|\\.|'')*')\s*(?P<mod>.*)$", against
@@ -2050,7 +2037,7 @@ class Engine:
             lits.append(m.group(0))
             return f"\x00{len(lits) - 1}\x00"
 
-        masked = merge_clause._STRING_RE.sub(stash, query)
+        masked = lex.STRING_RE.sub(stash, query)
         masked = self._ci_rewrite_block(masked, {})
         return re.sub(
             r"\x00(\d+)\x00", lambda m: lits[int(m.group(1))], masked
@@ -2080,15 +2067,7 @@ class Engine:
                 out.append(text[i:])
                 break
             out.append(text[i : m.start()])
-            depth, j = 0, m.start()
-            while j < len(text):
-                if text[j] == "(":
-                    depth += 1
-                elif text[j] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
+            j = lex.find_closing(text, m.start())
             inner = text[m.start() + 1 : j]
             subs.append(inner)
             out.append(f"(\x02{len(subs) - 1}\x02)")
@@ -2312,7 +2291,14 @@ class Engine:
         # GROUP BY and SELECT list — pairing the statement's last
         # GROUP BY with its first SELECT list would mis-rewrite both.
         pieces: list[str] = []
-        for seg in self._split_depth0_setops(residue):
+        cuts = [0] + [
+            m.start()
+            for m in lex.top_level(
+                residue, r"(?:UNION|INTERSECT|EXCEPT|MINUS)\b"
+            )
+        ]
+        for lo, hi in zip(cuts, cuts[1:] + [len(residue)]):
+            seg = residue[lo:hi]
             gspan = self._last_top_level_clause(
                 seg, r"GROUP\s+BY\s+", r"HAVING|ORDER|LIMIT|WINDOW"
             )
@@ -2372,24 +2358,14 @@ class Engine:
         if not sm:
             return residue
         # span: SELECT list ends at the first top-level FROM
-        depth, j = 0, sm.end()
-        while j < len(residue):
-            c = residue[j]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif (
-                depth == 0
-                and residue[j : j + 4].upper() == "FROM"
-                and not (residue[j - 1].isalnum() or residue[j - 1] == "_")
-            ):
-                break
-            j += 1
+        fm = next(lex.top_level(residue, r"FROM\b", sm.end()), None)
+        j = fm.start() if fm else len(residue)
         sel = residue[sm.end() : j]
         for q, col in set(folded):
             tok = (f"{q}." if q else "") + col
-            # only depth-0 bare occurrences (not inside an aggregate)
+            # only depth-0 bare occurrences (not inside an aggregate).
+            # Hand-written: each occurrence is rewritten in place with its
+            # neighbours in view, which lex.top_level does not offer.
             parts: list[str] = []
             depth = 0
             k = 0
@@ -2437,81 +2413,18 @@ class Engine:
         return residue[: sm.end()] + sel + residue[j:]
 
     @staticmethod
-    def _split_depth0_setops(text: str) -> list[str]:
-        """Split ``text`` at depth-0 set-operator keywords (UNION /
-        INTERSECT / EXCEPT / MINUS); each keyword starts the following
-        segment, so ``"".join(result) == text``.  String literals must
-        already be masked (a keyword inside a literal would otherwise
-        split)."""
-        kw = re.compile(r"(?is)(?:UNION|INTERSECT|EXCEPT|MINUS)\b")
-        cuts: list[int] = []
-        depth = 0
-        for i, c in enumerate(text):
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif depth == 0 and c in "UIEMuiem":
-                boundary = i == 0 or not (
-                    text[i - 1].isalnum() or text[i - 1] in "_."
-                )
-                if boundary and kw.match(text, i):
-                    cuts.append(i)
-        segs: list[str] = []
-        prev = 0
-        for i in cuts:
-            segs.append(text[prev:i])
-            prev = i
-        segs.append(text[prev:])
-        return segs
-
-    @staticmethod
     def _last_top_level_clause(
         text: str, clause: str, stop: str
     ) -> tuple[int, int] | None:
         """(start, end) of the body of the LAST depth-0 ``clause``
         (regex, e.g. ``ORDER\\s+BY\\s+``), ending at a depth-0 ``stop``
-        keyword or end-of-text; None if absent.  ``text`` must already
-        have string literals masked."""
-        ob = re.compile(f"(?is){clause}")
-        stop_re = re.compile(rf"(?is)\b(?:{stop})\b")
-        depth, i, best = 0, 0, None
-        first = {clause[0].upper(), clause[0].lower()}
-        while i < len(text):
-            c = text[i]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif depth == 0 and c in first:
-                boundary = i == 0 or not (
-                    text[i - 1].isalnum() or text[i - 1] in "_."
-                )
-                m = ob.match(text, i)
-                if boundary and m:
-                    best = m.end()
-                    i = m.end()
-                    continue
-            i += 1
-        if best is None:
+        keyword or end-of-text; None if absent."""
+        clauses = list(lex.top_level(text, clause))
+        if not clauses:
             return None
-        depth, j = 0, best
-        while j < len(text):
-            c = text[j]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif depth == 0:
-                m = stop_re.match(text, j)
-                if m and not (
-                    text[j - 1].isalnum() or text[j - 1] == "_"
-                ):
-                    break
-            j += 1
-        return (best, j)
+        best = clauses[-1].end()
+        end = next(lex.top_level(text, rf"(?:{stop})\b", best), None)
+        return best, end.start() if end else len(text)
 
     def _inject_hints(self, query: str, hints: list[str]) -> str:
         """Re-emit surviving hints as a Spark hint comment after the first
@@ -2521,10 +2434,10 @@ class Engine:
         referencing unknown relations — or inside a string literal."""
         if not hints:
             return query
-        parts = merge_clause._split_top_level(query, "SELECT")
-        if len(parts) < 2:
+        first = next(lex.top_level(query, r"SELECT\b"), None)
+        if first is None:
             return query
-        pos = len(parts[0])  # first top-level SELECT keyword starts here
+        pos = first.start()
         return (
             query[:pos]
             + "SELECT /*+ "
@@ -2752,8 +2665,6 @@ class Engine:
         Slow path (miss or uncacheable): bind ``?`` placeholders
         positionally and run the full pipeline, attempting to populate the
         cache for next time."""
-        from tidb_spark.sqlshim.translate import _map_code
-
         name = m.group("name")
         if name not in self.prepared:
             # executor/prepared.go ErrStmtNotFound
@@ -2771,7 +2682,7 @@ class Engine:
                     )
                 vals.append(self.user_vars.get(av.group(1), "NULL"))
         counts: list[int] = []
-        _map_code(text, lambda code: counts.append(code.count("?")) or code)
+        lex.map_code(text, lambda code: counts.append(code.count("?")) or code)
         n_params = sum(counts)
         if n_params != len(vals):
             # executor/prepared.go ErrWrongParamCount
@@ -2783,13 +2694,13 @@ class Engine:
         # always-correct slow path runs.
         it = iter(vals)
         literal_text = (
-            _map_code(text, lambda code: re.sub(r"\?", lambda _m: next(it), code))
+            lex.map_code(text, lambda code: re.sub(r"\?", lambda _m: next(it), code))
             if vals
             else text
         )
 
         def bind_markers(lowered: str) -> str:
-            return _map_code(
+            return lex.map_code(
                 lowered,
                 lambda code: re.sub(
                     r":p(\d+)\b", lambda pm: vals[int(pm.group(1))], code
@@ -2876,15 +2787,13 @@ class Engine:
         mismatch, a rewrite consumed/errored on a marker, or the statement
         never reached the plain spark.sql sink — each a reference
         skip-plan-cache reason, plan_cacheable_checker.go)."""
-        from tidb_spark.sqlshim.translate import _map_code
-
-        masked = merge_clause._STRING_RE.sub("''", text)
+        masked = lex.mask(text)
         if not _CACHEABLE_HEAD_RE.match(masked) or _CACHE_SKIP_RE.search(
             masked
         ):
             return None
         counter = itertools.count()
-        marked = _map_code(
+        marked = lex.map_code(
             text,
             lambda code: re.sub(r"\?", lambda _m: f":p{next(counter)}", code),
         )
@@ -2892,7 +2801,7 @@ class Engine:
         if lowered is None:
             return None
         found: set[int] = set()
-        _map_code(
+        lex.map_code(
             lowered,
             lambda code: (
                 found.update(int(g) for g in re.findall(r":p(\d+)\b", code))
@@ -2924,7 +2833,7 @@ class Engine:
         )
         counter = itertools.count()
         s = re.sub(
-            merge_clause._STRING_RE.pattern + "|" + _NUM_LIT_RE.pattern,
+            lex.STRING_RE.pattern + "|" + _NUM_LIT_RE.pattern,
             lambda m: f":b{next(counter)}",
             s,
         )
@@ -2953,7 +2862,7 @@ class Engine:
         # which only exist outside strings) — the alternation must let
         # the string match swallow it.
         s = re.sub(
-            merge_clause._STRING_RE.pattern
+            lex.STRING_RE.pattern
             + r"|:p\d+\b|"
             + _NUM_LIT_RE.pattern,
             lambda m: (lits.append(m.group(0)) or "?"),
@@ -3083,8 +2992,6 @@ class Engine:
         statement — so a multi-row ``INSERT … VALUES (NEXTVAL(s), …),
         (NEXTVAL(s), …)`` numbers each row, matching the reference's
         per-row evaluation for the statement shapes the engine accepts."""
-        from tidb_spark.sqlshim.translate import _map_code
-
         def sub(code: str) -> str:
             def repl(fm: re.Match) -> str:
                 seq = fm.group("seq")
@@ -3108,7 +3015,7 @@ class Engine:
 
             return _SEQ_FUNC_RE.sub(repl, code)
 
-        return _map_code(query, sub)
+        return lex.map_code(query, sub)
 
     def _run_seq_insert_select(self, query: str) -> DataFrame:
         """NEXTVAL per-row allocation inside INSERT/REPLACE … SELECT
@@ -3132,9 +3039,7 @@ class Engine:
         written (statement-atomic, ErrSequenceRunOut).  LASTVAL splices
         the pre-statement session value; SETVAL per source row is
         rejected (last-writer-wins noise, no reference use case)."""
-        from tidb_spark.sqlshim.translate import _map_code
-
-        masked = merge_clause._STRING_RE.sub("''", query)
+        masked = lex.mask(query)
         for fm in _SEQ_FUNC_RE.finditer(masked):
             if fm.group("fn").upper() == "SETVAL":
                 raise ValueError(
@@ -3179,7 +3084,7 @@ class Engine:
                 return f"__SEQ_SITE__{seq}__{j}__"
             return _SEQ_FUNC_RE.sub(repl, code)
 
-        rewritten = _map_code(query, index_sites)
+        rewritten = lex.map_code(query, index_sites)
         if not sites:  # LASTVAL-only statement: nothing row-dependent
             return self.sql(rewritten)
 
@@ -3188,7 +3093,7 @@ class Engine:
         # nothing); the reference instead pre-reserves allocator cache
         # batches per chunk — same idea, reservation before write.
         n = self.sql(
-            _map_code(sel, lambda code: _SEQ_FUNC_RE.sub("0", code))
+            lex.map_code(sel, lambda code: _SEQ_FUNC_RE.sub("0", code))
         ).count()
 
         rn = "(ROW_NUMBER() OVER (ORDER BY 1) - 1)"
@@ -3270,8 +3175,6 @@ class Engine:
         observability vars @@last_plan_from_cache and the SHOW VARIABLES
         defaults).  Unknown sysvars raise like MySQL ER_UNKNOWN_SYSTEM_VAR
         rather than silently reading NULL."""
-        from tidb_spark.sqlshim.translate import _map_code
-
         if "@" not in query:
             return query
 
@@ -3311,7 +3214,7 @@ class Engine:
                 lambda vm: self.user_vars.get(vm.group(1), "NULL"), code
             )
 
-        return _map_code(query, lambda code: sub(sys_sub(code)))
+        return lex.map_code(query, lambda code: sub(sys_sub(code)))
 
     def checksum(self, table: str) -> DataFrame:
         """ADMIN CHECKSUM TABLE (executor/checksum.go:39): one

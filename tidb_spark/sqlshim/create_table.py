@@ -20,7 +20,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from tidb_spark.sqlshim.translate import _split_args
+from tidb_spark.sqlshim import lex
 
 _CREATE_RE = re.compile(
     r"(?is)^\s*CREATE\s+TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
@@ -189,7 +189,7 @@ def parse(sql: str) -> CreateTableStmt | None:
     )
     if part_text is not None:
         stmt.partition_spec = _part.parse_spec(part_text)
-    for item in _split_args(m.group("body")):
+    for item in lex.split_args(m.group("body")):
         item = item.strip()
         if not item:
             continue
@@ -230,18 +230,14 @@ def parse(sql: str) -> CreateTableStmt | None:
                 )
         gm = re.search(r"(?is)\b(?:GENERATED\s+ALWAYS\s+)?AS\s*\(", rest)
         if gm:
-            # Balanced-paren scan: the generation expression may nest calls.
-            depth, i = 1, gm.end()
-            while i < len(rest) and depth:
-                if rest[i] == "(":
-                    depth += 1
-                elif rest[i] == ")":
-                    depth -= 1
-                i += 1
-            if depth:
-                raise ValueError(f"unbalanced generated-column expr: {item!r}")
-            col.generated_expr = rest[gm.end() : i - 1].strip()
-            tail = rest[i:]
+            try:
+                close = lex.find_closing(rest, gm.end() - 1)
+            except ValueError:
+                raise ValueError(
+                    f"unbalanced generated-column expr: {item!r}"
+                ) from None
+            col.generated_expr = rest[gm.end() : close].strip()
+            tail = rest[close + 1 :]
             col.generated_stored = bool(re.match(r"(?is)^\s*STORED\b", tail))
         colm = re.search(r"(?is)\bCOLLATE\s+`?(\w+)`?", rest)
         if colm:
@@ -252,7 +248,7 @@ def parse(sql: str) -> CreateTableStmt | None:
             # the reference (types/enum.go ParseEnumName over a fixed list).
             vals = tuple(
                 v.strip().strip("'\"")
-                for v in _split_args(cm.group("params") or "")
+                for v in lex.split_args(cm.group("params") or "")
                 if v.strip()
             )
             if not vals:

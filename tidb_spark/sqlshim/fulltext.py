@@ -47,8 +47,9 @@ from __future__ import annotations
 
 import re
 
+from tidb_spark.sqlshim import lex
+
 _MATCH_RE = re.compile(r"(?is)\bMATCH\s*\(")
-_STRING_RE = re.compile(r"'(?:[^'\\]|\\.|'')*'")
 _MODE_RE = re.compile(
     r"(?is)^\s*IN\s+(?P<mode>NATURAL\s+LANGUAGE|BOOLEAN)\s+MODE"
     r"(?P<exp>\s+WITH\s+QUERY\s+EXPANSION)?\s*$"
@@ -57,24 +58,6 @@ _MODE_RE = re.compile(
 
 # Characters with meaning in Java regex that must be escaped inside a term.
 _REGEX_META = re.compile(r"([.^$|?*+\[\]{}()\\])")
-
-
-def _find_closing(sql: str, open_idx: int) -> int:
-    depth, i = 0, open_idx
-    while i < len(sql):
-        c = sql[i]
-        if c == "'":
-            m = _STRING_RE.match(sql, i)
-            i = m.end() if m else i + 1
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise ValueError("MATCH: unbalanced parentheses")
 
 
 def _term_regex(term: str, prefix_wildcard: bool) -> str:
@@ -111,6 +94,8 @@ class _BNode:
 
 
 def _parse_bool_nodes(q: str, i: int = 0, depth: int = 0) -> tuple[list["_BNode"], int]:
+    # Hand-written: this is the boolean-mode grammar inside the AGAINST
+    # literal, not SQL, so ``lex`` has no say in it.
     nodes: list[_BNode] = []
     while i < len(q):
         c = q[i]
@@ -285,28 +270,20 @@ def lower(sql: str) -> str:
     """
     pos = 0
     while True:
-        m = None
-        for cand in _MATCH_RE.finditer(sql, pos):
-            # Skip candidates inside string literals: recompute literal
-            # spans against the current text (it changes per rewrite).
-            in_literal = any(
-                lm.start() < cand.start() < lm.end()
-                for lm in _STRING_RE.finditer(sql)
-            )
-            if not in_literal:
-                m = cand
-                break
+        # Literal spans are re-read from the current text (it changes per
+        # rewrite).
+        m = next(lex.code_matches(_MATCH_RE, sql, pos), None)
         if m is None:
             return sql
         open_idx = sql.index("(", m.end() - 1)
-        close_idx = _find_closing(sql, open_idx)
+        close_idx = lex.find_closing(sql, open_idx)
         after = sql[close_idx + 1 :]
         ag = re.match(r"(?is)^\s*AGAINST\s*\(", after)
         if not ag:
             pos = close_idx + 1
             continue
         ag_open = close_idx + 1 + ag.end() - 1
-        ag_close = _find_closing(sql, ag_open)
+        ag_close = lex.find_closing(sql, ag_open)
         cols = [
             c.strip().strip("`")
             for c in sql[open_idx + 1 : close_idx].split(",")

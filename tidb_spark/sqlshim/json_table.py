@@ -52,8 +52,9 @@ from __future__ import annotations
 
 import re
 
+from tidb_spark.sqlshim import lex
+
 _JT_RE = re.compile(r"(?is)\bJSON_TABLE\s*\(")
-_STRING_RE = re.compile(r"'(?:[^'\\]|\\.|'')*'")
 
 # MySQL column type -> Spark cast target.
 _TYPE_MAP: dict[str, str] = {
@@ -93,46 +94,6 @@ def _spark_type(mysql_type: str) -> str:
     return mapped
 
 
-def _split_top_level(s: str, sep: str = ",") -> list[str]:
-    """Split on `sep` at paren depth 0, respecting single-quoted strings."""
-    out, depth, start, i = [], 0, 0, 0
-    while i < len(s):
-        ch = s[i]
-        if ch == "'":
-            m = _STRING_RE.match(s, i)
-            i = m.end() if m else i + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == sep and depth == 0:
-            out.append(s[start:i])
-            start = i + 1
-        i += 1
-    out.append(s[start:])
-    return out
-
-
-def _balanced_span(query: str, open_at: int) -> int:
-    """Index just past the ')' matching the '(' at ``open_at``."""
-    depth, i = 0, open_at
-    while i < len(query):
-        ch = query[i]
-        if ch == "'":
-            m = _STRING_RE.match(query, i)
-            i = m.end() if m else i + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    raise ValueError("JSON_TABLE: unbalanced parentheses")
-
-
 def _value_expr(path_literal: str, cast_t: str, elem: str) -> str:
     """PATH evaluation against one exploded element.
 
@@ -163,7 +124,7 @@ def _lower_columns(
     """
     exprs: list[str] = []
     nested_root: str | None = None
-    for item in _split_top_level(cols_src):
+    for item in lex.split_top_level(cols_src, ","):
         item = item.strip()
         if not item:
             continue
@@ -192,13 +153,13 @@ def _lower_columns(
                 )
             nested_root = npath[:-3]
             inner_open = item.index("(", nm.end() - 1)
-            inner_end = _balanced_span(item, inner_open)
-            if item[inner_end:].strip():
+            inner_end = lex.find_closing(item, inner_open)
+            if item[inner_end + 1 :].strip():
                 raise ValueError(
                     "JSON_TABLE: trailing tokens after NESTED COLUMNS(...)"
                 )
             inner_exprs, _ = _lower_columns(
-                item[inner_open + 1 : inner_end - 1],
+                item[inner_open + 1 : inner_end],
                 elem="__e2", pos="__pos2", allow_nested=False,
             )
             exprs.extend(inner_exprs)
@@ -238,13 +199,13 @@ def _lower_columns(
 def lower(query: str) -> str:
     """Rewrite every top-level JSON_TABLE(...) table factor in ``query``."""
     while True:
-        m = _JT_RE.search(query)
+        m = next(lex.code_matches(_JT_RE, query), None)
         if m is None:
             return query
         open_at = query.index("(", m.end() - 1)
-        end = _balanced_span(query, open_at)
+        end = lex.find_closing(query, open_at) + 1
         args = query[open_at + 1 : end - 1]
-        parts = _split_top_level(args)
+        parts = lex.split_top_level(args, ",")
         if len(parts) != 2:
             raise ValueError(
                 "JSON_TABLE expects (expr, 'row path' COLUMNS (...))"
@@ -259,8 +220,8 @@ def lower(query: str) -> str:
                 "JSON_TABLE: second argument must be 'row path' COLUMNS (...)"
             )
         cols_open = parts[1].index("(", pm.end() - 1)
-        cols_end = _balanced_span(parts[1], cols_open)
-        if parts[1][cols_end:].strip():
+        cols_end = lex.find_closing(parts[1], cols_open)
+        if parts[1][cols_end + 1 :].strip():
             raise ValueError(
                 "JSON_TABLE: trailing tokens after COLUMNS(...) are not "
                 "supported"
@@ -276,7 +237,7 @@ def lower(query: str) -> str:
         else:
             arr_src = f"get_json_object({src_expr}, '{root}')"
         col_exprs, nested_root = _lower_columns(
-            parts[1][cols_open + 1 : cols_end - 1]
+            parts[1][cols_open + 1 : cols_end]
         )
 
         am = re.match(r"(?is)\s*(?:AS\s+)?`?(\w+)`?", query[end:])

@@ -33,7 +33,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from tidb_spark.sqlshim.translate import _split_segments
+from tidb_spark.sqlshim import lex
 
 _MATCH_RE = re.compile(r"\bMATCH\b", re.IGNORECASE)
 _ANY_SHORTEST_RE = re.compile(r"\s*ANY\s+SHORTEST\b", re.IGNORECASE)
@@ -82,27 +82,6 @@ class MatchPath:
         return self.kind is not None
 
 
-def _find_closing(sql: str, open_idx: int) -> int:
-    depth, i = 0, open_idx
-    while i < len(sql):
-        seg = sql[i]
-        if seg in "'\"":
-            m = re.compile(r"('(?:[^'\\]|\\.)*')|(\"(?:[^\"\\]|\\.)*\")").match(
-                sql, i
-            )
-            if m:
-                i = m.end()
-                continue
-        if seg == "(":
-            depth += 1
-        elif seg == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise ValueError("unbalanced parentheses in MATCH clause")
-
-
 def _parse_vertex(body: str) -> VertexElem:
     m = _VERTEX_RE.match(body)
     if not m:
@@ -116,7 +95,7 @@ def _parse_path_body(
 ) -> tuple[MatchPath, int]:
     """Parse ``(vertex)[.DIR(edge)[.(vertex)]]...`` starting at the opening
     paren; return (path, index past the last consumed char)."""
-    close = _find_closing(sql, i)
+    close = lex.find_closing(sql, i)
     path = MatchPath(kind, _parse_vertex(sql[i + 1 : close]), top_k=top_k)
     i = close + 1
     while True:
@@ -124,7 +103,7 @@ def _parse_path_body(
         if not m:
             break
         open_idx = sql.index("(", m.end() - 1)
-        close = _find_closing(sql, open_idx)
+        close = lex.find_closing(sql, open_idx)
         em = _EDGE_RE.match(sql[open_idx + 1 : close])
         if not em:
             raise ValueError(
@@ -140,7 +119,7 @@ def _parse_path_body(
         dm = re.compile(r"\s*\.\s*\(").match(sql, i)
         if dm:
             vopen = sql.index("(", dm.start())
-            vclose = _find_closing(sql, vopen)
+            vclose = lex.find_closing(sql, vopen)
             hop.dest = _parse_vertex(sql[vopen + 1 : vclose])
             i = vclose + 1
     return path, i
@@ -152,10 +131,7 @@ def find_and_parse(sql: str) -> tuple[int, int, list[MatchPath]] | None:
     (the reference unions them, buildGraph
     logical_plan_builder.go:6484-6506); shortest-path kinds are only valid
     as a single path, like the reference's planner."""
-    for cand in _MATCH_RE.finditer(sql):
-        segs = _split_segments(sql[: cand.start()])
-        if segs and not segs[-1][0]:
-            continue  # inside a string literal
+    for cand in lex.code_matches(_MATCH_RE, sql):
         start = cand.start()
         i = cand.end()
         kind, top_k = None, None
@@ -267,40 +243,7 @@ def lower_simple_path(schema, path: MatchPath) -> tuple[str, list[str]]:
     return " ".join(frags), preds
 
 
-_CLAUSE_KEYWORDS = ("WHERE", "GROUP BY", "HAVING", "ORDER BY", "LIMIT")
-
-
-def _top_level_clauses(text: str) -> dict[str, int]:
-    """Start offsets of depth-0, outside-string clause keywords in
-    ``text`` (the statement tail following a MATCH clause)."""
-    out: dict[str, int] = {}
-    i, depth = 0, 0
-    str_re = re.compile(r"('(?:[^'\\]|\\.)*')|(\"(?:[^\"\\]|\\.)*\")")
-    while i < len(text):
-        ch = text[i]
-        if ch in "'\"":
-            m = str_re.match(text, i)
-            if m:
-                i = m.end()
-                continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch.isalpha():
-            for kw in _CLAUSE_KEYWORDS:
-                kw_pat = "(?i)" + kw.replace(" ", r"\s+") + r"\b"
-                if kw not in out and re.match(kw_pat, text[i:]) and (
-                    i == 0
-                    or not (text[i - 1].isalnum() or text[i - 1] in "_.")
-                ):
-                    out[kw] = i
-                    break
-            m2 = re.match(r"\w+", text[i:])
-            i += m2.end() if m2 else 1
-            continue
-        i += 1
-    return out
+_CLAUSE_RE = r"WHERE\b|GROUP\s+BY\b|HAVING\b|ORDER\s+BY\b|LIMIT\b"
 
 
 def lower_multi_statement(
@@ -325,7 +268,10 @@ def lower_multi_statement(
         )
     sel = hm.group("sel").strip()
     tail = sql[end:]
-    clauses = _top_level_clauses(tail)
+    # Start offset of the first depth-0 occurrence of each clause keyword.
+    clauses: dict[str, int] = {}
+    for m in lex.top_level(tail, _CLAUSE_RE):
+        clauses.setdefault(" ".join(m.group(0).upper().split()), m.start())
     if "GROUP BY" in clauses or "HAVING" in clauses:
         raise NotImplementedError(
             "GROUP BY / HAVING over a multi-path MATCH is not supported in "
@@ -385,16 +331,7 @@ def splice(sql: str, start: int, end: int, replacement: str, preds: list[str]) -
     while m := comma.match(out, tail_at):
         j = m.end()
         if j < len(out) and out[j] == "(":
-            depth = 0
-            while j < len(out):
-                if out[j] == "(":
-                    depth += 1
-                elif out[j] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        j += 1
-                        break
-                j += 1
+            j = lex.find_closing(out, j) + 1
         else:
             # qualified names (db.tbl) must consume the whole dotted
             # chain — stopping mid-token would splice the hoisted WHERE

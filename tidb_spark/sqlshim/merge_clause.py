@@ -28,7 +28,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from tidb_spark.sqlshim.translate import _map_code, _split_args
+from tidb_spark.sqlshim import lex
 
 _HEAD_RE = re.compile(
     r"(?is)^\s*MERGE\s+INTO\s+(?P<tab>\w+)(?:\s+AS\s+(?P<talias>\w+))?"
@@ -45,7 +45,6 @@ _INSERT_RE = re.compile(
     r"(?is)^(?:\((?P<cols>[^)]*)\)\s*)?VALUES\s*\((?P<vals>.*)\)$"
 )
 _EQ_RE = re.compile(r"(?is)^\s*(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)\s*$")
-_STRING_RE = re.compile(r"('(?:[^'\\]|\\.)*')|(\"(?:[^\"\\]|\\.)*\")")
 
 
 @dataclass
@@ -68,49 +67,6 @@ class MergeStmt:
     clauses: list[MergeClause] = field(default_factory=list)
 
 
-def _scan_balanced(sql: str, open_idx: int) -> int:
-    """Index just past the ')' matching sql[open_idx] == '('."""
-    depth, i = 0, open_idx
-    while i < len(sql):
-        m = _STRING_RE.match(sql, i)
-        if m:
-            i = m.end()
-            continue
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    raise ValueError("unbalanced parentheses in MERGE USING")
-
-
-def _split_top_level(text: str, word: str) -> list[str]:
-    """Split on a keyword appearing outside strings and parentheses."""
-    pat = re.compile(rf"(?is)\b{word}\b")
-    parts, depth, last, i = [], 0, 0, 0
-    while i < len(text):
-        m = _STRING_RE.match(text, i)
-        if m:
-            i = m.end()
-            continue
-        c = text[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            km = pat.match(text, i)
-            if km:
-                parts.append(text[last : i])
-                last = i = km.end()
-                continue
-        i += 1
-    parts.append(text[last:])
-    return parts
-
-
 def parse(sql: str) -> MergeStmt | None:
     """Parse a MERGE statement; None if ``sql`` is not one."""
     hm = _HEAD_RE.match(sql)
@@ -118,9 +74,9 @@ def parse(sql: str) -> MergeStmt | None:
         return None
     i = hm.end()
     if sql[i] == "(":
-        end = _scan_balanced(sql, i)
-        source_sql = sql[i + 1 : end - 1].strip()
-        i = end
+        end = lex.find_closing(sql, i)
+        source_sql = sql[i + 1 : end].strip()
+        i = end + 1
     else:
         tm = re.compile(r"\w+").match(sql, i)
         if not tm:
@@ -139,14 +95,14 @@ def parse(sql: str) -> MergeStmt | None:
     if not om:
         raise ValueError("MERGE: expected ON <condition>")
     rest = sql[om.end() :]
-    pieces = _split_top_level(rest, "WHEN")
+    pieces = lex.split_top_level(rest, "WHEN")
     on_text, clause_texts = pieces[0], pieces[1:]
     if not clause_texts:
         raise ValueError("MERGE: at least one WHEN clause required")
 
     talias = hm.group("talias") or hm.group("tab")
     on_pairs: list[tuple[str, str]] = []
-    for conj in _split_top_level(on_text, "AND"):
+    for conj in lex.split_top_level(on_text, "AND"):
         em = _EQ_RE.match(conj)
         if not em:
             raise ValueError(
@@ -173,7 +129,7 @@ def parse(sql: str) -> MergeStmt | None:
         action_text = cm.group("action")
         if cm.group("set") is not None:
             clause = MergeClause(matched, cm.group("cond"), "update")
-            for frag in _split_args(cm.group("set")):
+            for frag in lex.split_args(cm.group("set")):
                 col, expr = frag.split("=", 1)
                 clause.assignments.append(
                     (col.strip().strip("`").split(".")[-1], expr.strip())
@@ -192,7 +148,7 @@ def parse(sql: str) -> MergeStmt | None:
                 clause.insert_cols = [
                     c.strip().strip("`") for c in im.group("cols").split(",")
                 ]
-                clause.insert_vals = _split_args(im.group("vals"))
+                clause.insert_vals = lex.split_args(im.group("vals"))
                 if len(clause.insert_cols) != len(clause.insert_vals):
                     raise ValueError("MERGE INSERT cols/VALUES arity mismatch")
         if not matched and clause.action != "insert":
@@ -233,7 +189,7 @@ def rewrite_refs(
         )
         return re.sub(rf"(?i)\b{re.escape(talias)}\.(\w+)", r"\1", code)
 
-    return _map_code(expr, fn)
+    return lex.map_code(expr, fn)
 
 
 def strip_source_refs(expr: str, salias: str) -> str:
@@ -242,4 +198,4 @@ def strip_source_refs(expr: str, salias: str) -> str:
     def fn(code: str) -> str:
         return re.sub(rf"(?i)\b{re.escape(salias)}\.(\w+)", r"\1", code)
 
-    return _map_code(expr, fn)
+    return lex.map_code(expr, fn)

@@ -32,6 +32,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tidb_spark.sqlshim import lex
+
 PART_COL = "__part"
 
 _SPEC_RE = re.compile(
@@ -296,8 +298,6 @@ def _py_lit(sql_literal: str) -> object:
 
 def parse_spec(text: str) -> PartitionSpec:
     """Parse a ``PARTITION BY …`` clause (the CREATE TABLE tail)."""
-    from tidb_spark.sqlshim.translate import _split_args
-
     m = _SPEC_RE.match(text)
     if m is None:
         raise ValueError(f"unsupported PARTITION BY clause: {text!r}")
@@ -314,7 +314,7 @@ def parse_spec(text: str) -> PartitionSpec:
     if not body:
         raise ValueError(f"PARTITION BY {method} requires a partition list")
     spec = PartitionSpec(method=method, expr=expr)
-    for item in _split_args(body):
+    for item in lex.split_args(body):
         item = item.strip()
         if method == "RANGE":
             pm = _RANGE_PART_RE.match(item)
@@ -339,7 +339,7 @@ def parse_spec(text: str) -> PartitionSpec:
             if pm is None:
                 raise ValueError(f"unsupported LIST partition def: {item!r}")
             spec.names.append(pm.group("name"))
-            spec.bounds.append([v.strip() for v in _split_args(pm.group("vals"))])
+            spec.bounds.append([v.strip() for v in lex.split_args(pm.group("vals"))])
     if len(set(spec.names)) != len(spec.names):
         raise ValueError("Duplicate partition name")
     return spec
@@ -349,23 +349,7 @@ def split_partition_clause(sql: str) -> tuple[str, str | None]:
     """Split a CREATE TABLE statement into (head, partition-clause-text):
     finds the top-level (outside parens/strings) ``PARTITION BY``.  Returns
     (sql, None) when the statement has no partition clause."""
-    depth, i = 0, 0
-    upper = sql.upper()
-    while i < len(sql):
-        c = sql[i]
-        if c in ("'", '"'):
-            q = c
-            i += 1
-            while i < len(sql) and sql[i] != q:
-                i += 2 if sql[i] == "\\" else 1
-            i += 1
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0 and upper.startswith("PARTITION", i):
-            if re.match(r"(?is)PARTITION\s+BY\b", sql[i:]):
-                return sql[:i].rstrip(), sql[i:].strip().rstrip(";")
-        i += 1
-    return sql, None
+    m = next(lex.top_level(sql, r"PARTITION\s+BY\b"), None)
+    if m is None:
+        return sql, None
+    return sql[: m.start()].rstrip(), sql[m.start() :].strip().rstrip(";")

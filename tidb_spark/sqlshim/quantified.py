@@ -31,34 +31,18 @@ from __future__ import annotations
 import itertools
 import re
 
+from tidb_spark.sqlshim import lex
+
 _GATE_RE = re.compile(r"(?is)\b(ALL|ANY|SOME)\s*\(\s*SELECT\b")
-_STRING_RE = re.compile(r"('(?:[^'\\]|\\.)*')|(\"(?:[^\"\\]|\\.)*\")|(`[^`]*`)")
 _OP_RE = re.compile(r"(>=|<=|<>|!=|=|>|<)\s*$")
 _ALIAS_N = itertools.count()
-
-
-def _find_closing(sql: str, open_idx: int) -> int:
-    depth, i = 0, open_idx
-    while i < len(sql):
-        m = _STRING_RE.match(sql, i)
-        if m:
-            i = m.end()
-            continue
-        c = sql[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise ValueError("quantified comparison: unbalanced parentheses")
 
 
 def _lhs_start(sql: str, end: int) -> int:
     """Start index of the simple operand ending at ``end`` (exclusive):
     a chain of identifiers / qualified names / literals / balanced
-    call-parens, scanned backwards."""
+    call-parens, scanned backwards.  Hand-written because ``lex`` scans
+    forwards only."""
     i = end
     while i > 0 and sql[i - 1].isspace():
         i -= 1
@@ -181,13 +165,7 @@ def lower(sql: str) -> str:
     """Rewrite every quantified comparison in ``sql`` (string-aware)."""
     while True:
         m = None
-        for cand in _GATE_RE.finditer(sql):
-            in_literal = any(
-                lm.start() < cand.start() < lm.end()
-                for lm in _STRING_RE.finditer(sql)
-            )
-            if in_literal:
-                continue
+        for cand in lex.code_matches(_GATE_RE, sql):
             # The token before must be a comparison operator — `UNION ALL (`,
             # `MATCH ALL (` etc. must not match.
             before = sql[: cand.start()].rstrip()
@@ -205,7 +183,7 @@ def lower(sql: str) -> str:
         if quant == "SOME":
             quant = "ANY"
         open_idx = sql.index("(", m.start() + len(m.group(1)))
-        close_idx = _find_closing(sql, open_idx)
+        close_idx = lex.find_closing(sql, open_idx)
         subq = sql[open_idx + 1 : close_idx].strip()
         lhs_s = _lhs_start(sql, opm.start())
         lhs = sql[lhs_s : opm.start()].strip()

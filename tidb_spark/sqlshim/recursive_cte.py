@@ -19,12 +19,13 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
+from tidb_spark.sqlshim import lex
+
 _HEAD_RE = re.compile(
     r"(?is)^\s*WITH\s+RECURSIVE\s+`?(?P<name>\w+)`?\s*"
     r"(?:\((?P<cols>[^)]*)\))?\s*AS\s*\("
 )
-_STRING_RE = re.compile(r"('(?:[^'\\]|\\.)*')|(\"(?:[^\"\\]|\\.)*\")|(`[^`]*`)")
-_UNION_RE = re.compile(r"(?is)\bUNION\b(\s+(?:ALL|DISTINCT)\b)?")
+_UNION = r"UNION\b(\s+(?:ALL|DISTINCT)\b)?"
 
 
 @dataclass
@@ -36,61 +37,11 @@ class RecursiveCte:
     rest_sql: str  # starts with ',' (more CTEs) or the main statement
 
 
-def _balanced_end(sql: str, open_idx: int) -> int:
-    depth, i = 0, open_idx
-    while i < len(sql):
-        m = _STRING_RE.match(sql, i)
-        if m:
-            i = m.end()
-            continue
-        c = sql[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise ValueError("WITH RECURSIVE: unbalanced parentheses")
-
-
-def _last_distinct_union(body: str) -> tuple[int, int] | None:
-    """(start, end) of the last top-level UNION [DISTINCT] (not ALL)."""
-    depth, i, hit = 0, 0, None
-    while i < len(body):
-        m = _STRING_RE.match(body, i)
-        if m:
-            i = m.end()
-            continue
-        c = body[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0 and c in "Uu":
-            um = _UNION_RE.match(body, i)
-            if um:
-                mod = (um.group(1) or "").strip().upper()
-                if mod != "ALL":
-                    hit = (um.start(), um.end())
-                i = um.end()
-                continue
-        i += 1
-    return hit
-
-
 def replace_name(sql: str, name: str, view: str) -> str:
     """Replace table references to ``name`` with ``view`` (string-aware,
     backtick-aware, word-bounded)."""
-    out = []
-    last = 0
     pat = re.compile(rf"(?is)(?<![\w.])`?{re.escape(name)}`?(?![\w])")
-    for m in _STRING_RE.finditer(sql):
-        out.append(pat.sub(view, sql[last : m.start()]))
-        out.append(m.group(0))
-        last = m.end()
-    out.append(pat.sub(view, sql[last:]))
-    return "".join(out)
+    return lex.map_code(sql, lambda code: pat.sub(view, code))
 
 
 def parse(query: str) -> RecursiveCte | None:
@@ -98,13 +49,18 @@ def parse(query: str) -> RecursiveCte | None:
     if hm is None:
         return None
     body_open = hm.end() - 1
-    body_close = _balanced_end(query, body_open)
+    body_close = lex.find_closing(query, body_open)
     body = query[body_open + 1 : body_close]
-    split = _last_distinct_union(body)
+    # Split at the last top-level UNION [DISTINCT]; UNION ALLs before it
+    # stay inside the seed.
+    split = None
+    for um in lex.top_level(body, _UNION):
+        if (um.group(1) or "").strip().upper() != "ALL":
+            split = um
     if split is None:
         return None  # UNION ALL form — Spark executes it natively
-    seed_sql = body[: split[0]].strip()
-    step_sql = body[split[1] :].strip()
+    seed_sql = body[: split.start()].strip()
+    step_sql = body[split.end() :].strip()
     name = hm.group("name")
     if re.search(rf"(?is)(?<![\w.])`?{re.escape(name)}`?(?![\w])", seed_sql):
         raise ValueError(

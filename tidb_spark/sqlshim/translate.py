@@ -31,71 +31,7 @@ from __future__ import annotations
 import re
 
 from tidb_spark.functions.mysql import mysql_format_to_jvm
-
-_STRING_RE = re.compile(r"('(?:[^'\\]|\\.)*')|(\"(?:[^\"\\]|\\.)*\")|(`[^`]*`)")
-
-
-def _split_segments(sql: str) -> list[tuple[bool, str]]:
-    """[(is_code, text), ...] — string/backtick literals kept verbatim."""
-    out: list[tuple[bool, str]] = []
-    last = 0
-    for m in _STRING_RE.finditer(sql):
-        if m.start() > last:
-            out.append((True, sql[last : m.start()]))
-        out.append((False, m.group(0)))
-        last = m.end()
-    if last < len(sql):
-        out.append((True, sql[last:]))
-    return out
-
-
-def _map_code(sql: str, fn) -> str:
-    return "".join(fn(t) if is_code else t for is_code, t in _split_segments(sql))
-
-
-def _find_closing(sql: str, open_idx: int) -> int:
-    """Index of the ')' matching sql[open_idx] == '(' (string-aware)."""
-    depth = 0
-    i = open_idx
-    while i < len(sql):
-        c = sql[i]
-        if c == "'" or c == '"':
-            m = _STRING_RE.match(sql, i)
-            if m:
-                i = m.end()
-                continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise ValueError("unbalanced parentheses in SQL")
-
-
-def _split_args(argstr: str) -> list[str]:
-    """Split a function argument list on top-level commas (string-aware)."""
-    args, depth, last, i = [], 0, 0, 0
-    while i < len(argstr):
-        c = argstr[i]
-        if c == "'" or c == '"':
-            m = _STRING_RE.match(argstr, i)
-            if m:
-                i = m.end()
-                continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            args.append(argstr[last:i].strip())
-            last = i + 1
-        i += 1
-    tail = argstr[last:].strip()
-    if tail:
-        args.append(tail)
-    return args
+from tidb_spark.sqlshim import lex
 
 
 def _rewrite_calls(sql: str, name: str, builder, guard=None) -> str:
@@ -104,41 +40,30 @@ def _rewrite_calls(sql: str, name: str, builder, guard=None) -> str:
     may veto a candidate (e.g. INSERT-the-function vs ``THEN INSERT (…)``
     in MERGE)."""
     pat = re.compile(rf"\b{name}\s*\(", re.IGNORECASE)
-    # Code spans of the (immutable) input: a candidate match counts only if
-    # it starts inside one — checking a prefix instead would misclassify
-    # matches inside string literals (the prefix's quote looks unterminated,
-    # i.e. like code).
-    spans: list[tuple[int, int]] = []
-    off = 0
-    for is_code, text in _split_segments(sql):
-        if is_code:
-            spans.append((off, off + len(text)))
-        off += len(text)
-
-    def _in_code(idx: int) -> bool:
-        return any(a <= idx < b for a, b in spans)
-
+    if not pat.search(sql):
+        return sql
     out: list[str] = []
     pos = 0
     while True:
-        m = None
-        for cand in pat.finditer(sql, pos):
-            if _in_code(cand.start()) and (
-                guard is None or guard(sql, cand.start())
-            ):
-                m = cand
-                break
+        m = next(
+            (
+                cand
+                for cand in lex.code_matches(pat, sql, pos)
+                if guard is None or guard(sql, cand.start())
+            ),
+            None,
+        )
         if m is None:
             out.append(sql[pos:])
             return "".join(out)
         open_idx = sql.index("(", m.end() - 1)
-        close_idx = _find_closing(sql, open_idx)
+        close_idx = lex.find_closing(sql, open_idx)
         # Recurse into args so nested same-name calls are handled; the
         # replacement itself is never rescanned (it may legitimately contain
         # the case-insensitive name, e.g. DATE_FORMAT → date_format).
         args = [
             _rewrite_calls(a, name, builder)
-            for a in _split_args(sql[open_idx + 1 : close_idx])
+            for a in lex.split_args(sql[open_idx + 1 : close_idx])
         ]
         out.append(sql[pos : m.start()])
         out.append(builder(args))
@@ -173,9 +98,10 @@ def _regexp_kw(code: str) -> str:
 
 
 _GROUP_BY_RE = re.compile(r"(?is)\bGROUP\s+BY\s+")
-_WITH_ROLLUP_RE = re.compile(r"(?is)^WITH\s+ROLLUP\b")
-_CLAUSE_STOP_RE = re.compile(
-    r"(?is)^(?:HAVING|ORDER|LIMIT|WINDOW|UNION|INTERSECT|EXCEPT|QUALIFY)\b"
+# What ends a GROUP BY list at its own depth; group 1 is the MySQL suffix.
+_ROLLUP_END = (
+    r"(WITH\s+ROLLUP\b)"
+    r"|(?:HAVING|ORDER|LIMIT|WINDOW|UNION|INTERSECT|EXCEPT|QUALIFY)\b"
 )
 
 
@@ -190,57 +116,18 @@ def _with_rollup(sql: str) -> str:
     independently and literals can't trigger or terminate the match.
     """
     while True:
-        spans = []
-        off = 0
-        for is_code, text in _split_segments(sql):
-            if is_code:
-                spans.append((off, off + len(text)))
-            off += len(text)
-        hit = None
-        for m in _GROUP_BY_RE.finditer(sql):
-            # Only matches in code (not inside string/backtick literals).
-            if not any(a <= m.start() < b for a, b in spans):
-                continue
-            i, depth = m.end(), 0
-            while i < len(sql):
-                c = sql[i]
-                if c in "'\"`":
-                    sm = _STRING_RE.match(sql, i)
-                    if sm:
-                        i = sm.end()
-                        continue
-                if c == "(":
-                    depth += 1
-                elif c == ")":
-                    if depth == 0:
-                        break  # end of subquery — no rollup here
-                    depth -= 1
-                elif depth == 0 and (c.isalpha() or c == "_"):
-                    tail = sql[i:]
-                    if _WITH_ROLLUP_RE.match(tail):
-                        wr_end = i + _WITH_ROLLUP_RE.match(tail).end()
-                        hit = (m.start(), m.end(), i, wr_end)
-                        break
-                    if _CLAUSE_STOP_RE.match(tail):
-                        break
-                    # skip the rest of this identifier/keyword
-                    j = i
-                    while j < len(sql) and (sql[j].isalnum() or sql[j] == "_"):
-                        j += 1
-                    i = j
-                    continue
-                i += 1
-            if hit:
+        for m in lex.code_matches(_GROUP_BY_RE, sql):
+            end = next(lex.top_level(sql, _ROLLUP_END, m.end()), None)
+            if end is not None and end.group(1):
+                grouping = sql[m.end() : end.start()].strip()
+                sql = (
+                    sql[: m.start()]
+                    + f"GROUP BY ROLLUP({grouping})"
+                    + sql[end.end() :]
+                )
                 break
-        if hit is None:
+        else:
             return sql
-        gb_start, gb_end, list_end, wr_end = hit
-        grouping = sql[gb_end:list_end].strip()
-        sql = (
-            sql[:gb_start]
-            + f"GROUP BY ROLLUP({grouping})"
-            + sql[wr_end:]
-        )
 
 
 def _unquote(lit: str) -> str:
@@ -763,8 +650,8 @@ def _truncate_fn(args: list[str]) -> str:
 
 def translate(sql: str) -> str:
     """Translate one MySQL-dialect statement to Spark SQL."""
-    sql = _map_code(sql, _limit_offset)
-    sql = _map_code(sql, _regexp_kw)
+    sql = lex.map_code(sql, _limit_offset)
+    sql = lex.map_code(sql, _regexp_kw)
     sql = _with_rollup(sql)
     if re.search(r"(?i)\bAGAINST\s*\(", sql):
         from tidb_spark.sqlshim import fulltext
@@ -838,7 +725,7 @@ def translate(sql: str) -> str:
         guard=lambda s, i: not s[:i].rstrip().upper().endswith("THEN"),
     )
     # CAST(x AS CHAR(10)) must not look like a CHAR() call.
-    sql = _map_code(
+    sql = lex.map_code(
         sql,
         lambda c: re.sub(r"(?i)\bAS\s+CHAR\s*\(", "AS VARCHAR(", c),
     )
