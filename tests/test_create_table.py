@@ -116,6 +116,20 @@ def test_show_create_round_trip(engine):
     rp = ct.parse(vddl)
     assert rp.pk_cols == ["vertex_id"]
 
+    # Each column's DEFAULT and COLLATE round-trip from the managed table.
+    dc = (
+        "CREATE TABLE people3 (id BIGINT PRIMARY KEY, note VARCHAR(20) "
+        "DEFAULT 'none', n INT DEFAULT -5, "
+        "nm VARCHAR(10) COLLATE utf8mb4_general_ci, "
+        "tag VARCHAR(10) DEFAULT 'x' COLLATE utf8mb4_bin)"
+    )
+    engine.sql(dc)
+
+    def semantics(ddl):
+        return [(c.name, c.default_expr, c.collation) for c in ct.parse(ddl).columns]
+
+    assert semantics(engine.show_create_table("people3")) == semantics(dc)
+
 
 def test_decimal_clamp_with_warning():
     """MySQL DECIMAL(65,30) exceeds Spark's max precision 38 → clamp with a
@@ -480,3 +494,161 @@ def test_insert_column_list_select_and_set(engine):
     with _pytest.raises(ValueError, match="Unknown column"):
         engine.sql("INSERT INTO tgt (id, nope) SELECT 1, 2")
     engine.sql("DROP TABLE tgt")
+
+
+_CI = "COLLATE utf8mb4_general_ci"
+
+# (setup statements, probe statement, expected rows or a ValueError match).
+# A managed table carries its DEFAULTs and collations through DROP,
+# FLASHBACK, RENAME and ALTER; tables and views share one namespace.
+_CATALOG_CASES = {
+    "collation_survives_drop_flashback": (
+        [
+            f"CREATE TABLE own_t1 (k BIGINT, name VARCHAR(10) {_CI})",
+            "INSERT INTO own_t1 VALUES (1, 'Abc')",
+            "DROP TABLE own_t1",
+            "FLASHBACK TABLE own_t1",
+        ],
+        "SELECT k FROM own_t1 WHERE name = 'abc'",
+        [(1,)],
+    ),
+    "collation_follows_rename_table": (
+        [
+            f"CREATE TABLE own_t2 (k BIGINT, name VARCHAR(10) {_CI})",
+            "INSERT INTO own_t2 VALUES (1, 'Abc')",
+            "RENAME TABLE own_t2 TO own_t2b",
+        ],
+        "SELECT k FROM own_t2b WHERE name = 'abc'",
+        [(1,)],
+    ),
+    "collation_leaves_old_name": (
+        [
+            f"CREATE TABLE own_t5 (k BIGINT, name VARCHAR(10) {_CI})",
+            "RENAME TABLE own_t5 TO own_t5b",
+            "CREATE TABLE own_t5 (k BIGINT, name VARCHAR(10))",
+            "INSERT INTO own_t5 VALUES (1, 'Abc')",
+        ],
+        "SELECT k FROM own_t5 WHERE name = 'abc'",
+        [],
+    ),
+    "default_dropped_with_table": (
+        [
+            "CREATE TABLE own_t3 (a BIGINT, b BIGINT DEFAULT 7)",
+            "DROP TABLE own_t3",
+            "CREATE TABLE own_t3 AS SELECT 1 AS a, 2 AS b",
+            "INSERT INTO own_t3 (a) VALUES (5)",
+        ],
+        "SELECT b FROM own_t3 WHERE a = 5",
+        [(None,)],
+    ),
+    "default_follows_alter_rename": (
+        [
+            "CREATE TABLE own_t4 (a BIGINT, b BIGINT DEFAULT 7)",
+            "ALTER TABLE own_t4 RENAME TO own_t4b",
+            "INSERT INTO own_t4b (a) VALUES (5)",
+        ],
+        "SELECT b FROM own_t4b",
+        [(7,)],
+    ),
+    "add_column_records_default": (
+        [
+            "CREATE TABLE own_a1 (id BIGINT, name VARCHAR(8))",
+            "INSERT INTO own_a1 VALUES (1, 'x')",
+            "ALTER TABLE own_a1 ADD COLUMN score INT DEFAULT 5",
+            "INSERT INTO own_a1 (id, name) VALUES (2, 'y')",
+        ],
+        "SELECT id, score FROM own_a1 ORDER BY id",
+        [(1, 5), (2, 5)],
+    ),
+    "rename_column_keeps_collation": (
+        [
+            f"CREATE TABLE own_a2 (k BIGINT, nm VARCHAR(10) {_CI})",
+            "INSERT INTO own_a2 VALUES (1, 'Abc')",
+            "ALTER TABLE own_a2 RENAME COLUMN nm TO nm2",
+        ],
+        "SELECT k FROM own_a2 WHERE nm2 = 'abc'",
+        [(1,)],
+    ),
+    "rename_column_keeps_default": (
+        [
+            "CREATE TABLE own_a3 (a BIGINT, s BIGINT DEFAULT 3)",
+            "ALTER TABLE own_a3 RENAME COLUMN s TO s2",
+            "INSERT INTO own_a3 (a) VALUES (1)",
+        ],
+        "SELECT s2 FROM own_a3",
+        [(3,)],
+    ),
+    "create_table_over_view": (
+        ["CREATE VIEW own_vv AS SELECT 1 AS a"],
+        "CREATE TABLE own_vv (a BIGINT)",
+        "already exists",
+    ),
+    "rename_onto_view": (
+        [
+            "CREATE TABLE own_ta (a BIGINT)",
+            "CREATE VIEW own_vb AS SELECT 1 AS a",
+        ],
+        "ALTER TABLE own_ta RENAME TO own_vb",
+        "already exists",
+    ),
+    "flashback_onto_live_table": (
+        [
+            "CREATE TABLE own_tc (a BIGINT)",
+            "CREATE TABLE own_td (a BIGINT)",
+            "DROP TABLE own_tc",
+        ],
+        "FLASHBACK TABLE own_tc TO own_td",
+        "already exists",
+    ),
+    "rename_onto_dataset_table": (
+        [],
+        "ALTER TABLE region RENAME TO nation",
+        "already exists",
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "setup, probe, want", _CATALOG_CASES.values(), ids=_CATALOG_CASES.keys()
+)
+def test_table_owns_semantics_and_name(engine, setup, probe, want):
+    for stmt in setup:
+        engine.sql(stmt)
+    if isinstance(want, str):
+        with pytest.raises(ValueError, match=want):
+            engine.sql(probe)
+    else:
+        assert [tuple(r) for r in engine.sql(probe).collect()] == want
+
+
+def test_graph_registration_follows_table(engine):
+    """DROP retires an edge table's graph registration and a same-name
+    FLASHBACK restores it; a graph table cannot be renamed, because edges
+    reference tables by name."""
+    engine.sql("CREATE TABLE own_pv (vertex_id BIGINT PRIMARY KEY, nm VARCHAR(8))")
+    engine.sql("INSERT INTO own_pv VALUES (1, 'a'), (2, 'b')")
+    engine.sql(
+        "CREATE TABLE own_pe (src BIGINT SOURCE KEY REFERENCES own_pv, "
+        "dst BIGINT DESTINATION KEY REFERENCES own_pv)"
+    )
+    engine.sql("INSERT INTO own_pe VALUES (1, 2)")
+    match = (
+        "SELECT a.nm AS s, b.nm AS d "
+        "FROM MATCH (own_pv AS a).OUT(own_pe).(own_pv AS b)"
+    )
+    assert [tuple(r) for r in engine.sql(match).collect()] == [("a", "b")]
+
+    engine.sql("DROP TABLE own_pe")
+    assert "own_pe" not in engine.graph.edges
+    engine.sql("FLASHBACK TABLE own_pe")
+    assert [tuple(r) for r in engine.sql(match).collect()] == [("a", "b")]
+
+    for stmt in (
+        "RENAME TABLE own_pe TO own_pe2",
+        "ALTER TABLE own_pv RENAME TO own_pv2",
+    ):
+        with pytest.raises(ValueError, match="graph vertex or edge table"):
+            engine.sql(stmt)
+    engine.sql("DROP TABLE own_pe")
+    with pytest.raises(ValueError, match="graph vertex or edge table"):
+        engine.sql("FLASHBACK TABLE own_pe TO own_pe2")

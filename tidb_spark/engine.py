@@ -323,6 +323,11 @@ def _collation_kind(name: str) -> str | None:
     return kind
 
 
+# An edge table, and a vertex table an edge references, keep their names:
+# edge registrations reference tables by name.
+_GRAPH_RENAME = "cannot rename graph vertex or edge table {!r}"
+
+
 class Engine:
     """One engine per (SparkSession, dataset dir): binds the catalog, the
     graph schema, and the MySQL shim functions, then answers SQL."""
@@ -340,7 +345,9 @@ class Engine:
         self.graph: GraphSchema = default_graph(spark, self.sf_dir)
         self.workspace = workspace or tempfile.mkdtemp(prefix="tidb_spark_ws_")
         self.managed: dict[str, ManagedTable] = {}
-        self.dropped: dict[str, ManagedTable] = {}
+        # DROP TABLE keeps the files: name -> (ManagedTable, its graph
+        # VertexTable | None, EdgeTable | None), for FLASHBACK to restore.
+        self.dropped: dict[str, tuple] = {}
         # SET statement state (executor/set.go:41): @user variables hold a
         # SQL literal; @@system variables are accepted and recorded (most
         # reference sysvars tune its own executor — Spark conf is the
@@ -397,16 +404,6 @@ class Engine:
         self._prev_from_binding = False
         # Sequence objects: name -> options + counter (ddl/sequence.go).
         self.sequences: dict[str, dict] = {}
-        # Columns declared with a non-binary collation (util/collate/),
-        # per table so DROP TABLE retires them: column name -> collation
-        # kind ('general' = utf8mb4_general_ci weights, 'unicode' =
-        # utf8mb4_unicode_ci UCA weights, 'bin' = *_bin PAD SPACE only).
-        # The opt-in comparison shim dispatches the key function on the
-        # kind (reference newCollatorMap, util/collate/collate.go:355).
-        self._ci_cols_by_table: dict[str, dict[str, str]] = {}
-        # Declared column DEFAULT expressions per table (executor/insert.go
-        # fillRow reads them for every unnamed INSERT column).
-        self._defaults_by_table: dict[str, dict[str, str]] = {}
         # Storage incarnation per table name: CREATE after DROP must get a
         # fresh directory — ManagedTable resumes from the latest on-disk
         # version, so reusing the dropped table's root would silently
@@ -485,6 +482,8 @@ class Engine:
         domains: dict[str, tuple[str, tuple[str, ...]]] | None = None,
         generated: dict[str, str] | None = None,
         auto_col: str | None = None,
+        defaults: dict[str, str] | None = None,
+        collations: dict[str, str] | None = None,
         df_known_empty: bool = False,
     ) -> ManagedTable:
         """Create a writable (managed, copy-on-write parquet) table in the
@@ -505,19 +504,56 @@ class Engine:
             domains=domains,
             generated=generated,
             auto_col=auto_col,
+            defaults=defaults,
+            collations=collations,
             df_known_empty=df_known_empty,
         )
         self.managed[name] = mt
         self._refresh_view(name)
         return mt
 
-    def _check_create_name(self, name: str, if_not_exists: bool) -> bool:
-        """Shared exists-check for the CREATE TABLE forms; True = proceed."""
-        if name in self.managed or name in self.tables or name in self.views:
+    def _claim(self, name: str, if_not_exists: bool = False) -> bool:
+        """The one rule for binding a new name: tables, views, sequences and
+        graph registrations share one namespace (MySQL ERROR 1050).  True =
+        the name is free; a taken name is a no-op under IF NOT EXISTS, an
+        error otherwise.  ``self.tables`` covers the managed tables
+        (``_refresh_view``).  The namespace is this engine's: a temp view
+        another Engine left in the shared SparkSession does not take it."""
+        g = self.graph
+        taken = (self.tables, self.views, self.sequences, g.vertices, g.edges)
+        if any(name in d for d in taken):
             if if_not_exists:
                 return False
             raise ValueError(f"table {name!r} already exists")
         return True
+
+    def _rename(self, old: str, new: str) -> None:
+        """The one rename path (ALTER … RENAME, RENAME TABLE): a managed
+        table moves with everything it declares; a dataset table's frame
+        is re-aliased."""
+        if old not in self.tables:
+            raise ValueError(f"table {old!r} is not a managed table")
+        if self._graph_pinned(old):
+            raise ValueError(_GRAPH_RENAME.format(old))
+        self._claim(new)
+        if old in self.graph.vertices:
+            self.graph.vertices[new] = self.graph.vertices.pop(old)
+            self.graph.vertices[new].name = new
+        self.tables[new] = self.tables.pop(old)
+        self.spark.catalog.dropTempView(old)
+        if old in self.managed:
+            self.managed[new] = self.managed.pop(old)
+            self._refresh_view(new)
+        else:
+            self.tables[new].createOrReplaceTempView(new)
+
+    def _graph_pinned(self, name: str) -> bool:
+        """Whether an edge registration names ``name``: an edge table, or a
+        vertex table an edge references."""
+        return any(
+            name in (e.name, e.src_table, e.dst_table)
+            for e in self.graph.edges.values()
+        )
 
     def _run_ctas(self, m: re.Match) -> None:
         """CREATE TABLE … AS SELECT (executor/ddl.go CreateTableWithInfo via
@@ -525,7 +561,7 @@ class Engine:
         populated in the same statement, no keys (MySQL CTAS copies no
         indexes)."""
         name = m.group("name")
-        if not self._check_create_name(name, bool(m.group("ine"))):
+        if not self._claim(name, bool(m.group("ine"))):
             return
         df = self.sql(m.group("sel"))
         self.create_table(name, df, key_cols=[])
@@ -536,7 +572,7 @@ class Engine:
         DEFAULTs from a managed table; base dataset tables clone schema
         only (their keys are not declared)."""
         name, src = m.group("name"), m.group("src")
-        if not self._check_create_name(name, bool(m.group("ine"))):
+        if not self._claim(name, bool(m.group("ine"))):
             return
         if src in self.managed:
             smt = self.managed[src]
@@ -546,20 +582,13 @@ class Engine:
                 empty,
                 key_cols=list(smt.key_cols),
                 partition_spec=smt.partition_spec,
-                domains=dict(smt.domains) if smt.domains else None,
-                generated=dict(smt.generated) if smt.generated else None,
+                domains=dict(smt.domains),
+                generated=dict(smt.generated),
                 auto_col=smt.auto_col,
+                defaults=dict(smt.defaults),
+                collations=dict(smt.collations),
                 df_known_empty=True,
             )
-            defaults = self._defaults_by_table.get(src)
-            if defaults:
-                self._defaults_by_table[name] = dict(defaults)
-            if src in self._ci_cols_by_table:
-                # MySQL LIKE clones column collations; keep the clone's
-                # *_ci semantics independent of the source's lifetime.
-                self._ci_cols_by_table[name] = dict(
-                    self._ci_cols_by_table[src]
-                )
         elif src in self.tables:
             empty = self.spark.createDataFrame(
                 [], schema=self.tables[src].schema
@@ -591,10 +620,9 @@ class Engine:
                 f"Unknown column {unknown[0]!r} in table {name!r}"
             )
         full = rows.toDF(*cols)
-        defaults = self._defaults_by_table.get(name, {})
         for f in fields:
             if f.name not in cols:
-                dexpr = defaults.get(f.name)
+                dexpr = mt.defaults.get(f.name)
                 full = full.withColumn(
                     f.name,
                     (F.expr(dexpr) if dexpr else F.lit(None)).cast(f.dataType),
@@ -653,35 +681,13 @@ class Engine:
         from tidb_spark.sqlshim import create_table as _ct
 
         stmt = _ct.parse(m.string)
-        if stmt.name in self.managed or stmt.name in self.tables:
-            if stmt.if_not_exists:
-                return
-            raise ValueError(f"table {stmt.name!r} already exists")
+        if not self._claim(stmt.name, stmt.if_not_exists):
+            return
         empty = self.spark.createDataFrame([], schema=stmt.schema_ddl())
-        domains = {
-            c.name: (c.domain_kind, c.domain)
-            for c in stmt.columns
-            if c.domain_kind
-        } or None
-        generated = {
-            c.name: translate(c.generated_expr)
-            for c in stmt.columns
-            if c.generated_expr
-        } or None
-        auto_col = next(
-            (c.name for c in stmt.columns if c.auto_increment), None
-        )
-        self._defaults_by_table[stmt.name] = {
-            c.name: c.default_expr for c in stmt.columns if c.default_expr
-        }
-        ci = {}
-        for c in stmt.columns:
-            if c.collation:
-                kind = _collation_kind(c.collation)
-                if kind:
-                    ci[c.name] = kind
-        if ci:
-            self._ci_cols_by_table[stmt.name] = ci
+        cols = stmt.columns
+        collations = {c.name: c.collation for c in cols if c.collation}
+        for c in collations.values():
+            _collation_kind(c)  # rejects a name outside the registry
         if stmt.is_edge:
             src = next(c for c in stmt.columns if c.source_ref)
             dst = next(c for c in stmt.columns if c.dest_ref)
@@ -692,9 +698,14 @@ class Engine:
             )
         self.create_table(
             stmt.name, empty, key_cols=stmt.pk_cols,
-            partition_spec=stmt.partition_spec, domains=domains,
-            generated=generated, auto_col=auto_col,
-            df_known_empty=True,
+            partition_spec=stmt.partition_spec,
+            domains={c.name: (c.domain_kind, c.domain) for c in cols if c.domain_kind},
+            generated={
+                c.name: translate(c.generated_expr) for c in cols if c.generated_expr
+            },
+            auto_col=next((c.name for c in cols if c.auto_increment), None),
+            defaults={c.name: c.default_expr for c in cols if c.default_expr},
+            collations=collations, df_known_empty=True,
         )
         if not stmt.is_edge and len(stmt.pk_cols) == 1:
             pk = next(c for c in stmt.columns if c.name == stmt.pk_cols[0])
@@ -757,66 +768,54 @@ class Engine:
             )
             return
 
+        rn = re.match(r"(?is)^RENAME\s+(?:TO\s+)?`?(\w+)`?$", body)
+        if rn:
+            self._rename(name, rn.group(1))
+            return
         if name not in self.managed:
-            # RENAME of a non-managed registered table is still view-level.
-            rn = re.match(r"(?is)^RENAME\s+(?:TO\s+)?`?(\w+)`?$", body)
-            if rn and name in self.tables:
-                new = rn.group(1)
-                self.tables[new] = self.tables.pop(name)
-                self.spark.catalog.dropTempView(name)
-                self.tables[new].createOrReplaceTempView(new)
-                return
             raise ValueError(f"table {name!r} is not a managed table")
         mt = self.managed[name]
         df = mt.df()
+        # Column semantics change with the data: applied after the write.
+        key_cols, defaults = list(mt.key_cols), dict(mt.defaults)
+        collations = dict(mt.collations)
         for clause in clauses:
-            am = re.match(
-                r"(?is)^ADD(?:\s+COLUMN)?\s+`?(\w+)`?\s+(\w+(?:\([^)]*\))?)"
-                r"(?P<rest>.*)$",
-                clause,
-            )
+            am = re.match(r"(?is)^ADD(?:\s+COLUMN)?\s+(.*)$", clause)
             dm = re.match(r"(?is)^DROP(?:\s+COLUMN)?\s+`?(\w+)`?$", clause)
             rc = re.match(
                 r"(?is)^RENAME\s+COLUMN\s+`?(\w+)`?\s+TO\s+`?(\w+)`?$", clause
             )
-            rt = re.match(r"(?is)^RENAME\s+(?:TO\s+)?`?(\w+)`?$", clause)
             if am:
-                col, typ = am.group(1), am.group(2)
-                tm = re.match(r"(\w+)(?:\((.*)\))?", typ)
-                spark_t = ctmod._map_type(
-                    tm.group(1), tm.group(2),
-                    bool(re.search(r"(?i)\bUNSIGNED\b", am.group("rest"))),
-                )
-                dv = re.search(
-                    r"(?is)\bDEFAULT\s+('(?:[^'\\]|\\.)*'|\S+)", am.group("rest")
-                )
-                expr = (
-                    f"CAST({dv.group(1)} AS {spark_t})"
-                    if dv
-                    else f"CAST(NULL AS {spark_t})"
-                )
-                df = df.withColumn(col, F.expr(expr))
+                cols = ctmod.parse(f"CREATE TABLE t ({am.group(1)})").columns
+                if len(cols) != 1:
+                    raise ValueError(f"unsupported ALTER TABLE clause: {clause!r}")
+                c = cols[0]
+                dv = c.default_expr or "NULL"
+                df = df.withColumn(c.name, F.expr(f"CAST({dv} AS {c.spark_type})"))
+                if c.default_expr:
+                    defaults[c.name] = c.default_expr
+                if c.collation:
+                    _collation_kind(c.collation)  # rejects an unknown name
+                    collations[c.name] = c.collation
             elif dm:
                 col = dm.group(1)
-                if col in mt.key_cols:
+                if col in key_cols:
                     raise ValueError(f"cannot drop key column {col!r}")
                 df = df.drop(col)
+                defaults.pop(col, None)
+                collations.pop(col, None)
             elif rc:
                 old, new = rc.group(1), rc.group(2)
                 df = df.withColumnRenamed(old, new)
-                mt.key_cols = [new if k == old else k for k in mt.key_cols]
-            elif rt:
-                new = rt.group(1)
-                if new in self.tables:
-                    raise ValueError(f"table {new!r} already exists")
-                self.managed[new] = self.managed.pop(name)
-                del self.tables[name]
-                self.spark.catalog.dropTempView(name)
-                self._refresh_view(new)
-                return
+                key_cols = [new if k == old else k for k in key_cols]
+                defaults = {new if k == old else k: v for k, v in defaults.items()}
+                collations = {
+                    new if k == old else k: v for k, v in collations.items()
+                }
             else:
                 raise ValueError(f"unsupported ALTER TABLE clause: {clause!r}")
         mt.write(df)
+        mt.key_cols, mt.defaults, mt.collations = key_cols, defaults, collations
         self._refresh_view(name)
 
     def _run_alter_partition(self, name: str, body: str) -> None:
@@ -922,44 +921,44 @@ class Engine:
             if m.group("ifex") and verb == "TRUNCATE":
                 raise ValueError("TRUNCATE TABLE does not accept IF EXISTS")
             if name not in self.managed:
+                if name in self.tables:
+                    # IF EXISTS forgives only ABSENCE (ddl/ddl_api.go
+                    # DropTable); a dataset view exists but is read-only.
+                    raise ValueError(
+                        f"table {name!r} is a read-only dataset view; "
+                        "only managed tables can be dropped or truncated"
+                    )
                 if m.group("ifex"):
-                    if name in self.tables:
-                        # IF EXISTS does not make a read-only dataset view
-                        # droppable — the existence check passed, so the
-                        # drop itself must still fail (ddl/ddl_api.go
-                        # DropTable: ifExists only forgives ABSENCE).
-                        raise ValueError(
-                            f"table {name!r} is a read-only dataset view; "
-                            "only managed tables can be dropped"
-                        )
-                    # Absent table: a warning in MySQL (ddl_api.go DropTable
-                    # ifExists path), a no-op here — but clear any stale
-                    # per-table state a partial earlier registration may
-                    # have left behind.
-                    self._ci_cols_by_table.pop(name, None)
-                    self._defaults_by_table.pop(name, None)
-                    try:
-                        self.spark.catalog.dropTempView(name)
-                    except Exception:
-                        pass
-                    return
+                    return  # absent: a warning in MySQL, a no-op here
                 raise ValueError(f"table {name!r} is not a managed table")
             mt = self.managed[name]
             if verb == "DROP":
                 del self.managed[name]
                 del self.tables[name]
                 self.spark.catalog.dropTempView(name)
-                self._ci_cols_by_table.pop(name, None)
-                self.dropped[name] = mt
+                self.dropped[name] = (
+                    mt,
+                    self.graph.vertices.pop(name, None),
+                    self.graph.edges.pop(name, None),
+                )
             else:
                 mt.truncate()
                 self._refresh_view(name)
             return
         name, new_name = m.group("ftab"), m.group("fnew")
         if name in self.dropped:
-            mt = self.dropped.pop(name)
+            mt, vertex, edge = self.dropped[name]
             target = new_name or name
+            if target != name and (edge or self._graph_pinned(name)):
+                raise ValueError(_GRAPH_RENAME.format(name))
+            self._claim(target)
+            del self.dropped[name]
             self.managed[target] = mt
+            if vertex:
+                vertex.name = target
+                self.graph.vertices[target] = vertex
+            if edge:
+                self.graph.edges[name] = edge
             self._refresh_view(target)
             return
         mt = self.managed.get(name)
@@ -1578,13 +1577,12 @@ class Engine:
 
     def _run_rename(self, m: re.Match) -> None:
         """RENAME TABLE a TO b [, c TO d] (ddl/ddl_api.go RenameTable): each
-        pair reuses the ALTER ... RENAME TO path, so managed tables move
-        storage-level and registered views re-alias."""
+        pair in turn goes through ``_rename``."""
         for pair in m.group("body").split(","):
             pm = _RENAME_PAIR_RE.match(pair)
             if not pm:
                 raise ValueError(f"RENAME TABLE: cannot parse pair {pair.strip()!r}")
-            self._run_alter(f"ALTER TABLE {pm.group(1)} RENAME TO {pm.group(2)}")
+            self._rename(pm.group(1), pm.group(2))
 
     _PARTSEL_RE = re.compile(
         r"(?is)\b(FROM|JOIN)\s+`?(\w+)`?\s+PARTITION\s*\(([^)]*)\)"
@@ -1890,19 +1888,9 @@ class Engine:
         the view expands into each consumer's plan at build time; nothing is
         materialized."""
         name, body = m.group("name"), m.group("body")
-        if not m.group("replace") and (
-            name in self.views
-            or name in self.tables
-            or name in self.managed
-            or self.spark.catalog.tableExists(name)
-        ):
-            # ddl.go returns ErrTableExists for a live name without OR REPLACE.
-            raise ValueError(f"CREATE VIEW: table or view {name!r} already exists")
-        if (
-            m.group("replace")
-            and name not in self.views
-            and (name in self.tables or name in self.managed)
-        ):
+        if not m.group("replace"):
+            self._claim(name)
+        elif name not in self.views and name in self.tables:
             # MySQL: OR REPLACE may only replace a VIEW, never shadow a base
             # table (ErrWrongObject "is not VIEW").
             raise ValueError(f"CREATE OR REPLACE VIEW: {name!r} is not a VIEW")
@@ -1931,7 +1919,7 @@ class Engine:
                 return
             # executor/ddl.go: dropping a non-view / unknown name errors
             # (ErrWrongObject for base tables).
-            kind = "table" if (name in self.tables or name in self.managed) else "view"
+            kind = "table" if name in self.tables else "view"
             raise ValueError(f"DROP VIEW: {name!r} is not a known view ({kind})")
         self.spark.catalog.dropTempView(name)
         del self.views[name]
@@ -2026,7 +2014,7 @@ class Engine:
         the same statement.  Qualified references always resolve
         exactly; a derived table's projection does not propagate its
         source collation (resolver-level feature, documented gap)."""
-        if not self._ci_cols_by_table:
+        if not any(mt.collations for mt in self.managed.values()):
             return query
         # Mask string literals first: a literal containing "name = name"
         # must never be rewritten, and the table-reference scan must not
@@ -2042,6 +2030,17 @@ class Engine:
         return re.sub(
             r"\x00(\d+)\x00", lambda m: lits[int(m.group(1))], masked
         )
+
+    def _ci_cols(self, table: str) -> dict[str, str]:
+        """Column -> collation kind for the non-binary collations a managed
+        table declares ('general', 'unicode', 'gbk', 'bin', …; the shim
+        dispatches its key function on the kind, reference newCollatorMap,
+        util/collate/collate.go:355)."""
+        mt = self.managed.get(table)
+        if mt is None:
+            return {}
+        kinds = {c: _collation_kind(n) for c, n in mt.collations.items()}
+        return {c: k for c, k in kinds.items() if k}
 
     _CI_KW = (
         "WHERE|GROUP|ORDER|LIMIT|HAVING|JOIN|ON|USING|LEFT|RIGHT|INNER"
@@ -2109,7 +2108,7 @@ class Engine:
                 if am:
                     alias = am.group(1)
                     pos = am.end()
-                if tab is not None and tab in self._ci_cols_by_table:
+                if tab is not None and self._ci_cols(tab):
                     refs[tab] = tab
                     if alias:
                         refs[alias] = tab
@@ -2122,9 +2121,7 @@ class Engine:
         # recurse into subqueries with this block's refs as outer scope
         subs = [self._ci_rewrite_block(s, refs) for s in subs]
 
-        own = {
-            t for t in set(refs.values()) if t in self._ci_cols_by_table
-        }
+        own = {t: self._ci_cols(t) for t in set(refs.values())}
         if not own:
             return re.sub(
                 r"\x02(\d+)\x02",
@@ -2132,18 +2129,15 @@ class Engine:
                 residue,
             )
         active: dict[str, set[str]] = {}
-        for t in own:
-            for c, kind in self._ci_cols_by_table[t].items():
+        for cols in own.values():
+            for c, kind in cols.items():
                 active.setdefault(c, set()).add(kind)
 
         def _kind(qualifier: str | None, col: str) -> str | None:
             """Collation kind this (qualifier, col) reference binds to,
             or None for a binary reference."""
             if qualifier:
-                t = refs.get(qualifier)
-                if t is None or t not in self._ci_cols_by_table:
-                    return None
-                return self._ci_cols_by_table[t].get(col)
+                return own.get(refs.get(qualifier), {}).get(col)
             kinds = active.get(col)
             if not kinds:
                 return None
@@ -2939,12 +2933,8 @@ class Engine:
         ignored — it tunes the reference's KV round-trip batching, which
         the engine-side counter replaces."""
         name = m.group("name")
-        if name in self.sequences:
-            if m.group("ifnex"):
-                return
-            raise ValueError(f"CREATE SEQUENCE: {name!r} already exists")
-        if name in self.tables or name in self.managed or name in self.views:
-            raise ValueError(f"CREATE SEQUENCE: table or view {name!r} exists")
+        if not self._claim(name, bool(m.group("ifnex"))):
+            return
         opts = {"start": 1, "increment": 1, "min": 1, "max": 2**63 - 1,
                 "cycle": False}
         for om in self._SEQ_OPT_RE.finditer(m.group("opts") or ""):
@@ -3510,10 +3500,16 @@ class Engine:
     def show_create_table(self, name: str) -> str:
         """SHOW CREATE TABLE, round-tripping the graph DDL extensions
         (SOURCE KEY / DESTINATION KEY — executor/show.go:922) for edge
-        tables."""
+        tables, and each managed column's DEFAULT and COLLATE."""
+        mt = self.managed.get(name)
 
-        def _sql_type(dt) -> str:
-            return dt.simpleString().upper()
+        def _col(f) -> str:
+            line = f"  `{f.name}` {f.dataType.simpleString().upper()}"
+            if mt is not None and f.name in mt.defaults:
+                line += f" DEFAULT {mt.defaults[f.name]}"
+            if mt is not None and f.name in mt.collations:
+                line += f" COLLATE {mt.collations[f.name]}"
+            return line
 
         if name in self.views:
             # show.go serves views through SHOW CREATE TABLE as well
@@ -3523,7 +3519,7 @@ class Engine:
             e = self.graph.edge(name)
             cols = []
             for f in e.df.schema.fields:
-                line = f"  `{f.name}` {_sql_type(f.dataType)}"
+                line = _col(f)
                 if f.name == e.src_col:
                     line += f" SOURCE KEY REFERENCES {e.src_table}"
                 elif f.name == e.dst_col:
@@ -3532,12 +3528,12 @@ class Engine:
             body = ",\n".join(cols)
             return f"CREATE TABLE `{name}` (\n{body}\n)"
         df = self.tables[name] if name in self.tables else self.graph.vertex(name).df
-        cols = [f"  `{f.name}` {_sql_type(f.dataType)}" for f in df.schema.fields]
+        cols = [_col(f) for f in df.schema.fields]
         pk_cols: list[str] = []
         if name in self.graph.vertices:
             pk_cols = [self.graph.vertex(name).id_col]
-        elif name in self.managed and self.managed[name].key_cols:
-            pk_cols = list(self.managed[name].key_cols)
+        elif mt is not None and mt.key_cols:
+            pk_cols = list(mt.key_cols)
         if len(pk_cols) == 1:
             for i, f in enumerate(df.schema.fields):
                 if f.name == pk_cols[0]:
@@ -3548,10 +3544,10 @@ class Engine:
             )
         body = ",\n".join(cols)
         tail = ""
-        if name in self.managed and self.managed[name].partition_spec:
+        if mt is not None and mt.partition_spec:
             # Round-trips the partition clause (executor/show.go prints the
             # reference's partition info the same way).
-            tail = "\n" + self.managed[name].partition_spec.ddl()
+            tail = "\n" + mt.partition_spec.ddl()
         return f"CREATE TABLE `{name}` (\n{body}\n){tail}"
 
 

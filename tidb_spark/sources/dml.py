@@ -83,6 +83,8 @@ class ManagedTable:
         domains: dict[str, tuple[str, tuple[str, ...]]] | None = None,
         generated: dict[str, str] | None = None,
         auto_col: str | None = None,
+        defaults: dict[str, str] | None = None,
+        collations: dict[str, str] | None = None,
         df_known_empty: bool = False,
     ):
         """``partition_by`` declares directory partitioning — the columnar
@@ -122,6 +124,12 @@ class ManagedTable:
         # fetch).  NULL/absent incoming values get sequential ids; explicit
         # values pass through (MySQL semantics).
         self.auto_col = auto_col
+        # Declared DEFAULT expressions: {col: SQL expr}, evaluated for every
+        # column an INSERT omits (executor/insert.go fillRow).
+        self.defaults = defaults or {}
+        # Declared COLLATE names: {col: collation name} (util/collate/);
+        # the engine's comparison shim derives each one's key kind.
+        self.collations = collations or {}
         self.retain_versions = max(1, retain_versions)
         os.makedirs(root, exist_ok=True)
         self._version = self._open()
