@@ -22,7 +22,7 @@ def test_parse_types_and_pk():
         "CREATE TABLE t (id BIGINT PRIMARY KEY, u BIGINT UNSIGNED, "
         "name VARCHAR(32) NOT NULL, bal DECIMAL(15,2), j JSON, b BLOB)"
     )
-    assert stmt.name == "t" and stmt.pk_cols == ["id"]
+    assert stmt.name == "t" and stmt.pk_cols == ("id",)
     types = {c.name: c.spark_type for c in stmt.columns}
     assert types["u"] == "DECIMAL(20,0)"  # SURVEY §1.2 unsigned BIGINT
     assert types["name"] == "STRING" and types["bal"] == "DECIMAL(15,2)"
@@ -50,7 +50,7 @@ def test_parse_edge_validation():
         "CREATE TABLE e (src BIGINT SOURCE KEY REFERENCES v, "
         "dst BIGINT DESTINATION KEY REFERENCES v, w DOUBLE)"
     )
-    assert stmt.is_edge and stmt.pk_cols == ["src", "dst"]
+    assert stmt.is_edge and stmt.pk_cols == ("src", "dst")
     assert all(c.not_null for c in stmt.columns if c.name in ("src", "dst"))
 
 
@@ -109,12 +109,12 @@ def test_show_create_round_trip(engine):
     assert "SOURCE KEY REFERENCES people2" in ddl
     assert "DESTINATION KEY REFERENCES people2" in ddl
     reparsed = ct.parse(ddl)
-    assert reparsed.is_edge and reparsed.pk_cols == ["src", "dst"]
+    assert reparsed.is_edge and reparsed.pk_cols == ("src", "dst")
     assert [c.name for c in reparsed.columns] == ["src", "dst", "since"]
 
     vddl = engine.show_create_table("people2")
     rp = ct.parse(vddl)
-    assert rp.pk_cols == ["vertex_id"]
+    assert rp.pk_cols == ("vertex_id",)
 
     # Each column's DEFAULT and COLLATE round-trip from the managed table.
     dc = (
@@ -129,6 +129,20 @@ def test_show_create_round_trip(engine):
         return [(c.name, c.default_expr, c.collation) for c in ct.parse(ddl).columns]
 
     assert semantics(engine.show_create_table("people3")) == semantics(dc)
+
+    # The whole record round-trips: ENUM domain, generated expression,
+    # AUTO_INCREMENT, NOT NULL, key, DEFAULT, COLLATE and partitions.
+    engine.sql(
+        "CREATE TABLE people4 (id INT AUTO_INCREMENT PRIMARY KEY, "
+        "sz ENUM('S','M'), b INT AS (id + 1), n VARCHAR(5) NOT NULL)"
+    )
+    engine.sql(
+        "CREATE TABLE people5 (k INT, note VARCHAR(9) DEFAULT 'none', "
+        "nm VARCHAR(10) COLLATE utf8mb4_general_ci) PARTITION BY RANGE (k) "
+        "(PARTITION p0 VALUES LESS THAN (10), PARTITION p1 VALUES LESS THAN MAXVALUE)"
+    )
+    for t in ("people4", "people5"):
+        assert ct.parse(engine.show_create_table(t)).table == engine.managed[t].table
 
 
 def test_decimal_clamp_with_warning():
@@ -497,10 +511,15 @@ def test_insert_column_list_select_and_set(engine):
 
 
 _CI = "COLLATE utf8mb4_general_ci"
+_RANGE = (
+    "PARTITION BY RANGE (k) (PARTITION p0 VALUES LESS THAN (10), "
+    "PARTITION p1 VALUES LESS THAN (20))"
+)
 
 # (setup statements, probe statement, expected rows or a ValueError match).
-# A managed table carries its DEFAULTs and collations through DROP,
-# FLASHBACK, RENAME and ALTER; tables and views share one namespace.
+# A managed table carries its column semantics through DROP, FLASHBACK,
+# RENAME, LIKE and ALTER; tables and views share one namespace; a view over
+# a dropped or renamed table fails loudly (MySQL ERROR 1356).
 _CATALOG_CASES = {
     "collation_survives_drop_flashback": (
         [
@@ -604,6 +623,98 @@ _CATALOG_CASES = {
         [],
         "ALTER TABLE region RENAME TO nation",
         "already exists",
+    ),
+    "rename_column_keeps_domain": (
+        [
+            "CREATE TABLE own_fe (k INT PRIMARY KEY, sz ENUM('S','M'))",
+            "ALTER TABLE own_fe RENAME COLUMN sz TO sz2",
+        ],
+        "INSERT INTO own_fe VALUES (2, 'XL')",
+        "Incorrect enum value",
+    ),
+    "drop_column_drops_domain": (
+        [
+            "CREATE TABLE own_fd (k INT PRIMARY KEY, sz ENUM('S','M'))",
+            "ALTER TABLE own_fd DROP COLUMN sz",
+            "ALTER TABLE own_fd ADD COLUMN sz VARCHAR(5)",
+            "INSERT INTO own_fd VALUES (1, 'XL')",
+        ],
+        "SELECT sz FROM own_fd",
+        [("XL",)],
+    ),
+    "add_column_records_domain": (
+        [
+            "CREATE TABLE own_fx (k INT PRIMARY KEY)",
+            "ALTER TABLE own_fx ADD COLUMN sz ENUM('S','M')",
+        ],
+        "INSERT INTO own_fx VALUES (1, 'XL')",
+        "Incorrect enum value",
+    ),
+    "add_generated_column_fills_rows": (
+        [
+            "CREATE TABLE own_fy (a INT)",
+            "INSERT INTO own_fy VALUES (1), (5)",
+            "ALTER TABLE own_fy ADD COLUMN b INT AS (a + 1)",
+        ],
+        "SELECT a, b FROM own_fy ORDER BY a",
+        [(1, 2), (5, 6)],
+    ),
+    "rename_column_keeps_generated": (
+        [
+            "CREATE TABLE own_fg (a INT, b INT AS (a + 1))",
+            "ALTER TABLE own_fg RENAME COLUMN b TO b2",
+            "INSERT INTO own_fg (a) VALUES (1)",
+        ],
+        "SELECT b2 FROM own_fg",
+        [(2,)],
+    ),
+    "generated_source_pinned": (
+        ["CREATE TABLE own_fh (a INT, b INT AS (a + 1))"],
+        "ALTER TABLE own_fh RENAME COLUMN a TO a2",
+        "generated column dependency",
+    ),
+    "rename_column_keeps_auto_increment": (
+        [
+            "CREATE TABLE own_fi (id INT AUTO_INCREMENT PRIMARY KEY, n VARCHAR(5))",
+            "ALTER TABLE own_fi RENAME COLUMN id TO id2",
+            "INSERT INTO own_fi (n) VALUES ('a')",
+        ],
+        "SELECT id2, n FROM own_fi",
+        [(1, "a")],
+    ),
+    "partition_column_pinned": (
+        [f"CREATE TABLE own_fk (k INT, v INT) {_RANGE}"],
+        "ALTER TABLE own_fk DROP COLUMN k",
+        "partitioning function dependency",
+    ),
+    "like_clone_keeps_own_partitions": (
+        [
+            f"CREATE TABLE own_fp (k INT) {_RANGE}",
+            "CREATE TABLE own_fp2 LIKE own_fp",
+            "ALTER TABLE own_fp ADD PARTITION (PARTITION p2 VALUES LESS THAN (30))",
+        ],
+        "SELECT k FROM own_fp2 PARTITION (p2)",
+        "Unknown partition",
+    ),
+    "view_invalid_after_drop": (
+        [
+            "CREATE TABLE own_dv (a INT)",
+            "INSERT INTO own_dv VALUES (1)",
+            "CREATE VIEW own_dvv AS SELECT COUNT(*) AS n FROM own_dv",
+            "DROP TABLE own_dv",
+        ],
+        "SELECT n FROM own_dvv",
+        "references invalid table",
+    ),
+    "view_invalid_after_rename": (
+        [
+            "CREATE TABLE own_fv (a INT)",
+            "INSERT INTO own_fv VALUES (1)",
+            "CREATE VIEW own_fvv AS SELECT COUNT(*) AS n FROM own_fv",
+            "RENAME TABLE own_fv TO own_fv2",
+        ],
+        "SELECT n FROM own_fvv",
+        "references invalid table",
     ),
 }
 

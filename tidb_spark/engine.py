@@ -17,7 +17,9 @@ import os
 import re
 import tempfile
 from collections import OrderedDict
+from collections.abc import Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -26,6 +28,7 @@ from tidb_spark.functions.mysql import register_shim_udfs
 from tidb_spark.graph.model import GraphSchema, default_graph
 from tidb_spark.graph.shortest import all_shortest, any_shortest, top_k_shortest
 from tidb_spark.sources.dml import ManagedTable
+from tidb_spark.sqlshim import create_table as ct
 from tidb_spark.sqlshim import lex
 from tidb_spark.sqlshim import match_clause as mc
 from tidb_spark.sqlshim import merge_clause
@@ -326,6 +329,11 @@ def _collation_kind(name: str) -> str | None:
 # An edge table, and a vertex table an edge references, keep their names:
 # edge registrations reference tables by name.
 _GRAPH_RENAME = "cannot rename graph vertex or edge table {!r}"
+# MySQL ERROR 1356 (ER_VIEW_INVALID).
+_INVALID_VIEW = (
+    "View 'tidb_spark.{}' references invalid table(s) or column(s) or "
+    "function(s) or definer/invoker of view lack rights to use them"
+)
 
 
 class Engine:
@@ -354,13 +362,13 @@ class Engine:
         # analogue, surfaced but not interpreted).
         self.user_vars: dict[str, str] = {}
         self.sys_vars: dict[str, str] = {}
-        # CREATE VIEW registry: name -> original defining SELECT (the
-        # reference stores the SELECT text in the view's TableInfo,
-        # planner/core/planbuilder.go:411-498 buildCreateView).
-        self.views: dict[str, str] = {}
-        # Optional explicit column list per view (CREATE VIEW v (a, b) AS …),
-        # needed to rebuild the view after base-table DML.
-        self._view_cols: dict[str, list[str] | None] = {}
+        # CREATE VIEW registry: name -> (original defining SELECT, explicit
+        # column list of CREATE VIEW v (a, b) AS … or None).  The reference
+        # stores the SELECT text in the view's TableInfo
+        # (planner/core/planbuilder.go:411-498 buildCreateView).  A view
+        # whose SELECT no longer analyzes stays here but leaves Spark's
+        # catalog: using it raises ERROR 1356 (Engine.sql).
+        self.views: dict[str, tuple[str, list[str] | None]] = {}
         # PREPARE handler -> statement text (executor/prepared.go).
         self.prepared: dict[str, str] = {}
         # The statement cache — one design for prepared and direct
@@ -477,20 +485,16 @@ class Engine:
         self,
         name: str,
         df: DataFrame,
-        key_cols: list[str],
-        partition_spec=None,
-        domains: dict[str, tuple[str, tuple[str, ...]]] | None = None,
-        generated: dict[str, str] | None = None,
-        auto_col: str | None = None,
-        defaults: dict[str, str] | None = None,
-        collations: dict[str, str] | None = None,
+        key_cols: Sequence[str] = (),
+        *,
+        table: ct.TableDef | None = None,
         df_known_empty: bool = False,
     ) -> ManagedTable:
         """Create a writable (managed, copy-on-write parquet) table in the
         engine workspace and expose it to SQL — the DML target surface
-        (read-only dataset views cannot be mutated).  ``partition_spec``
-        (RANGE/HASH/LIST, parser/model/model.go:820-822) directory-
-        partitions every version so partition-selected scans prune."""
+        (read-only dataset views cannot be mutated).  ``table`` is the
+        declared record (CREATE TABLE, LIKE); without one it is built from
+        ``df``'s schema and ``key_cols``."""
         gen = self._incarnations.get(name, -1) + 1
         self._incarnations[name] = gen
         mt = ManagedTable(
@@ -500,12 +504,7 @@ class Engine:
             ),
             key_cols,
             df=df,
-            partition_spec=partition_spec,
-            domains=domains,
-            generated=generated,
-            auto_col=auto_col,
-            defaults=defaults,
-            collations=collations,
+            table=table,
             df_known_empty=df_known_empty,
         )
         self.managed[name] = mt
@@ -541,6 +540,7 @@ class Engine:
             self.graph.vertices[new].name = new
         self.tables[new] = self.tables.pop(old)
         self.spark.catalog.dropTempView(old)
+        self._reregister_views(old)
         if old in self.managed:
             self.managed[new] = self.managed.pop(old)
             self._refresh_view(new)
@@ -564,55 +564,45 @@ class Engine:
         if not self._claim(name, bool(m.group("ine"))):
             return
         df = self.sql(m.group("sel"))
-        self.create_table(name, df, key_cols=[])
+        self.create_table(name, df)
 
     def _run_create_like(self, m: re.Match) -> None:
-        """CREATE TABLE a LIKE b (executor/ddl.go CreateTableLike): clone
-        schema, keys, domains, generated columns, AUTO_INCREMENT and
-        DEFAULTs from a managed table; base dataset tables clone schema
-        only (their keys are not declared)."""
+        """CREATE TABLE a LIKE b (executor/ddl.go CreateTableLike): a
+        managed table's clone shares its record, which is immutable; base
+        dataset tables clone schema only (their keys are not declared)."""
         name, src = m.group("name"), m.group("src")
         if not self._claim(name, bool(m.group("ine"))):
             return
-        if src in self.managed:
-            smt = self.managed[src]
-            empty = self.spark.createDataFrame([], schema=smt.df().schema)
-            self.create_table(
-                name,
-                empty,
-                key_cols=list(smt.key_cols),
-                partition_spec=smt.partition_spec,
-                domains=dict(smt.domains),
-                generated=dict(smt.generated),
-                auto_col=smt.auto_col,
-                defaults=dict(smt.defaults),
-                collations=dict(smt.collations),
-                df_known_empty=True,
-            )
-        elif src in self.tables:
-            empty = self.spark.createDataFrame(
-                [], schema=self.tables[src].schema
-            )
-            self.create_table(name, empty, key_cols=[], df_known_empty=True)
-        else:
+        if src not in self.tables:
             raise ValueError(f"CREATE TABLE LIKE: unknown table {src!r}")
+        smt = self.managed.get(src)
+        empty = self.spark.createDataFrame([], schema=self.tables[src].schema)
+        self.create_table(name, empty, table=smt and smt.table, df_known_empty=True)
 
     def _bind_insert(
-        self, mt, name: str, rows: DataFrame, cols: list[str]
+        self, mt, name: str, rows: DataFrame, cols: list[str] | None = None
     ) -> DataFrame:
         """Bind an incoming row source to the target schema: the named
         columns take the source's output positionally, generated columns
         are rejected (ErrBadGeneratedColumn), unknown names error, and
         every unnamed column takes its declared DEFAULT else NULL
-        (executor/insert.go fillRow)."""
+        (executor/insert.go fillRow).  Without a column list the source
+        binds to the non-generated columns (MySQL requires DEFAULT
+        placeholders for generated ones; omission is our equivalent)."""
         fields = mt.df().schema.fields
         known = {f.name for f in fields}
-        bad = [c for c in cols if c in mt.generated]
-        if bad:
+        generated = mt.table.generated
+        if cols is None:
+            cols = [f.name for f in fields if f.name not in generated]
+            if generated and len(rows.columns) != len(cols):
+                self._reject_generated(mt, name, generated)
+        if len(rows.columns) != len(cols):
+            # MySQL ERROR 1136
             raise ValueError(
-                f"The value specified for generated column {bad[0]!r} "
-                f"in table {name!r} is not allowed"
+                f"Column count doesn't match value count: {len(cols)} "
+                f"columns, {len(rows.columns)} values"
             )
+        self._reject_generated(mt, name, cols)
         unknown = [c for c in cols if c not in known]
         if unknown:
             # MySQL ERROR 1054
@@ -622,12 +612,23 @@ class Engine:
         full = rows.toDF(*cols)
         for f in fields:
             if f.name not in cols:
-                dexpr = mt.defaults.get(f.name)
+                c = mt.table.col(f.name)
+                dexpr = c and c.default_expr
                 full = full.withColumn(
                     f.name,
                     (F.expr(dexpr) if dexpr else F.lit(None)).cast(f.dataType),
                 )
         return full.select(*[f.name for f in fields])
+
+    @staticmethod
+    def _reject_generated(mt: ManagedTable, name: str, cols) -> None:
+        """A write may not name a generated column (ErrBadGeneratedColumn)."""
+        bad = [c for c in cols if c in mt.table.generated]
+        if bad:
+            raise ValueError(
+                f"The value specified for generated column {bad[0]!r} "
+                f"in table {name!r} is not allowed"
+            )
 
     def _refresh_view(self, name: str) -> None:
         df = self.managed[name].df()
@@ -650,26 +651,26 @@ class Engine:
         # expanded per consuming statement, planbuilder.go buildDataSource).
         self._reregister_views(touched=name)
 
-    def _reregister_views(self, touched: str | None = None) -> None:
-        """Re-register view definitions.  ``touched`` limits the rebuild to
-        views whose body mentions that table name (word-boundary substring
-        — conservative: false positives only re-run a cheap analysis) so a
-        DML statement costs O(dependent views), not O(all views)."""
-        for vname, body in self.views.items():
-            if touched is not None and not re.search(
-                rf"\b{re.escape(touched)}\b", body
-            ):
+    def _reregister_views(self, touched: str, seen: set[str] | None = None) -> None:
+        """Re-register the views whose body mentions ``touched``
+        (word-boundary substring — conservative: false positives only
+        re-run a cheap analysis), so a DML statement costs O(dependent
+        views), not O(all views); then the views over those.  A view
+        whose body no longer analyzes (its table was dropped or renamed)
+        leaves Spark's catalog instead of keeping the old plan, and comes
+        back when a same-name table does."""
+        seen = set() if seen is None else seen
+        for vname, (body, cols) in self.views.items():
+            if vname in seen or not re.search(rf"\b{re.escape(touched)}\b", body):
                 continue
+            seen.add(vname)
             try:
                 vdf = self.sql(body)
-                cols = self._view_cols.get(vname)
-                if cols:
-                    vdf = vdf.toDF(*cols)
-                vdf.createOrReplaceTempView(vname)
-            except Exception:
-                # A view whose base objects are gone stays registered with
-                # its old plan; MySQL likewise only errors at use time.
-                pass
+            except (AnalysisException, ValueError):
+                self.spark.catalog.dropTempView(vname)
+            else:
+                (vdf.toDF(*cols) if cols else vdf).createOrReplaceTempView(vname)
+            self._reregister_views(vname, seen)
 
     def _run_create(self, m: re.Match) -> None:
         """CREATE TABLE → managed copy-on-write table, plus graph-schema
@@ -678,38 +679,20 @@ class Engine:
         must reference registered vertex tables; a table with a single
         integral-column PRIMARY KEY registers as a vertex table (the
         reference's implicit vertex criterion, SURVEY §1.4)."""
-        from tidb_spark.sqlshim import create_table as _ct
-
-        stmt = _ct.parse(m.string)
+        stmt = ct.parse(m.string)
         if not self._claim(stmt.name, stmt.if_not_exists):
             return
-        empty = self.spark.createDataFrame([], schema=stmt.schema_ddl())
-        cols = stmt.columns
-        collations = {c.name: c.collation for c in cols if c.collation}
-        for c in collations.values():
-            _collation_kind(c)  # rejects a name outside the registry
-        if stmt.is_edge:
-            src = next(c for c in stmt.columns if c.source_ref)
-            dst = next(c for c in stmt.columns if c.dest_ref)
+        t = stmt.table
+        for coll in t.collations.values():
+            _collation_kind(coll)  # rejects a name outside the registry
+        empty = self.spark.createDataFrame([], schema=t.schema_ddl())
+        if t.edge:
             # Validates the vertex references before any state mutates.
-            self.graph.add_edge_table(
-                stmt.name, empty, src.name, dst.name, src.source_ref,
-                dst.dest_ref,
-            )
-        self.create_table(
-            stmt.name, empty, key_cols=stmt.pk_cols,
-            partition_spec=stmt.partition_spec,
-            domains={c.name: (c.domain_kind, c.domain) for c in cols if c.domain_kind},
-            generated={
-                c.name: translate(c.generated_expr) for c in cols if c.generated_expr
-            },
-            auto_col=next((c.name for c in cols if c.auto_increment), None),
-            defaults={c.name: c.default_expr for c in cols if c.default_expr},
-            collations=collations, df_known_empty=True,
-        )
-        if not stmt.is_edge and len(stmt.pk_cols) == 1:
-            pk = next(c for c in stmt.columns if c.name == stmt.pk_cols[0])
-            if pk.spark_type in ("TINYINT", "SMALLINT", "INT", "BIGINT"):
+            self.graph.add_edge_table(stmt.name, empty, *t.edge)
+        self.create_table(stmt.name, empty, table=t, df_known_empty=True)
+        if not t.edge and len(t.key_cols) == 1:
+            pk = t.col(t.key_cols[0])
+            if pk.spark_type in ct.INTEGRAL:
                 self.graph.add_vertex_table(
                     stmt.name, self.managed[stmt.name].df(), pk.name
                 )
@@ -727,8 +710,6 @@ class Engine:
         schema."""
         m = re.match(r"(?is)^\s*ALTER\s+TABLE\s+`?(\w+)`?\s+(.*?)\s*;?\s*$", query)
         name, body = m.group(1), m.group(2)
-        from tidb_spark.sqlshim import create_table as ctmod
-
         if re.match(
             r"(?is)^(ADD|DROP|TRUNCATE)\s+PARTITION\b", body
         ):
@@ -738,34 +719,27 @@ class Engine:
         clauses = lex.split_args(body)
 
         # Graph-ify: exactly two MODIFY clauses carrying SOURCE/DESTINATION.
+        modify = r"(?is)^MODIFY(?:\s+COLUMN)?\s+"
         mods = [
-            c for c in clauses
-            if re.match(r"(?is)^MODIFY(\s+COLUMN)?\b", c)
-            and (ctmod._SRC_RE.search(c) or ctmod._DST_RE.search(c))
+            ct.parse_column(re.sub(modify, "", c))
+            for c in clauses
+            if re.match(modify, c) and (ct._SRC_RE.search(c) or ct._DST_RE.search(c))
         ]
         if mods:
-            if len(mods) != 2 or len(clauses) != 2:
+            src = [c for c in mods if c.source_ref]
+            dst = [c for c in mods if c.dest_ref]
+            if len(src) != 1 or len(dst) != 1 or len(clauses) != 2:
                 raise ValueError(
                     "graph-ify ALTER needs exactly two MODIFY clauses "
                     "(one SOURCE KEY, one DESTINATION KEY)"
                 )
-            src_m = next((ctmod._SRC_RE.search(c), c) for c in mods if ctmod._SRC_RE.search(c))
-            dst_m = next((ctmod._DST_RE.search(c), c) for c in mods if ctmod._DST_RE.search(c))
-            if src_m[1] == dst_m[1]:
-                raise ValueError(
-                    "a column cannot be both SOURCE KEY and DESTINATION KEY"
-                )
-            col_of = lambda c: re.match(
-                r"(?is)^MODIFY(?:\s+COLUMN)?\s+`?(\w+)`?", c
-            ).group(1)
-            src_col, dst_col = col_of(src_m[1]), col_of(dst_m[1])
-            if name in self.managed and self.managed[name].key_cols:
+            mt = self.managed.get(name)
+            if mt is not None and mt.key_cols:
                 raise ValueError("can not specified primary key on edge")
-            df = self.tables[name]
-            self.graph.add_edge_table(
-                name, df, src_col, dst_col,
-                src_m[0].group(1), dst_m[0].group(1),
-            )
+            edge = (src[0].name, dst[0].name, src[0].source_ref, dst[0].dest_ref)
+            self.graph.add_edge_table(name, self.tables[name], *edge)
+            if mt is not None:
+                mt.table = mt.table.as_edge(*edge)
             return
 
         rn = re.match(r"(?is)^RENAME\s+(?:TO\s+)?`?(\w+)`?$", body)
@@ -775,10 +749,9 @@ class Engine:
         if name not in self.managed:
             raise ValueError(f"table {name!r} is not a managed table")
         mt = self.managed[name]
-        df = mt.df()
-        # Column semantics change with the data: applied after the write.
-        key_cols, defaults = list(mt.key_cols), dict(mt.defaults)
-        collations = dict(mt.collations)
+        # Each clause folds over the record and the frame; the new record
+        # replaces the old one only once the rewritten data has committed.
+        t, df = mt.table, mt.df()
         for clause in clauses:
             am = re.match(r"(?is)^ADD(?:\s+COLUMN)?\s+(.*)$", clause)
             dm = re.match(r"(?is)^DROP(?:\s+COLUMN)?\s+`?(\w+)`?$", clause)
@@ -786,36 +759,29 @@ class Engine:
                 r"(?is)^RENAME\s+COLUMN\s+`?(\w+)`?\s+TO\s+`?(\w+)`?$", clause
             )
             if am:
-                cols = ctmod.parse(f"CREATE TABLE t ({am.group(1)})").columns
+                cols = ct.parse(f"CREATE TABLE t ({am.group(1)})").columns
                 if len(cols) != 1:
                     raise ValueError(f"unsupported ALTER TABLE clause: {clause!r}")
                 c = cols[0]
-                dv = c.default_expr or "NULL"
-                df = df.withColumn(c.name, F.expr(f"CAST({dv} AS {c.spark_type})"))
-                if c.default_expr:
-                    defaults[c.name] = c.default_expr
                 if c.collation:
                     _collation_kind(c.collation)  # rejects an unknown name
-                    collations[c.name] = c.collation
+                t = t.add_column(c)
+                # Existing rows take the generated value, else the DEFAULT.
+                value = (
+                    translate(c.generated_expr) if c.generated_expr
+                    else c.default_expr or "NULL"
+                )
+                cast = f"CAST(({value}) AS {c.spark_type})"
+                df = df.withColumn(c.name, F.expr(cast))
             elif dm:
-                col = dm.group(1)
-                if col in key_cols:
-                    raise ValueError(f"cannot drop key column {col!r}")
-                df = df.drop(col)
-                defaults.pop(col, None)
-                collations.pop(col, None)
+                t = t.drop_column(dm.group(1))
+                df = df.drop(dm.group(1))
             elif rc:
-                old, new = rc.group(1), rc.group(2)
-                df = df.withColumnRenamed(old, new)
-                key_cols = [new if k == old else k for k in key_cols]
-                defaults = {new if k == old else k: v for k, v in defaults.items()}
-                collations = {
-                    new if k == old else k: v for k, v in collations.items()
-                }
+                t = t.rename_column(*rc.groups())
+                df = df.withColumnRenamed(*rc.groups())
             else:
                 raise ValueError(f"unsupported ALTER TABLE clause: {clause!r}")
-        mt.write(df)
-        mt.key_cols, mt.defaults, mt.collations = key_cols, defaults, collations
+        mt.write(df, table=t)
         self._refresh_view(name)
 
     def _run_alter_partition(self, name: str, body: str) -> None:
@@ -827,8 +793,6 @@ class Engine:
         partitions but keeps them.  Row removal is a partition-pruned
         copy-on-write: the surviving directories are read, the dropped
         ones never scanned."""
-        from tidb_spark.sqlshim import partition as pt
-
         if name not in self.managed or self.managed[name].partition_spec is None:
             raise ValueError(f"table {name!r} is not partitioned")
         mt = self.managed[name]
@@ -844,47 +808,9 @@ class Engine:
                     "rows; use the reference's COALESCE/ADD rebalance "
                     "(unsupported)"
                 )
-            for item in lex.split_args(am.group(1)):
-                item = item.strip()
-                if spec.method == "RANGE":
-                    pm = pt._RANGE_PART_RE.match(item)
-                    if pm is None:
-                        raise ValueError(f"bad partition def: {item!r}")
-                    bound = "MAXVALUE" if pm.group("maxval") else pm.group("bound")
-                    prev = pt._parse_literal(str(spec.bounds[-1]))
-                    if not pt._lt(prev, pt._parse_literal(bound)):
-                        raise ValueError(
-                            "VALUES LESS THAN value must be strictly "
-                            "increasing for each partition"
-                        )
-                    spec.names.append(pm.group("name"))
-                    spec.bounds.append(bound)
-                else:
-                    pm = pt._LIST_PART_RE.match(item)
-                    if pm is None:
-                        raise ValueError(f"bad partition def: {item!r}")
-                    new_vals = [
-                        v.strip() for v in lex.split_args(pm.group("vals"))
-                    ]
-                    existing = {
-                        pt._parse_literal(str(v))
-                        for vs in spec.bounds
-                        for v in vs
-                    }
-                    dup = [
-                        v for v in new_vals
-                        if pt._parse_literal(str(v)) in existing
-                    ]
-                    if dup:
-                        raise ValueError(
-                            f"Multiple definition of same constant: {dup[0]}"
-                        )
-                    spec.names.append(pm.group("name"))
-                    spec.bounds.append(new_vals)
-                if pm.group("name") in spec.names[:-1]:
-                    raise ValueError("Duplicate partition name")
             # Definitions only — existing rows keep their labels; nothing
             # to rewrite.
+            mt.table = mt.table.with_partitions(spec.added(am.group(1)))
             return
         targets_text = (dm or tm).group(1)
         targets = [t.strip().strip("`") for t in targets_text.split(",")]
@@ -899,14 +825,8 @@ class Engine:
         keep = [n for n in spec.partition_names() if n not in targets]
         # Partition-pruned survivor read: only the kept directories scan.
         survivors = mt.scan_partitions(keep)
-        if dm:
-            kept = [
-                (n, b) for n, b in zip(spec.names, spec.bounds)
-                if n not in targets
-            ]
-            spec.names = [n for n, _ in kept]
-            spec.bounds = [b for _, b in kept]
-        mt.write(survivors)
+        table = mt.table.with_partitions(spec.without(targets)) if dm else None
+        mt.write(survivors, table=table)
         self._refresh_view(name)
 
     def _run_ddl(self, m: re.Match) -> None:
@@ -941,6 +861,7 @@ class Engine:
                     self.graph.vertices.pop(name, None),
                     self.graph.edges.pop(name, None),
                 )
+                self._reregister_views(name)
             else:
                 mt.truncate()
                 self._refresh_view(name)
@@ -998,34 +919,16 @@ class Engine:
             )
             setm = re.match(r"(?is)^SET\s+(.*)$", body)
             if vm:
+                cols = None
                 if vm.group(1):
                     cols = [c.strip().strip("`") for c in vm.group(1).split(",")]
-                else:
-                    # Bare VALUES bind positionally to the NON-generated
-                    # columns (MySQL requires DEFAULT placeholders for
-                    # generated ones; omission is our equivalent).
-                    cols = [
-                        f.name
-                        for f in mt.df().schema.fields
-                        if f.name not in mt.generated
-                    ]
-                rows = self.spark.sql(
-                    f"SELECT * FROM (VALUES {vm.group(2)}) AS "
-                    f"__v({', '.join(cols)})"
-                )
+                rows = self.spark.sql(f"SELECT * FROM (VALUES {vm.group(2)})")
                 full = self._bind_insert(mt, name, rows, cols)
             elif csm:
                 # INSERT INTO t (c1, c2) SELECT … — the listed columns bind
                 # positionally to the SELECT output, the rest take DEFAULT.
                 cols = [c.strip().strip("`") for c in csm.group(1).split(",")]
                 rows = self.spark.sql(csm.group(2))
-                if len(rows.columns) != len(cols):
-                    # MySQL ERROR 1136
-                    raise ValueError(
-                        f"Column count doesn't match value count: column "
-                        f"list names {len(cols)}, SELECT supplies "
-                        f"{len(rows.columns)}"
-                    )
                 full = self._bind_insert(mt, name, rows, cols)
             elif setm:
                 # INSERT INTO t SET a = 1, b = 'x' (MySQL alternative
@@ -1043,31 +946,8 @@ class Engine:
                 )
                 full = self._bind_insert(mt, name, rows, cols)
             else:
-                # Plain INSERT … SELECT binds positionally: the full table
-                # arity for ordinary tables, the non-generated arity when
-                # generated columns exist (supplying those is
-                # ErrBadGeneratedColumn, as in the VALUES path).
-                rows = self.spark.sql(body)
-                fields = mt.df().schema.fields
-                non_gen = [
-                    f.name for f in fields if f.name not in mt.generated
-                ]
-                if mt.generated and len(rows.columns) != len(non_gen):
-                    gen_name = next(iter(mt.generated))
-                    raise ValueError(
-                        f"The value specified for generated column "
-                        f"{gen_name!r} in table {name!r} is not allowed"
-                        f" (SELECT must supply exactly the "
-                        f"{len(non_gen)} non-generated columns)"
-                    )
-                if not mt.generated and len(rows.columns) != len(fields):
-                    # MySQL ERROR 1136
-                    raise ValueError(
-                        f"Column count doesn't match value count: "
-                        f"table {name!r} has {len(fields)} columns, "
-                        f"SELECT supplies {len(rows.columns)}"
-                    )
-                full = self._bind_insert(mt, name, rows, non_gen)
+                # Plain INSERT … SELECT binds positionally, as bare VALUES.
+                full = self._bind_insert(mt, name, self.spark.sql(body))
             if odku is not None:
                 # ON DUPLICATE KEY UPDATE (executor/insert.go:43): in each
                 # assignment, VALUES(col) is the incoming row, a bare column
@@ -1100,13 +980,8 @@ class Engine:
             assignments = {}
             for frag in lex.split_args(set_part):  # string/paren-aware commas
                 col, expr = frag.split("=", 1)
-                cname = col.strip().strip("`")
-                if cname in mt.generated:
-                    raise ValueError(
-                        f"The value specified for generated column "
-                        f"{cname!r} in table {name!r} is not allowed"
-                    )
-                assignments[cname] = F.expr(expr.strip())
+                assignments[col.strip().strip("`")] = F.expr(expr.strip())
+            self._reject_generated(mt, name, assignments)
             mt.update(where, assignments)
         else:  # DELETE
             where = (
@@ -1151,11 +1026,7 @@ class Engine:
                         f"multi-table UPDATE may only assign columns of "
                         f"{name!r} (got {qual}.{cname})"
                     )
-            if cname in mt.generated:
-                raise ValueError(
-                    f"The value specified for generated column {cname!r} "
-                    f"in table {name!r} is not allowed"
-                )
+            self._reject_generated(mt, name, [cname])
             if cname in mt.key_cols:
                 # The merge is keyed on these columns; rewriting the key in
                 # the same pass is not expressible as one keyed MERGE.
@@ -1355,7 +1226,22 @@ class Engine:
         Statements route through three dispatch tables (_PRE_REWRITE,
         _AFTER_VARS, _AFTER_TRANSLATE, defined below the class), one per
         lowering phase, then through the parser-routed forms; whatever is
-        left is a query, lowered and handed to ``spark.sql``."""
+        left is a query, lowered and handed to ``spark.sql``.
+
+        A view whose tables are gone (``_reregister_views``) is absent
+        from Spark's catalog; a statement that uses it fails with MySQL's
+        ERROR 1356, never with rows."""
+        try:
+            return self._sql(query, args)
+        except AnalysisException as e:
+            if e.getCondition() == "TABLE_OR_VIEW_NOT_FOUND":
+                rel = e.getMessageParameters().get("relationName", "")
+                view = rel.split(".")[-1].strip("`")
+                if view in self.views:
+                    raise ValueError(_INVALID_VIEW.format(view)) from None
+            raise
+
+    def _sql(self, query: str, args: dict | list | None) -> DataFrame:
         # Statement-entry snapshot + reset for BOTH provenance flags
         # (sessionctx semantics: @@last_plan_from_* report the PREVIOUS
         # statement, so reads return the snapshot while the live flags
@@ -1909,8 +1795,8 @@ class Engine:
                 )
             df = df.toDF(*cols)
         df.createOrReplaceTempView(name)
-        self.views[name] = body.strip()
-        self._view_cols[name] = cols
+        self.views[name] = (body.strip(), cols)
+        self._reregister_views(name)
 
     def _run_drop_view(self, m: re.Match) -> None:
         name = m.group("name")
@@ -1923,7 +1809,7 @@ class Engine:
             raise ValueError(f"DROP VIEW: {name!r} is not a known view ({kind})")
         self.spark.catalog.dropTempView(name)
         del self.views[name]
-        self._view_cols.pop(name, None)
+        self._reregister_views(name)
 
     # -- Optimizer hints (util/hint/, planner/optimize.go hint binding) ----
     #
@@ -2014,7 +1900,7 @@ class Engine:
         the same statement.  Qualified references always resolve
         exactly; a derived table's projection does not propagate its
         source collation (resolver-level feature, documented gap)."""
-        if not any(mt.collations for mt in self.managed.values()):
+        if not any(mt.table.collations for mt in self.managed.values()):
             return query
         # Mask string literals first: a literal containing "name = name"
         # must never be rewritten, and the table-reference scan must not
@@ -2039,7 +1925,7 @@ class Engine:
         mt = self.managed.get(table)
         if mt is None:
             return {}
-        kinds = {c: _collation_kind(n) for c, n in mt.collations.items()}
+        kinds = {c: _collation_kind(n) for c, n in mt.table.collations.items()}
         return {c: k for c, k in kinds.items() if k}
 
     _CI_KW = (
@@ -2474,7 +2360,7 @@ class Engine:
             if name not in self.views:
                 raise ValueError(f"SHOW CREATE VIEW: unknown view {name!r}")
             return mk(
-                [(name, f"CREATE VIEW `{name}` AS {self.views[name]}")],
+                [(name, f"CREATE VIEW `{name}` AS {self.views[name][0]}")],
                 "View string, `Create View` string",
             )
         if re.match(r"(?is)^SHOW\s+DATABASES$", q):
@@ -2567,14 +2453,7 @@ class Engine:
                 df = self.spark.table(name)
             else:
                 df = self.graph.vertex(name).df
-            keys: set[str] = set()
-            if name in self.managed and self.managed[name].key_cols:
-                keys = set(self.managed[name].key_cols)
-            elif name in self.graph.vertices:
-                keys = {self.graph.vertex(name).id_col}
-            elif name in self.graph.edges:
-                e = self.graph.edge(name)
-                keys = {e.src_col, e.dst_col}
+            keys = set() if name in self.views else set(self._record(name).key_cols)
             rows = [
                 (
                     f.name,
@@ -3497,58 +3376,27 @@ class Engine:
     def show_tables(self) -> list[str]:
         return sorted(self.tables)
 
+    def _record(self, name: str) -> ct.TableDef:
+        """A table's record: a managed table's own, else one built from the
+        table's schema and its graph registration."""
+        if name in self.managed:
+            return self.managed[name].table
+        e, vertex = self.graph.edges.get(name), self.graph.vertices.get(name)
+        if e is not None:
+            t = ct.TableDef.from_schema(e.df.schema)
+            return t.as_edge(e.src_col, e.dst_col, e.src_table, e.dst_table)
+        df = self.tables[name] if name in self.tables else self.graph.vertex(name).df
+        return ct.TableDef.from_schema(df.schema, [vertex.id_col] if vertex else ())
+
     def show_create_table(self, name: str) -> str:
-        """SHOW CREATE TABLE, round-tripping the graph DDL extensions
-        (SOURCE KEY / DESTINATION KEY — executor/show.go:922) for edge
-        tables, and each managed column's DEFAULT and COLLATE."""
-        mt = self.managed.get(name)
-
-        def _col(f) -> str:
-            line = f"  `{f.name}` {f.dataType.simpleString().upper()}"
-            if mt is not None and f.name in mt.defaults:
-                line += f" DEFAULT {mt.defaults[f.name]}"
-            if mt is not None and f.name in mt.collations:
-                line += f" COLLATE {mt.collations[f.name]}"
-            return line
-
+        """SHOW CREATE TABLE: the table's record as DDL (``TableDef.ddl``,
+        which round-trips the graph DDL extensions — SOURCE KEY /
+        DESTINATION KEY, executor/show.go:922)."""
         if name in self.views:
             # show.go serves views through SHOW CREATE TABLE as well
             # (fetchShowCreateTable4View).
-            return f"CREATE VIEW `{name}` AS {self.views[name]}"
-        if name in self.graph.edges:
-            e = self.graph.edge(name)
-            cols = []
-            for f in e.df.schema.fields:
-                line = _col(f)
-                if f.name == e.src_col:
-                    line += f" SOURCE KEY REFERENCES {e.src_table}"
-                elif f.name == e.dst_col:
-                    line += f" DESTINATION KEY REFERENCES {e.dst_table}"
-                cols.append(line)
-            body = ",\n".join(cols)
-            return f"CREATE TABLE `{name}` (\n{body}\n)"
-        df = self.tables[name] if name in self.tables else self.graph.vertex(name).df
-        cols = [_col(f) for f in df.schema.fields]
-        pk_cols: list[str] = []
-        if name in self.graph.vertices:
-            pk_cols = [self.graph.vertex(name).id_col]
-        elif mt is not None and mt.key_cols:
-            pk_cols = list(mt.key_cols)
-        if len(pk_cols) == 1:
-            for i, f in enumerate(df.schema.fields):
-                if f.name == pk_cols[0]:
-                    cols[i] += " PRIMARY KEY"
-        elif pk_cols:
-            cols.append(
-                "  PRIMARY KEY (" + ", ".join(f"`{c}`" for c in pk_cols) + ")"
-            )
-        body = ",\n".join(cols)
-        tail = ""
-        if mt is not None and mt.partition_spec:
-            # Round-trips the partition clause (executor/show.go prints the
-            # reference's partition info the same way).
-            tail = "\n" + mt.partition_spec.ddl()
-        return f"CREATE TABLE `{name}` (\n{body}\n){tail}"
+            return f"CREATE VIEW `{name}` AS {self.views[name][0]}"
+        return self._record(name).ddl(name)
 
 
 # Statement dispatch for Engine.sql: one (pattern, handler) table per phase,

@@ -40,13 +40,16 @@ import json
 import os
 import shutil
 import time
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from tidb_spark.operators.width import estimated_bytes, split_bytes, tasks
+from tidb_spark.sqlshim.create_table import TableDef
 from tidb_spark.sqlshim.partition import PART_COL
+from tidb_spark.sqlshim.translate import translate
 
 _TS = ".commit_ts"  # v<N>.commit_ts: version N's commit point
 # v<N>/_schema.json: version N's StructType.  Spark's file listing skips
@@ -74,65 +77,45 @@ class ManagedTable:
         self,
         spark: SparkSession,
         root: str,
-        key_cols: list[str],
+        key_cols: Sequence[str] = (),
         *,
         df: DataFrame | None = None,
         partition_by: list[str] | None = None,
         partition_spec=None,
         retain_versions: int = 8,
-        domains: dict[str, tuple[str, tuple[str, ...]]] | None = None,
-        generated: dict[str, str] | None = None,
-        auto_col: str | None = None,
-        defaults: dict[str, str] | None = None,
-        collations: dict[str, str] | None = None,
+        table: TableDef | None = None,
         df_known_empty: bool = False,
     ):
-        """``partition_by`` declares directory partitioning — the columnar
+        """``table`` is the table's record (``sqlshim.create_table``): its
+        columns with what each declares, its key and its partition spec.
+        Without one, it is built from ``df``'s schema (the stored one on
+        reopen), ``key_cols`` and ``partition_spec``.
+
+        ``partition_by`` declares directory partitioning — the columnar
         equivalent of the reference's RANGE/HASH/LIST table partitioning
         (parser/model/model.go:820-822): equality/range predicates on the
         partition columns prune whole directories at plan time (the
         rule_partition_processor.go analogue is Spark's native partition
-        pruning + dynamic partition pruning for join keys).
+        pruning + dynamic partition pruning for join keys).  A RANGE/HASH/
+        LIST partition spec replaces it: every write computes the hidden
+        ``__part`` label (codegen CASE/pmod) and directory-partitions on it.
 
         ``retain_versions`` bounds history kept for stale reads
         (:meth:`as_of`) — the GC-safepoint analogue of the reference's
         stale-read window."""
         self.spark = spark
         self.root = root
-        self.key_cols = key_cols
-        self.partition_by = partition_by or []
-        # RANGE/HASH/LIST spec (sqlshim.partition.PartitionSpec): every
-        # write computes the hidden ``__part`` label (codegen CASE/pmod)
-        # and directory-partitions on it, so a ``__part`` filter is native
-        # Spark partition pruning — the reference's
-        # rule_partition_processor behavior at the storage layer.
-        self.partition_spec = partition_spec
-        if partition_spec is not None:
-            self.partition_by = [PART_COL]
-        # ENUM/SET value domains per column: {col: ("enum"|"set", values)}.
-        # SURVEY §1.2 — storage type is STRING, validity enforced at write
-        # (types/enum.go, types/set.go; strict-mode ErrTruncatedWrongValue).
-        self.domains = domains or {}
-        # Generated columns: {col: spark SQL expr over sibling columns}
-        # (parser/model/model.go:111).  Recomputed on every write path, so
-        # stored values can never drift from their definition.
-        self.generated = generated or {}
-        # AUTO_INCREMENT column (ddl/ddl_api.go:2463 handleAutoIncID): the
-        # reference allocates from a per-table counter; here the counter is
-        # MAX(col) over the current version, read once per statement (one
-        # 1-row action — control-plane-sized, like the reference's counter
-        # fetch).  NULL/absent incoming values get sequential ids; explicit
-        # values pass through (MySQL semantics).
-        self.auto_col = auto_col
-        # Declared DEFAULT expressions: {col: SQL expr}, evaluated for every
-        # column an INSERT omits (executor/insert.go fillRow).
-        self.defaults = defaults or {}
-        # Declared COLLATE names: {col: collation name} (util/collate/);
-        # the engine's comparison shim derives each one's key kind.
-        self.collations = collations or {}
         self.retain_versions = max(1, retain_versions)
         os.makedirs(root, exist_ok=True)
         self._version = self._open()
+        if table is None:
+            struct = df.schema if df is not None else self._schema(self._version)
+            fields = [f for f in struct if f.name != PART_COL]
+            table = TableDef.from_schema(fields, key_cols, partition_spec)
+        self.table = table
+        self.partition_by = partition_by or []
+        if table.partition_spec is not None:
+            self.partition_by = [PART_COL]
         # Per-version DataFrame cache for df(): versions are immutable
         # (append-only + GC of OLD versions only), so the current
         # version's frame is the same plan every time — and one DML
@@ -145,16 +128,22 @@ class ManagedTable:
         if df is not None and self._version < 0:
             self.write(df, known_empty=df_known_empty)
 
+    @property
+    def key_cols(self) -> tuple[str, ...]:
+        return self.table.key_cols
+
+    @property
+    def partition_spec(self):
+        return self.table.partition_spec
+
     def _apply_generated(self, rows: DataFrame) -> DataFrame:
         """Compute generated columns from their defining expressions,
         overwriting whatever arrived (the engine rejects explicit writes to
         generated columns before this point)."""
-        if not self.generated:
-            return rows
-        types = {f.name: f.dataType for f in self.df().schema.fields}
-        for col, expr in self.generated.items():
-            if col in rows.columns:
-                rows = rows.withColumn(col, F.expr(expr).cast(types[col]))
+        for c in self.table.columns:
+            if c.generated_expr and c.name in rows.columns:
+                value = F.expr(translate(c.generated_expr)).cast(c.spark_type)
+                rows = rows.withColumn(c.name, value)
         return rows
 
     def _fill_auto_increment(self, rows: DataFrame) -> DataFrame:
@@ -163,12 +152,12 @@ class ManagedTable:
         The row_number window runs over the INSERT BATCH only (bounded by
         statement size, not table size) — the table itself never funnels
         through one partition."""
-        if not self.auto_col:
+        col = next((c for c in self.table.columns if c.auto_increment), None)
+        if col is None:
             return rows
-        types = {f.name: f.dataType for f in self.df().schema.fields}
-        auto = self.auto_col
+        auto = col.name
         if auto not in rows.columns:
-            rows = rows.withColumn(auto, F.lit(None).cast(types[auto]))
+            rows = rows.withColumn(auto, F.lit(None).cast(col.spark_type))
         if rows.where(F.col(auto).isNull()).isEmpty():
             return rows
         # MySQL's counter advances past explicit values: a batch of
@@ -190,7 +179,7 @@ class ManagedTable:
         ).over(w)
         return rows.withColumn(
             auto,
-            F.coalesce(F.col(auto), (F.lit(start) + nth_null).cast(types[auto])),
+            F.coalesce(F.col(auto), (F.lit(start) + nth_null).cast(col.spark_type)),
         )
 
     def _check_domains(self, rows: DataFrame, cols: set[str] | None = None) -> None:
@@ -199,8 +188,9 @@ class ManagedTable:
         ParseEnumName errors, executor/insert writes abort).  ENUM: the
         value must be a member (or NULL).  SET: a comma-joined subset of
         members, '' allowed (the empty set)."""
-        for col, (kind, vals) in self.domains.items():
-            if col not in rows.columns or (cols is not None and col not in cols):
+        for d in self.table.columns:
+            col, kind, vals = d.name, d.domain_kind, d.domain
+            if not kind or col not in rows.columns or not (cols is None or col in cols):
                 continue
             c = F.col(col)
             if kind == "enum":
@@ -293,18 +283,26 @@ class ManagedTable:
             return None
         return width
 
-    def write(self, df: DataFrame, *, known_empty: bool = False) -> None:
+    def write(
+        self, df: DataFrame, *, known_empty: bool = False, table: TableDef | None = None
+    ) -> None:
         """Commit ``df`` as the next version: the table's full new
         contents (copy-on-write), at the width :meth:`_width` sizes.  An
         empty version — declared by the caller (``known_empty``: CREATE
         TABLE / CREATE LIKE, where PySpark's createDataFrame([]) compiles
         to a LogicalRDD the optimizer cannot prove empty) or proved by the
-        optimized plan — is its schema file alone, with no Spark job."""
-        if self.partition_spec is not None:
+        optimized plan — is its schema file alone, with no Spark job.
+
+        ``table`` (ALTER TABLE) is a new record for the version: it labels
+        the partitions, and replaces the table's record only once the
+        version has committed."""
+        table = table or self.table
+        if table.partition_spec is not None:
             df = df.drop(PART_COL).withColumn(
-                PART_COL, self.partition_spec.label_col()
+                PART_COL, table.partition_spec.label_col()
             )
         self._put(df, 0 if known_empty else self._width(df))
+        self.table = table
 
     def _put(self, df: DataFrame, width: int | None) -> None:
         """Write and commit ``v<N+1>/``: ``width`` parquet files (None: the
@@ -330,6 +328,13 @@ class ManagedTable:
             raise
         self._commit(self._version + 1)
 
+    def _schema(self, version: int) -> StructType:
+        """Version ``version``'s stored StructType (empty before the first)."""
+        if version < 0:
+            return StructType()
+        with open(os.path.join(self._path(version), _SCHEMA)) as fh:
+            return StructType.fromJson(json.load(fh))
+
     def _read(self, version: int, parts: list[str] | None = None) -> DataFrame:
         """One version's rows, read with its stored schema (no inference
         job; no parquet files read as a zero-partition empty frame).  A
@@ -337,9 +342,7 @@ class ManagedTable:
         the ``parts`` filter, so Spark turns that filter into a
         PartitionFilters entry and skips the other directories."""
         path = self._path(version)
-        with open(os.path.join(path, _SCHEMA)) as fh:
-            schema = StructType.fromJson(json.load(fh))
-        out = self.spark.read.schema(schema).parquet(path)
+        out = self.spark.read.schema(self._schema(version)).parquet(path)
         if self.partition_spec is None:
             return out
         if parts is not None:
@@ -460,8 +463,9 @@ class ManagedTable:
         rows = self._fill_auto_increment(rows)
         rows = self._apply_generated(rows)
         self._check_domains(rows)
+        keys = list(self.key_cols)
         survivors = self.df().join(
-            rows.select(*self.key_cols).distinct(), on=self.key_cols, how="left_anti"
+            rows.select(*keys).distinct(), on=keys, how="left_anti"
         )
         self.write(survivors.unionByName(rows))
 
@@ -508,7 +512,7 @@ class ManagedTable:
         plan shape at 100 TB."""
         cur = self.df()
         cols = cur.columns
-        src = source.dropDuplicates(self.key_cols)
+        src = source.dropDuplicates(list(self.key_cols))
         # Align the source to the target schema (absent columns → NULL).
         aligned = src
         for f in cur.schema.fields:

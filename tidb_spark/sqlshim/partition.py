@@ -27,7 +27,7 @@ LIST → only a partition explicitly listing NULL.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, replace
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -86,18 +86,19 @@ def _lt(a, b) -> bool:
     return a < b
 
 
-@dataclass
+@dataclass(frozen=True)
 class PartitionSpec:
-    """One table's partitioning clause.
+    """One table's partitioning clause.  Immutable: ADD and DROP PARTITION
+    build a new spec (:meth:`added`, :meth:`without`).
 
     ``bounds``: RANGE — ascending exclusive upper-bound literal SQL strings
-    (last may be ``MAXVALUE``); LIST — one list of literal SQL strings per
+    (last may be ``MAXVALUE``); LIST — one tuple of literal SQL strings per
     partition; HASH — unused."""
 
     method: str  # RANGE | LIST | HASH
     expr: str  # partition expression (SQL over base columns)
-    names: list[str] = field(default_factory=list)
-    bounds: list = field(default_factory=list)
+    names: tuple[str, ...] = ()
+    bounds: tuple = ()
     num: int = 0  # HASH partition count
 
     # -- label computation (write path) ------------------------------------
@@ -163,6 +164,49 @@ class PartitionSpec:
         if self.method == "HASH":
             return [f"p{i}" for i in range(self.num)]
         return list(self.names)
+
+    # -- DDL: ADD / DROP PARTITION (ddl/partition.go) -----------------------
+
+    def added(self, defs: str) -> PartitionSpec:
+        """This spec with the RANGE/LIST ``PARTITION …`` definitions of
+        ``defs`` appended: RANGE bounds must strictly increase, LIST values
+        and partition names must be unique."""
+        names, bounds = list(self.names), list(self.bounds)
+        for item in lex.split_args(defs):
+            rx = _RANGE_PART_RE if self.method == "RANGE" else _LIST_PART_RE
+            pm = rx.match(item)
+            if pm is None:
+                raise ValueError(
+                    f"unsupported {self.method} partition def: {item!r}"
+                )
+            if self.method == "RANGE":
+                bound = "MAXVALUE" if pm.group("maxval") else pm.group("bound")
+                if bounds and not _lt(
+                    _parse_literal(str(bounds[-1])), _parse_literal(bound)
+                ):
+                    raise ValueError(
+                        "VALUES LESS THAN value must be strictly increasing "
+                        "for each partition"
+                    )
+            else:
+                bound = tuple(lex.split_args(pm.group("vals")))
+                seen = {_parse_literal(str(v)) for vs in bounds for v in vs}
+                dup = [v for v in bound if _parse_literal(str(v)) in seen]
+                if dup:
+                    raise ValueError(
+                        f"Multiple definition of same constant: {dup[0]}"
+                    )
+            names.append(pm.group("name"))
+            bounds.append(bound)
+        if len(set(names)) != len(names):
+            raise ValueError("Duplicate partition name")
+        return replace(self, names=tuple(names), bounds=tuple(bounds))
+
+    def without(self, dropped: list[str]) -> PartitionSpec:
+        """This spec without the named RANGE/LIST partitions."""
+        kept = [i for i, n in enumerate(self.names) if n not in dropped]
+        names, bounds = (tuple(xs[i] for i in kept) for xs in (self.names, self.bounds))
+        return replace(self, names=names, bounds=bounds)
 
     # -- static pruning (rule_partition_processor analogue) ----------------
 
@@ -313,36 +357,7 @@ def parse_spec(text: str) -> PartitionSpec:
     body = m.group("parts")
     if not body:
         raise ValueError(f"PARTITION BY {method} requires a partition list")
-    spec = PartitionSpec(method=method, expr=expr)
-    for item in lex.split_args(body):
-        item = item.strip()
-        if method == "RANGE":
-            pm = _RANGE_PART_RE.match(item)
-            if pm is None:
-                raise ValueError(f"unsupported RANGE partition def: {item!r}")
-            bound = "MAXVALUE" if pm.group("maxval") else pm.group("bound")
-            if spec.bounds:
-                prev, cur = (
-                    _parse_literal(str(spec.bounds[-1])),
-                    _parse_literal(bound),
-                )
-                if not _lt(prev, cur):
-                    # ddl/partition.go: bounds must strictly increase.
-                    raise ValueError(
-                        "VALUES LESS THAN value must be strictly increasing "
-                        "for each partition"
-                    )
-            spec.names.append(pm.group("name"))
-            spec.bounds.append(bound)
-        else:
-            pm = _LIST_PART_RE.match(item)
-            if pm is None:
-                raise ValueError(f"unsupported LIST partition def: {item!r}")
-            spec.names.append(pm.group("name"))
-            spec.bounds.append([v.strip() for v in lex.split_args(pm.group("vals"))])
-    if len(set(spec.names)) != len(spec.names):
-        raise ValueError("Duplicate partition name")
-    return spec
+    return PartitionSpec(method=method, expr=expr).added(body)
 
 
 def split_partition_clause(sql: str) -> tuple[str, str | None]:
